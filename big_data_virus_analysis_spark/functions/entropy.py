@@ -28,9 +28,13 @@ def entropy2(x: Column, y: Column) -> Column:
 
     The reference does not guard p∈{0,1} and produces NaN, later patched
     by replaceNaN; we compute the guarded value directly and use
-    :func:`nan_to_zero` only where reference parity demands it.
+    :func:`nan_to_zero` only where reference parity demands it.  An
+    empty split (``y = 0``, e.g. a token present in every document)
+    divides with ``try_divide``: ANSI mode would raise DIVIDE_BY_ZERO,
+    and the NULL quotient falls to 0.0 in ``_plogp2`` — the value the
+    reference's NaN → 0 gives.
     """
-    p = x.cast("double") / y.cast("double")
+    p = F.try_divide(x.cast("double"), y.cast("double"))
     return _plogp2(p) + _plogp2(F.lit(1.0) - p)
 
 

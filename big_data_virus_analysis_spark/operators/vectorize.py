@@ -15,7 +15,7 @@ document — SURVEY.md §4.2.1):
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
@@ -51,23 +51,26 @@ def doc_vectors(doc_tokens: DataFrame, vocab: DataFrame, positive_cls: str = "po
     )
 
 
+def libsvm_line() -> Column:
+    """The LIBSVM line of a ``(label, indices)`` row: ``"<label> <idx>:1 ..."``
+    with the 1-based, ascending indices, matching the reference's file
+    format (FeatureSelectionCloud.scala:513-517).  Pure column
+    expressions — ``transform`` + ``concat_ws``, no UDF, no driver hop."""
+    return F.concat_ws(
+        " ",
+        F.col("label").cast("string"),
+        F.concat_ws(
+            " ", F.transform("indices", lambda i: F.concat(i.cast("string"), F.lit(":1")))
+        ),
+    )
+
+
 def libsvm_text(vectors: DataFrame) -> DataFrame:
     """Render ``(doc, label, indices)`` as LIBSVM lines.
 
-    Output: ``(doc, line: string)`` — ``"<label> <idx>:1 ..."`` with
-    1-based indices, matching the reference's file format
-    (FeatureSelectionCloud.scala:513-517).
+    Output: ``(doc, line: string)`` — see :func:`libsvm_line`.
     """
-    return vectors.select(
-        "doc",
-        F.concat_ws(
-            " ",
-            F.col("label").cast("string"),
-            F.concat_ws(
-                " ", F.transform("indices", lambda i: F.concat(i.cast("string"), F.lit(":1")))
-            ),
-        ).alias("line"),
-    )
+    return vectors.select("doc", libsvm_line().alias("line"))
 
 
 def dense_feature_array(vectors: DataFrame, num_features: int) -> DataFrame:

@@ -19,12 +19,21 @@ order-insensitive value-hash comparison deterministic:
   add ``+ 0.0`` after the round on BOTH sides — IEEE −0.0 and +0.0
   hash-serialize differently, and engines may disagree on which one a
   near-zero rounds to (see `standardize_embeddings`, covariance cells).
+
+Registration: every entry joins ``CATALOG`` through :func:`_register`,
+which refuses a name that is already taken.  Entries defined here are
+registered as inline dicts; a *pack* is a module of this package that
+exports ``SPECS`` (name → QuerySpec) and is listed by name in one of the
+``_register((...))`` pack tuples below — that list is the pack table,
+and its order is the registration order (``_finalize_order`` then puts
+the driver's first-50 window in front).
 """
 
 from __future__ import annotations
 
 from collections.abc import Callable
 from dataclasses import dataclass
+from importlib import import_module
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -70,6 +79,19 @@ def _info_gain_sql(p: str, t: str, pg: str, tg: str) -> str:
 
 def _nan_to_zero_sql(x: str) -> str:
     return f"(CASE WHEN isnan({x}) THEN 0.0 ELSE {x} END)"
+
+
+#: Word-trigram CTEs over `documents` — ``toks(doc_id, tokens)`` and
+#: ``grams(doc_id, gram)``, one row per space-joined trigram occurrence —
+#: the oracle side of ``operators/dedup.py::word_ngrams(n=3)``.  Used as
+#: ``WITH {_TRIGRAM_CTES}, dg AS (...)``.
+_TRIGRAM_CTES = """toks AS (
+  SELECT doc_id, string_split(text, ' ') AS tokens FROM documents
+), grams AS (
+  SELECT doc_id, unnest(list_transform(generate_series(1, len(tokens) - 2),
+         i -> array_to_string(list_slice(tokens, i, i + 2), ' '))) AS gram
+  FROM toks WHERE len(tokens) >= 3
+)"""
 
 
 # --------------------------------------------------------------------------
@@ -561,6 +583,23 @@ CATALOG: dict[str, QuerySpec] = {
 }
 
 
+def _register(entries: dict[str, QuerySpec] | tuple[str, ...]) -> None:
+    """Merge entries into CATALOG, refusing silent overwrites — an entry
+    colliding with an existing query name is a bug (it would shadow an
+    already-verified entry), not an update.
+
+    ``entries`` is a dict of specs, or a tuple of pack names: modules of
+    this package that export ``SPECS``, imported and merged in order."""
+    if isinstance(entries, tuple):
+        for pack in entries:
+            _register(import_module(f"{__package__}.{pack}").SPECS)
+        return
+    dup = sorted(set(entries) & set(CATALOG))
+    if dup:
+        raise ValueError(f"catalog entries collide with existing names: {dup}")
+    CATALOG.update(entries)
+
+
 def _self_cleaning(fn: Callable[[SparkSession, str], DataFrame]):
     """Wrap a catalog query so BUILDING it releases the tracked caches of
     previously-built queries (operators/caching.py): a sequential catalog
@@ -634,14 +673,8 @@ def _q_jaccard_prefix_filtered(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_SQL_DEDUP_NGRAM_JACCARD = """
-WITH toks AS (
-  SELECT doc_id, string_split(text, ' ') AS tokens FROM documents
-), grams AS (
-  SELECT doc_id, unnest(list_transform(generate_series(1, len(tokens) - 2),
-         i -> array_to_string(list_slice(tokens, i, i + 2), ' '))) AS gram
-  FROM toks WHERE len(tokens) >= 3
-), dg AS (
+_SQL_DEDUP_NGRAM_JACCARD = f"""
+WITH {_TRIGRAM_CTES}, dg AS (
   SELECT DISTINCT doc_id, gram FROM grams
 ), sizes AS (
   SELECT doc_id, count(*) AS sz FROM dg GROUP BY doc_id
@@ -658,14 +691,8 @@ JOIN sizes sb ON doc_b = sb.doc_id
 WHERE round(CAST(inter AS DOUBLE) / CAST(sa.sz + sb.sz - inter AS DOUBLE), 6) >= 0.8
 """
 
-_SQL_SHINGLE_IDS = """
-WITH toks AS (
-  SELECT doc_id, string_split(text, ' ') AS tokens FROM documents
-), grams AS (
-  SELECT doc_id, unnest(list_transform(generate_series(1, len(tokens) - 2),
-         i -> array_to_string(list_slice(tokens, i, i + 2), ' '))) AS gram
-  FROM toks WHERE len(tokens) >= 3
-), dg AS (
+_SQL_SHINGLE_IDS = f"""
+WITH {_TRIGRAM_CTES}, dg AS (
   SELECT DISTINCT doc_id, gram FROM grams
 ), ids AS (
   -- tid = md5-prefix BIGINT (bit-identical to Spark's conv(substring(md5)..));
@@ -821,7 +848,7 @@ FROM sims a JOIN sims b ON a.doc_id < b.doc_id
 WHERE bit_count(xor(a.simhash, b.simhash)) <= 6
 """
 
-CATALOG.update(
+_register(
     {
         "dedup_exact": QuerySpec(
             _q_dedup_exact, _SQL_DEDUP_EXACT, "exact dedup by md5 content hash"
@@ -1017,7 +1044,7 @@ FROM votes
 QUALIFY row_number() OVER (PARTITION BY query_id ORDER BY votes DESC, label ASC) = 1
 """
 
-CATALOG.update(
+_register(
     {
         "cosine_topk_bruteforce": QuerySpec(
             _q_cosine_topk, _SQL_COSINE_TOPK, "brute-force cosine top-k (broadcast queries)"
@@ -1178,7 +1205,7 @@ SELECT doc_id, count(*) AS n_fp, CAST(sum(wmin) AS BIGINT) AS fp_checksum
 FROM mins GROUP BY doc_id
 """
 
-CATALOG.update(
+_register(
     {
         "token_stats": QuerySpec(
             _q_token_stats, _SQL_TOKEN_STATS, "whitespace + regex token counting per doc"
@@ -1284,7 +1311,7 @@ FROM documents d LEFT JOIN agg a USING (doc_id)
 """
 
 
-CATALOG.update(
+_register(
     {
         "payload_metadata_stats": QuerySpec(
             _q_payload_metadata_stats,
@@ -1313,7 +1340,11 @@ CATALOG.update(
 # rows-only here — DuckDB views cover only the synthetic tables)
 # --------------------------------------------------------------------------
 
-from ..sources.api_logs import api_log_tokens, read_api_logs  # noqa: E402
+from ..sources.api_logs import (  # noqa: E402
+    api_log_doc_classes,
+    api_log_tokens,
+    read_api_logs,
+)
 
 _REF_CLEAN = "/root/reference/api_logs/clean_LOGS_CONVERTED"
 _REF_VIRUS = "/root/reference/api_logs/virus_LOGS_CONVERTED"
@@ -1325,10 +1356,7 @@ def _q_api_log_info_gain(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast totals, window top-k (FeatureSelectionCloud.scala:376-442).
     """
     raw = read_api_logs(spark, _REF_CLEAN, _REF_VIRUS)
-    doc_cls = raw.select(
-        F.concat_ws("/", "class", "file").alias("doc"),
-        F.when(F.col("class") == "virus", F.lit("pos")).otherwise(F.lit("neg")).alias("cls"),
-    ).distinct()
+    doc_cls = api_log_doc_classes(raw)
     return info_gain_ranking(api_log_tokens(raw), k=2000, doc_classes=doc_cls).select(
         "token", "pos_df", "neg_df", "info_gain", "rank"
     )
@@ -1342,10 +1370,7 @@ def _q_api_log_byte_info_gain(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..sources.api_logs import api_log_byte_tokens
 
     raw = read_api_logs(spark, _REF_CLEAN, _REF_VIRUS)
-    doc_cls = raw.select(
-        F.concat_ws("/", "class", "file").alias("doc"),
-        F.when(F.col("class") == "virus", F.lit("pos")).otherwise(F.lit("neg")).alias("cls"),
-    ).distinct()
+    doc_cls = api_log_doc_classes(raw)
     return info_gain_ranking(
         api_log_byte_tokens(raw), k=100, doc_classes=doc_cls
     ).select("token", "pos_df", "neg_df", "info_gain", "rank")
@@ -1431,7 +1456,7 @@ _SQL_API_LOG_BYTE_INFO_GAIN = _sql_api_log_ig(
 )
 
 
-CATALOG.update(
+_register(
     {
         "api_log_info_gain": QuerySpec(
             _q_api_log_info_gain,
@@ -1529,7 +1554,7 @@ FROM events
 GROUP BY user_id
 """
 
-CATALOG.update(
+_register(
     {
         "sliding_window_events": QuerySpec(
             _q_sliding_window_events,
@@ -1815,7 +1840,7 @@ FROM clusters
 """
 
 
-CATALOG.update(
+_register(
     {
         "vectorize_doc_indices": QuerySpec(
             _q_vectorize_doc_indices,
@@ -1899,12 +1924,7 @@ def reference_pipeline_samples(spark: SparkSession) -> DataFrame:
     builders; the chain is pinned end-to-end by a committed self-golden
     hash in tests/test_reference_parity.py."""
     raw = read_api_logs(spark, _REF_CLEAN, _REF_VIRUS)
-    doc_cls = raw.select(
-        F.concat_ws("/", "class", "file").alias("doc"),
-        F.when(F.col("class") == "virus", F.lit("pos"))
-        .otherwise(F.lit("neg"))
-        .alias("cls"),
-    ).distinct()
+    doc_cls = api_log_doc_classes(raw)
     toks = api_log_tokens(raw)
     ranked = info_gain_ranking(toks, k=2000, doc_classes=doc_cls).transform(
         tracked_cache
@@ -1929,7 +1949,7 @@ def _q_reference_pipeline_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     return report_lines(reference_pipeline_samples(spark))
 
 
-CATALOG.update(
+_register(
     {
         "reference_pipeline_report": QuerySpec(
             _q_reference_pipeline_report,
@@ -1953,12 +1973,7 @@ def _q_api_log_feature_job_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     Token explode is tracked_cache'd — it feeds both the vocab ranking
     and the vectorize probe."""
     raw = read_api_logs(spark, _REF_CLEAN, _REF_VIRUS)
-    doc_cls = raw.select(
-        F.concat_ws("/", "class", "file").alias("doc"),
-        F.when(F.col("class") == "virus", F.lit("pos"))
-        .otherwise(F.lit("neg"))
-        .alias("cls"),
-    ).distinct()
+    doc_cls = api_log_doc_classes(raw)
     toks = api_log_tokens(raw).transform(tracked_cache)
     vocab = info_gain_ranking(toks, k=2000, doc_classes=doc_cls).select(
         "token", "rank"
@@ -2008,7 +2023,7 @@ GROUP BY d.doc
 """
 
 
-CATALOG.update(
+_register(
     {
         "api_log_feature_job_e2e": QuerySpec(
             _q_api_log_feature_job_e2e,
@@ -2115,7 +2130,7 @@ GROUP BY GROUPING SETS ((user_id), (event_type), ())
 """
 
 
-CATALOG.update(
+_register(
     {
         "rollup_pricing": QuerySpec(
             _q_rollup_pricing,
@@ -2198,7 +2213,7 @@ GROUP BY o_orderpriority
 """
 
 
-CATALOG.update(
+_register(
     {
         "stats_price_summary": QuerySpec(
             _q_stats_price_summary,
@@ -2333,7 +2348,7 @@ WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
 """
 
 
-CATALOG.update(
+_register(
     {
         "asof_last_purchase": QuerySpec(
             _q_asof_last_purchase,
@@ -2403,7 +2418,7 @@ GROUP BY err_id
 """
 
 
-CATALOG.update(
+_register(
     {
         "interval_join_error_clicks": QuerySpec(
             _q_interval_join_error_clicks,
@@ -2440,7 +2455,7 @@ def _q_approx_percentile_prices(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-CATALOG.update(
+_register(
     {
         "approx_distinct_users": QuerySpec(
             _q_approx_distinct_users,
@@ -2603,7 +2618,7 @@ FROM sims
 QUALIFY rank <= 5
 """
 
-CATALOG.update(
+_register(
     {
         "tfidf_top_terms": QuerySpec(
             _q_tfidf_top_terms,
@@ -2729,7 +2744,7 @@ ORDER BY revenue DESC, l_orderkey ASC
 LIMIT 10
 """
 
-CATALOG.update(
+_register(
     {
         "segment_activity": QuerySpec(
             _q_segment_activity,
@@ -2778,7 +2793,7 @@ FROM (
 WHERE o_totalprice > cust_avg
 """
 
-CATALOG.update(
+_register(
     {
         "orders_above_cust_avg": QuerySpec(
             _q_orders_above_cust_avg,
@@ -2850,7 +2865,7 @@ WHERE r_name = 'ASIA'
 GROUP BY n_name
 """
 
-CATALOG.update(
+_register(
     {
         "local_supplier_volume": QuerySpec(
             _q_local_supplier_volume,
@@ -2902,7 +2917,7 @@ JOIN orders   ON l_orderkey = o_orderkey
 JOIN customer ON o_custkey = c_custkey
 """
 
-CATALOG.update(
+_register(
     {
         "large_quantity_orders": QuerySpec(
             _q_large_quantity_orders,
@@ -2943,7 +2958,7 @@ WHERE doc_id NOT IN (SELECT doc_id FROM assign WHERE doc_id <> cluster_id)
 """
 )
 
-CATALOG.update(
+_register(
     {
         "dedup_survivors": QuerySpec(
             _q_dedup_survivors,
@@ -3001,7 +3016,7 @@ SELECT user_id, total_value,
 FROM per_user
 """
 
-CATALOG.update(
+_register(
     {
         "user_value_deciles": QuerySpec(
             _q_user_value_deciles,
@@ -3074,7 +3089,7 @@ UNION ALL
 SELECT 3 AS stage, 'purchase' AS step_name, count(*) AS n_users FROM s3
 """
 
-CATALOG.update(
+_register(
     {
         "props_k_stats": QuerySpec(
             _q_props_k_stats,
@@ -3127,7 +3142,7 @@ FROM byweek JOIN first USING (user_id)
 GROUP BY 1, 2
 """
 
-CATALOG.update(
+_register(
     {
         "cohort_retention": QuerySpec(
             _q_cohort_retention,
@@ -3180,7 +3195,7 @@ def _q_stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-CATALOG.update(
+_register(
     {
         "price_histogram": QuerySpec(
             _q_price_histogram,
@@ -3229,7 +3244,7 @@ FROM (
 GROUP BY measure
 """
 
-CATALOG.update(
+_register(
     {
         "unpivot_measures": QuerySpec(
             _q_unpivot_measures,
@@ -3255,7 +3270,7 @@ def _q_heavy_hitter_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-CATALOG.update(
+_register(
     {
         "heavy_hitter_users": QuerySpec(
             _q_heavy_hitter_users,
@@ -3295,7 +3310,7 @@ SELECT doc_id,
 FROM documents
 """
 
-CATALOG.update(
+_register(
     {
         "pii_scrub": QuerySpec(
             _q_pii_scrub,
@@ -3327,7 +3342,7 @@ JOIN (SELECT * FROM events WHERE event_type = 'click') c
  AND c.ts <= v.ts + INTERVAL 10 MINUTE
 """
 
-CATALOG.update(
+_register(
     {
         "clicks_after_views": QuerySpec(
             _q_clicks_after_views,
@@ -3628,7 +3643,7 @@ FROM orders b FULL OUTER JOIN chg c ON b.o_orderkey = c.o_orderkey
 """
 
 
-CATALOG.update(
+_register(
     {
         "topk_parts_per_brand": QuerySpec(
             _q_topk_parts_per_brand,
@@ -3847,7 +3862,7 @@ LIMIT 100
 """
 
 
-CATALOG.update(
+_register(
     {
         "promo_revenue_by_month": QuerySpec(
             _q_promo_revenue_by_month,
@@ -4072,7 +4087,7 @@ JOIN e e3 ON e3.src = e1.src AND e3.dst = e2.dst
 """
 
 
-CATALOG.update(
+_register(
     {
         "copurchase_pagerank": QuerySpec(
             _q_copurchase_pagerank,
@@ -4114,157 +4129,12 @@ CATALOG.update(
 )
 
 
-# --------------------------------------------------------------------------
-# Decision-support pack (classic TPC-H shapes; plans/decision_support.py)
-# --------------------------------------------------------------------------
-
-from .decision_support import SPECS as _DECISION_SUPPORT_SPECS  # noqa: E402
-
-CATALOG.update(_DECISION_SUPPORT_SPECS)
-
-
-# --------------------------------------------------------------------------
-# Pipeline-operations pack (everyday data-engineering ops; plans/pipeline_ops.py)
-# --------------------------------------------------------------------------
-
-from .pipeline_ops import SPECS as _PIPELINE_OPS_SPECS  # noqa: E402
-
-CATALOG.update(_PIPELINE_OPS_SPECS)
-
-
-# --------------------------------------------------------------------------
-# Statistics pack (order stats, argmax, corr/OLS, mode, Benford;
-# plans/statistics.py)
-# --------------------------------------------------------------------------
-
-from .statistics import SPECS as _STATISTICS_SPECS  # noqa: E402
-
-CATALOG.update(_STATISTICS_SPECS)
-
-
-# --------------------------------------------------------------------------
-# Outliers / robust-stats pack (z-score, MAD, repetition, attribution;
-# plans/outliers.py)
-# --------------------------------------------------------------------------
-
-from .outliers import SPECS as _OUTLIERS_SPECS  # noqa: E402
-
-CATALOG.update(_OUTLIERS_SPECS)
-
-
-# --------------------------------------------------------------------------
-# Time-series / BI pack (WAU, MoM growth, Pareto; plans/timeseries_bi.py)
-# --------------------------------------------------------------------------
-
-from .timeseries_bi import SPECS as _TIMESERIES_BI_SPECS  # noqa: E402
-
-CATALOG.update(_TIMESERIES_BI_SPECS)
-
-
-# --------------------------------------------------------------------------
-# Sequence & corpus-statistics pack (Markov, paths, balance, surprisal;
-# plans/sequences.py)
-# --------------------------------------------------------------------------
-
-from .sequences import SPECS as _SEQUENCES_SPECS  # noqa: E402
-
-CATALOG.update(_SEQUENCES_SPECS)
-
-
-# --------------------------------------------------------------------------
-# Gaps-and-islands pack (streaks, SCD2, conversion latency;
-# plans/islands.py)
-# --------------------------------------------------------------------------
-
-from .islands import SPECS as _ISLANDS_SPECS  # noqa: E402
-
-CATALOG.update(_ISLANDS_SPECS)
-
-
-# --------------------------------------------------------------------------
-# Window-function completeness pack (cume_dist, nth_value;
-# plans/window_funcs.py)
-# --------------------------------------------------------------------------
-
-from .window_funcs import SPECS as _WINDOW_FUNCS_SPECS  # noqa: E402
-
-CATALOG.update(_WINDOW_FUNCS_SPECS)
-
-
-# --------------------------------------------------------------------------
-# Integrity & incremental-maintenance pack (checksums, rollup merge;
-# plans/integrity.py)
-# --------------------------------------------------------------------------
-
-from .integrity import SPECS as _INTEGRITY_SPECS  # noqa: E402
-
-CATALOG.update(_INTEGRITY_SPECS)
-
-
-# --------------------------------------------------------------------------
-# Profiling extensions (systematic sample, equi-depth histogram, skew
-# profile; plans/profiling_ext.py)
-# --------------------------------------------------------------------------
-
-from .profiling_ext import SPECS as _PROFILING_EXT_SPECS  # noqa: E402
-
-CATALOG.update(_PROFILING_EXT_SPECS)
-
-
-# --------------------------------------------------------------------------
-# Corpus-curation funnel (plans/curation.py)
-# --------------------------------------------------------------------------
-
-from .curation import SPECS as _CURATION_SPECS  # noqa: E402
-
-CATALOG.update(_CURATION_SPECS)
-
-
-# --------------------------------------------------------------------------
-# Drift & statistical-testing pack (chi-square, PSI, KS; plans/drift.py)
-# --------------------------------------------------------------------------
-
-from .drift import SPECS as _DRIFT_SPECS  # noqa: E402
-
-CATALOG.update(_DRIFT_SPECS)
-
-
-# --------------------------------------------------------------------------
-# Survival-analysis pack (Kaplan–Meier; plans/survival.py)
-# --------------------------------------------------------------------------
-
-from .survival import SPECS as _SURVIVAL_SPECS  # noqa: E402
-
-CATALOG.update(_SURVIVAL_SPECS)
-
-
-# --------------------------------------------------------------------------
-# Retrieval pack (BM25; plans/retrieval.py)
-# --------------------------------------------------------------------------
-
-from .retrieval import SPECS as _RETRIEVAL_SPECS  # noqa: E402
-
-CATALOG.update(_RETRIEVAL_SPECS)
-
-
-# --------------------------------------------------------------------------
-# Training-data hygiene pack (decontamination + boilerplate;
-# plans/contamination.py)
-# --------------------------------------------------------------------------
-
-from .contamination import SPECS as _CONTAMINATION_SPECS  # noqa: E402
-
-CATALOG.update(_CONTAMINATION_SPECS)
-
-
-# --------------------------------------------------------------------------
-# Batch-assembly pack (sequence packing via distributed prefix sum,
-# weighted sampling, leakage-safe splits; plans/packing.py)
-# --------------------------------------------------------------------------
-
-from .packing import SPECS as _PACKING_SPECS  # noqa: E402
-
-CATALOG.update(_PACKING_SPECS)
+_register((
+    "decision_support", "pipeline_ops", "statistics", "outliers",
+    "timeseries_bi", "sequences", "islands", "window_funcs", "integrity",
+    "profiling_ext", "curation", "drift", "survival", "retrieval",
+    "contamination", "packing",
+))
 
 
 # --------------------------------------------------------------------------
@@ -4291,7 +4161,7 @@ SELECT doc_id,
 FROM documents
 """
 
-CATALOG.update(
+_register(
     {
         "resize_payload_sizes": QuerySpec(
             _q_resize_payload_sizes,
@@ -4303,24 +4173,7 @@ CATALOG.update(
 )
 
 
-# --------------------------------------------------------------------------
-# RAG pack (chunking, hybrid RRF fusion, nearest-centroid assignment;
-# plans/rag.py)
-# --------------------------------------------------------------------------
-
-from .rag import SPECS as _RAG_SPECS  # noqa: E402
-
-CATALOG.update(_RAG_SPECS)
-
-
-# --------------------------------------------------------------------------
-# Corpus-filtering pack (duplicated spans, bigram-LM perplexity;
-# plans/corpus_filters.py)
-# --------------------------------------------------------------------------
-
-from .corpus_filters import SPECS as _CORPUS_FILTERS_SPECS  # noqa: E402
-
-CATALOG.update(_CORPUS_FILTERS_SPECS)
+_register(("rag", "corpus_filters"))
 
 
 # --------------------------------------------------------------------------
@@ -4398,7 +4251,7 @@ FROM ex
 WHERE cum_before < q * n AND q * n <= cum
 """
 
-CATALOG.update(
+_register(
     {
         "salted_dim_join_rollup": QuerySpec(
             _q_salted_dim_join_rollup,
@@ -4418,40 +4271,7 @@ CATALOG.update(
 )
 
 
-# --------------------------------------------------------------------------
-# Data-mixture & training-order pack (plans/mixtures.py)
-# --------------------------------------------------------------------------
-
-from .mixtures import SPECS as _MIXTURES_SPECS  # noqa: E402
-
-CATALOG.update(_MIXTURES_SPECS)
-
-
-# --------------------------------------------------------------------------
-# SemDeDup pack (cluster-scoped semantic dedup; plans/semantic.py)
-# --------------------------------------------------------------------------
-
-from .semantic import SPECS as _SEMANTIC_SPECS  # noqa: E402
-
-CATALOG.update(_SEMANTIC_SPECS)
-
-
-# --------------------------------------------------------------------------
-# Incremental-ingest dedup pack (plans/ingestion.py)
-# --------------------------------------------------------------------------
-
-from .ingestion import SPECS as _INGESTION_SPECS  # noqa: E402
-
-CATALOG.update(_INGESTION_SPECS)
-
-
-# --------------------------------------------------------------------------
-# Gopher quality-rules pack (plans/gopher.py)
-# --------------------------------------------------------------------------
-
-from .gopher import SPECS as _GOPHER_SPECS  # noqa: E402
-
-CATALOG.update(_GOPHER_SPECS)
+_register(("mixtures", "semantic", "ingestion", "gopher"))
 
 
 # --------------------------------------------------------------------------
@@ -4482,7 +4302,7 @@ def _q_bpe_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     return bpe_segment(docs, merges)
 
 
-CATALOG.update(
+_register(
     {
         "bpe_merge_table": QuerySpec(
             _q_bpe_merge_table,
@@ -4567,7 +4387,7 @@ FROM sims
 QUALIFY rank <= 5
 """
 
-CATALOG.update(
+_register(
     {
         "hard_negative_mining": QuerySpec(
             _q_hard_negative_mining,
@@ -4601,7 +4421,7 @@ _SQL_FINGERPRINT_OVERLAP_PAIRS = SQL_FP_MINS_BODY + """
 SELECT doc_a, doc_b, n_shared FROM pairs WHERE n_shared >= 50
 """
 
-CATALOG.update(
+_register(
     {
         "fingerprint_overlap_pairs": QuerySpec(
             _q_fingerprint_overlap_pairs,
@@ -4613,13 +4433,7 @@ CATALOG.update(
 )
 
 
-# --------------------------------------------------------------------------
-# Corpus datasheet (plans/datasheet.py)
-# --------------------------------------------------------------------------
-
-from .datasheet import SPECS as _DATASHEET_SPECS  # noqa: E402
-
-CATALOG.update(_DATASHEET_SPECS)
+_register(("datasheet",))
 
 
 # --------------------------------------------------------------------------
@@ -4671,7 +4485,7 @@ SELECT true_lang, pred_lang, n,
 FROM cells
 """
 
-CATALOG.update(
+_register(
     {
         "language_confusion": QuerySpec(
             _q_language_confusion,
@@ -4683,568 +4497,43 @@ CATALOG.update(
 )
 
 
-# --------------------------------------------------------------------------
-# Exact-oracle ML twins (Lloyd step, exact AUC, fixed-quantizer IVF;
-# plans/ml_exact.py)
-# --------------------------------------------------------------------------
-
-from .ml_exact import SPECS as _ML_EXACT_SPECS  # noqa: E402
-
-CATALOG.update(_ML_EXACT_SPECS)
-
-
-# --------------------------------------------------------------------------
-# Round-4 breadth pack (full-outer, ACF, exact count-min sketch;
-# plans/round4_ops.py)
-# --------------------------------------------------------------------------
-
-def _register_pack(specs) -> None:
-    """Merge a pack into CATALOG, refusing silent overwrites — a pack
-    entry colliding with an existing query name is a bug (it would
-    shadow an already-verified entry), not an update."""
-    dup = sorted(set(specs) & set(CATALOG))
-    if dup:
-        raise ValueError(f"catalog pack collides with existing entries: {dup}")
-    CATALOG.update(specs)
-
-
-from .round4_ops import SPECS as _ROUND4_OPS_SPECS  # noqa: E402
-
-_register_pack(_ROUND4_OPS_SPECS)
-
-
-# --------------------------------------------------------------------------
-# Round-5 pack (composed dedup canary, deterministic stratified sample,
-# sketch error-bound audits, Python UDTF; plans/round5_ops.py)
-# --------------------------------------------------------------------------
-
-from .round5_ops import SPECS as _ROUND5_OPS_SPECS  # noqa: E402
-
-_register_pack(_ROUND5_OPS_SPECS)
-
-from .round5_ext import SPECS as _ROUND5_EXT_SPECS  # noqa: E402
-
-_register_pack(_ROUND5_EXT_SPECS)
-
-from .round5_more import SPECS as _ROUND5_MORE_SPECS  # noqa: E402
-
-_register_pack(_ROUND5_MORE_SPECS)
-
-from .round5_pq import SPECS as _ROUND5_PQ_SPECS  # noqa: E402
-
-_register_pack(_ROUND5_PQ_SPECS)
-
-from .round5_gov import SPECS as _ROUND5_GOV_SPECS  # noqa: E402
-
-_register_pack(_ROUND5_GOV_SPECS)
-
-from .round5_train import SPECS as _ROUND5_TRAIN_SPECS  # noqa: E402
-
-_register_pack(_ROUND5_TRAIN_SPECS)
-
-from .round5_cdc import SPECS as _ROUND5_CDC_SPECS  # noqa: E402
-
-_register_pack(_ROUND5_CDC_SPECS)
-
-from .round5_ml3 import SPECS as _ROUND5_ML3_SPECS  # noqa: E402
-
-_register_pack(_ROUND5_ML3_SPECS)
-
-from .round5_layout import SPECS as _ROUND5_LAYOUT_SPECS  # noqa: E402
-
-_register_pack(_ROUND5_LAYOUT_SPECS)
-
-from .round5_ts3 import SPECS as _ROUND5_TS3_SPECS  # noqa: E402
-
-_register_pack(_ROUND5_TS3_SPECS)
-
-from .round5_feat import SPECS as _ROUND5_FEAT_SPECS  # noqa: E402
-
-_register_pack(_ROUND5_FEAT_SPECS)
-
-from .round5_stats2 import SPECS as _ROUND5_STATS2_SPECS  # noqa: E402
-
-_register_pack(_ROUND5_STATS2_SPECS)
-
-from .round5_contain import SPECS as _ROUND5_CONTAIN_SPECS  # noqa: E402
-
-_register_pack(_ROUND5_CONTAIN_SPECS)
-
-from .round5_ivm import SPECS as _ROUND5_IVM_SPECS  # noqa: E402
-
-_register_pack(_ROUND5_IVM_SPECS)
-
-from .round5_sketch2 import SPECS as _ROUND5_SKETCH2_SPECS  # noqa: E402
-
-_register_pack(_ROUND5_SKETCH2_SPECS)
-
-from .round5_text3 import SPECS as _ROUND5_TEXT3_SPECS  # noqa: E402
-
-_register_pack(_ROUND5_TEXT3_SPECS)
-
-from .round6_suffix import SPECS as _ROUND6_SUFFIX_SPECS  # noqa: E402
-
-_register_pack(_ROUND6_SUFFIX_SPECS)
-
-from .round6_planner import SPECS as _ROUND6_PLANNER_SPECS  # noqa: E402
-
-_register_pack(_ROUND6_PLANNER_SPECS)
-
-from .round6_ops import SPECS as _ROUND6_OPS_SPECS  # noqa: E402
-
-_register_pack(_ROUND6_OPS_SPECS)
-
-from .round6_ml import SPECS as _ROUND6_ML_SPECS  # noqa: E402
-
-_register_pack(_ROUND6_ML_SPECS)
-
-from .round6_more import SPECS as _ROUND6_MORE_SPECS  # noqa: E402
-
-_register_pack(_ROUND6_MORE_SPECS)
-
-from .round6_ir import SPECS as _ROUND6_IR_SPECS  # noqa: E402
-
-_register_pack(_ROUND6_IR_SPECS)
-
-from .round6_eval import SPECS as _ROUND6_EVAL_SPECS  # noqa: E402
-
-_register_pack(_ROUND6_EVAL_SPECS)
-
-from .round6_graph2 import SPECS as _ROUND6_GRAPH2_SPECS  # noqa: E402
-
-_register_pack(_ROUND6_GRAPH2_SPECS)
-
-from .round6_stats3 import SPECS as _ROUND6_STATS3_SPECS  # noqa: E402
-
-_register_pack(_ROUND6_STATS3_SPECS)
-
-from .round6_scale2 import SPECS as _ROUND6_SCALE2_SPECS  # noqa: E402
-
-_register_pack(_ROUND6_SCALE2_SPECS)
-
-from .round6_analytics import SPECS as _ROUND6_ANALYTICS_SPECS  # noqa: E402
-
-_register_pack(_ROUND6_ANALYTICS_SPECS)
-
-from .round6_curation2 import SPECS as _ROUND6_CURATION2_SPECS  # noqa: E402
-
-_register_pack(_ROUND6_CURATION2_SPECS)
-
-from .round6_bi import SPECS as _ROUND6_BI_SPECS  # noqa: E402
-
-_register_pack(_ROUND6_BI_SPECS)
-
-from .round6_quant import SPECS as _ROUND6_QUANT_SPECS  # noqa: E402
-
-_register_pack(_ROUND6_QUANT_SPECS)
-
-from .round6_causal import SPECS as _ROUND6_CAUSAL_SPECS  # noqa: E402
-
-_register_pack(_ROUND6_CAUSAL_SPECS)
-
-from .round6_stats4 import SPECS as _ROUND6_STATS4_SPECS  # noqa: E402
-
-_register_pack(_ROUND6_STATS4_SPECS)
-
-from .round6_quality2 import SPECS as _ROUND6_QUALITY2_SPECS  # noqa: E402
-
-_register_pack(_ROUND6_QUALITY2_SPECS)
-
-from .round6_embed3 import SPECS as _ROUND6_EMBED3_SPECS  # noqa: E402
-
-_register_pack(_ROUND6_EMBED3_SPECS)
-
-from .round6_ts4 import SPECS as _ROUND6_TS4_SPECS  # noqa: E402
-
-_register_pack(_ROUND6_TS4_SPECS)
-
-from .round6_media2 import SPECS as _ROUND6_MEDIA2_SPECS  # noqa: E402
-
-_register_pack(_ROUND6_MEDIA2_SPECS)
-
-from .round6_ir3 import SPECS as _ROUND6_IR3_SPECS  # noqa: E402
-
-_register_pack(_ROUND6_IR3_SPECS)
-
-from .round6_graph3 import SPECS as _ROUND6_GRAPH3_SPECS  # noqa: E402
-
-_register_pack(_ROUND6_GRAPH3_SPECS)
-
-from .round6_scale3 import SPECS as _ROUND6_SCALE3_SPECS  # noqa: E402
-
-_register_pack(_ROUND6_SCALE3_SPECS)
-
-from .round6_text4 import SPECS as _ROUND6_TEXT4_SPECS  # noqa: E402
-
-_register_pack(_ROUND6_TEXT4_SPECS)
-
-from .round6_audit3 import SPECS as _ROUND6_AUDIT3_SPECS  # noqa: E402
-
-_register_pack(_ROUND6_AUDIT3_SPECS)
-
-from .round6_recsys import SPECS as _ROUND6_RECSYS_SPECS  # noqa: E402
-
-_register_pack(_ROUND6_RECSYS_SPECS)
-
-from .round6_olap2 import SPECS as _ROUND6_OLAP2_SPECS  # noqa: E402
-
-_register_pack(_ROUND6_OLAP2_SPECS)
-
-from .round6_bi2 import SPECS as _ROUND6_BI2_SPECS  # noqa: E402
-
-_register_pack(_ROUND6_BI2_SPECS)
-
-from .round6_stats5 import SPECS as _ROUND6_STATS5_SPECS  # noqa: E402
-
-_register_pack(_ROUND6_STATS5_SPECS)
-
-from .round6_spark4 import SPECS as _ROUND6_SPARK4_SPECS  # noqa: E402
-
-_register_pack(_ROUND6_SPARK4_SPECS)
-
-from .round6_e2e2 import SPECS as _ROUND6_E2E2_SPECS  # noqa: E402
-
-_register_pack(_ROUND6_E2E2_SPECS)
-
-from .round6_pct import SPECS as _ROUND6_PCT_SPECS  # noqa: E402
-
-_register_pack(_ROUND6_PCT_SPECS)
-
-from .round6_ts5 import SPECS as _ROUND6_TS5_SPECS  # noqa: E402
-
-_register_pack(_ROUND6_TS5_SPECS)
-
-from .round6_eval2 import SPECS as _ROUND6_EVAL2_SPECS  # noqa: E402
-
-_register_pack(_ROUND6_EVAL2_SPECS)
-
-from .round6_dq3 import SPECS as _ROUND6_DQ3_SPECS  # noqa: E402
-
-_register_pack(_ROUND6_DQ3_SPECS)
-
-from .round6_final import SPECS as _ROUND6_FINAL_SPECS  # noqa: E402
-
-_register_pack(_ROUND6_FINAL_SPECS)
-
-from .round7_stats import SPECS as _ROUND7_STATS_SPECS  # noqa: E402
-
-_register_pack(_ROUND7_STATS_SPECS)
-
-from .round7_text import SPECS as _ROUND7_TEXT_SPECS  # noqa: E402
-
-_register_pack(_ROUND7_TEXT_SPECS)
-
-from .round7_ts import SPECS as _ROUND7_TS_SPECS  # noqa: E402
-
-_register_pack(_ROUND7_TS_SPECS)
-
-from .round7_ops import SPECS as _ROUND7_OPS_SPECS  # noqa: E402
-
-_register_pack(_ROUND7_OPS_SPECS)
-
-from .round7_e2e import SPECS as _ROUND7_E2E_SPECS  # noqa: E402
-
-_register_pack(_ROUND7_E2E_SPECS)
-
-from .round7_quality import SPECS as _ROUND7_QUALITY_SPECS  # noqa: E402
-
-_register_pack(_ROUND7_QUALITY_SPECS)
-
-from .round7_bpe import SPECS as _ROUND7_BPE_SPECS  # noqa: E402
-
-_register_pack(_ROUND7_BPE_SPECS)
-
-from .round7_eval import SPECS as _ROUND7_EVAL_SPECS  # noqa: E402
-
-_register_pack(_ROUND7_EVAL_SPECS)
-
-from .round7_layout import SPECS as _ROUND7_LAYOUT_SPECS  # noqa: E402
-
-_register_pack(_ROUND7_LAYOUT_SPECS)
-
-from .round7_econ import SPECS as _ROUND7_ECON_SPECS  # noqa: E402
-
-_register_pack(_ROUND7_ECON_SPECS)
-
-from .round7_sre import SPECS as _ROUND7_SRE_SPECS  # noqa: E402
-
-_register_pack(_ROUND7_SRE_SPECS)
-
-from .round7_ur import SPECS as _ROUND7_UR_SPECS  # noqa: E402
-
-_register_pack(_ROUND7_UR_SPECS)
-
-from .round7_granger import SPECS as _ROUND7_GRANGER_SPECS  # noqa: E402
-
-_register_pack(_ROUND7_GRANGER_SPECS)
-
-from .round8_ts import SPECS as _ROUND8_TS_SPECS  # noqa: E402
-
-_register_pack(_ROUND8_TS_SPECS)
-
-from .round8_graph import SPECS as _ROUND8_GRAPH_SPECS  # noqa: E402
-
-_register_pack(_ROUND8_GRAPH_SPECS)
-
-from .round8_bi import SPECS as _ROUND8_BI_SPECS  # noqa: E402
-
-_register_pack(_ROUND8_BI_SPECS)
-
-from .round8_ml import SPECS as _ROUND8_ML_SPECS  # noqa: E402
-
-_register_pack(_ROUND8_ML_SPECS)
-
-from .round8_text import SPECS as _ROUND8_TEXT_SPECS  # noqa: E402
-
-_register_pack(_ROUND8_TEXT_SPECS)
-
-from .round8_dq import SPECS as _ROUND8_DQ_SPECS  # noqa: E402
-
-_register_pack(_ROUND8_DQ_SPECS)
-
-from .round8_spc import SPECS as _ROUND8_SPC_SPECS  # noqa: E402
-
-_register_pack(_ROUND8_SPC_SPECS)
-
-from .round8_embed import SPECS as _ROUND8_EMBED_SPECS  # noqa: E402
-
-_register_pack(_ROUND8_EMBED_SPECS)
-
-from .round8_olap import SPECS as _ROUND8_OLAP_SPECS  # noqa: E402
-
-_register_pack(_ROUND8_OLAP_SPECS)
-
-from .round8_more import SPECS as _ROUND8_MORE_SPECS  # noqa: E402
-
-_register_pack(_ROUND8_MORE_SPECS)
-
-from .round8_infer import SPECS as _ROUND8_INFER_SPECS  # noqa: E402
-
-_register_pack(_ROUND8_INFER_SPECS)
-
-from .round8_surface import SPECS as _ROUND8_SURFACE_SPECS  # noqa: E402
-
-_register_pack(_ROUND8_SURFACE_SPECS)
-
-from .round8_seq import SPECS as _ROUND8_SEQ_SPECS  # noqa: E402
-
-_register_pack(_ROUND8_SEQ_SPECS)
-
-from .round8_skipgram import SPECS as _ROUND8_SKIPGRAM_SPECS  # noqa: E402
-
-_register_pack(_ROUND8_SKIPGRAM_SPECS)
-
-from .round8_ireval import SPECS as _ROUND8_IREVAL_SPECS  # noqa: E402
-
-_register_pack(_ROUND8_IREVAL_SPECS)
-
-from .round9_graph import SPECS as _ROUND9_GRAPH_SPECS  # noqa: E402
-
-_register_pack(_ROUND9_GRAPH_SPECS)
-
-from .round9_iter import SPECS as _ROUND9_ITER_SPECS  # noqa: E402
-
-_register_pack(_ROUND9_ITER_SPECS)
-
-from .round9_dist import SPECS as _ROUND9_DIST_SPECS  # noqa: E402
-
-_register_pack(_ROUND9_DIST_SPECS)
-
-from .round9_epi import SPECS as _ROUND9_EPI_SPECS  # noqa: E402
-
-_register_pack(_ROUND9_EPI_SPECS)
-
-from .round9_root import SPECS as _ROUND9_ROOT_SPECS  # noqa: E402
-
-_register_pack(_ROUND9_ROOT_SPECS)
-
-from .round9_planner import SPECS as _ROUND9_PLANNER_SPECS  # noqa: E402
-
-_register_pack(_ROUND9_PLANNER_SPECS)
-
-from .round9_seq2 import SPECS as _ROUND9_SEQ2_SPECS  # noqa: E402
-
-_register_pack(_ROUND9_SEQ2_SPECS)
-
-from .round9_ir2 import SPECS as _ROUND9_IR2_SPECS  # noqa: E402
-
-_register_pack(_ROUND9_IR2_SPECS)
-
-from .round9_data import SPECS as _ROUND9_DATA_SPECS  # noqa: E402
-
-_register_pack(_ROUND9_DATA_SPECS)
-
-from .round9_sys import SPECS as _ROUND9_SYS_SPECS  # noqa: E402
-
-_register_pack(_ROUND9_SYS_SPECS)
-
-from .round9_motif import SPECS as _ROUND9_MOTIF_SPECS  # noqa: E402
-
-_register_pack(_ROUND9_MOTIF_SPECS)
-
-from .round9_lm import SPECS as _ROUND9_LM_SPECS  # noqa: E402
-
-_register_pack(_ROUND9_LM_SPECS)
-
-from .round9_hits import SPECS as _ROUND9_HITS_SPECS  # noqa: E402
-
-_register_pack(_ROUND9_HITS_SPECS)
-
-from .round9_causal2 import SPECS as _ROUND9_CAUSAL2_SPECS  # noqa: E402
-
-_register_pack(_ROUND9_CAUSAL2_SPECS)
-
-from .round9_shapley import SPECS as _ROUND9_SHAPLEY_SPECS  # noqa: E402
-
-_register_pack(_ROUND9_SHAPLEY_SPECS)
-
-from .round9_wavelet import SPECS as _ROUND9_WAVELET_SPECS  # noqa: E402
-
-_register_pack(_ROUND9_WAVELET_SPECS)
-
-from .round9_ddsketch import SPECS as _ROUND9_DDSKETCH_SPECS  # noqa: E402
-
-_register_pack(_ROUND9_DDSKETCH_SPECS)
-
-from .round9_absorb import SPECS as _ROUND9_ABSORB_SPECS  # noqa: E402
-
-_register_pack(_ROUND9_ABSORB_SPECS)
-
-from .round9_msf import SPECS as _ROUND9_MSF_SPECS  # noqa: E402
-
-_register_pack(_ROUND9_MSF_SPECS)
-
-from .round9_ransac import SPECS as _ROUND9_RANSAC_SPECS  # noqa: E402
-
-_register_pack(_ROUND9_RANSAC_SPECS)
-
-from .round9_eb import SPECS as _ROUND9_EB_SPECS  # noqa: E402
-
-_register_pack(_ROUND9_EB_SPECS)
-
-from .round9_surv2 import SPECS as _ROUND9_SURV2_SPECS  # noqa: E402
-
-_register_pack(_ROUND9_SURV2_SPECS)
-
-from .round9_regret import SPECS as _ROUND9_REGRET_SPECS  # noqa: E402
-
-_register_pack(_ROUND9_REGRET_SPECS)
-
-from .round10_dag import SPECS as _ROUND10_DAG_SPECS  # noqa: E402
-
-_register_pack(_ROUND10_DAG_SPECS)
-
-from .round10_sched import SPECS as _ROUND10_SCHED_SPECS  # noqa: E402
-
-_register_pack(_ROUND10_SCHED_SPECS)
-
-from .round10_replay import SPECS as _ROUND10_REPLAY_SPECS  # noqa: E402
-
-_register_pack(_ROUND10_REPLAY_SPECS)
-
-from .round10_dp import SPECS as _ROUND10_DP_SPECS  # noqa: E402
-
-_register_pack(_ROUND10_DP_SPECS)
-
-from .round10_hll import SPECS as _ROUND10_HLL_SPECS  # noqa: E402
-
-_register_pack(_ROUND10_HLL_SPECS)
-
-from .round10_geo import SPECS as _ROUND10_GEO_SPECS  # noqa: E402
-
-_register_pack(_ROUND10_GEO_SPECS)
-
-from .round10_online import SPECS as _ROUND10_ONLINE_SPECS  # noqa: E402
-
-_register_pack(_ROUND10_ONLINE_SPECS)
-
-from .round10_sched2 import SPECS as _ROUND10_SCHED2_SPECS  # noqa: E402
-
-_register_pack(_ROUND10_SCHED2_SPECS)
-
-from .round10_cache import SPECS as _ROUND10_CACHE_SPECS  # noqa: E402
-
-_register_pack(_ROUND10_CACHE_SPECS)
-
-from .round10_match import SPECS as _ROUND10_MATCH_SPECS  # noqa: E402
-
-_register_pack(_ROUND10_MATCH_SPECS)
-
-from .round10_agree import SPECS as _ROUND10_AGREE_SPECS  # noqa: E402
-
-_register_pack(_ROUND10_AGREE_SPECS)
-
-from .round10_huffman import SPECS as _ROUND10_HUFFMAN_SPECS  # noqa: E402
-
-_register_pack(_ROUND10_HUFFMAN_SPECS)
-
-from .round10_geo2 import SPECS as _ROUND10_GEO2_SPECS  # noqa: E402
-
-_register_pack(_ROUND10_GEO2_SPECS)
-
-from .round10_majority import SPECS as _ROUND10_MAJORITY_SPECS  # noqa: E402
-
-_register_pack(_ROUND10_MAJORITY_SPECS)
-
-from .round11_align import SPECS as _ROUND11_ALIGN_SPECS  # noqa: E402
-
-_register_pack(_ROUND11_ALIGN_SPECS)
-
-from .round11_trend import SPECS as _ROUND11_TREND_SPECS  # noqa: E402
-
-_register_pack(_ROUND11_TREND_SPECS)
-
-from .round11_lz import SPECS as _ROUND11_LZ_SPECS  # noqa: E402
-
-_register_pack(_ROUND11_LZ_SPECS)
-
-from .round11_knap import SPECS as _ROUND11_KNAP_SPECS  # noqa: E402
-
-_register_pack(_ROUND11_KNAP_SPECS)
-
-from .round11_edit import SPECS as _ROUND11_EDIT_SPECS  # noqa: E402
-
-_register_pack(_ROUND11_EDIT_SPECS)
-
-from .round11_assign import SPECS as _ROUND11_ASSIGN_SPECS  # noqa: E402
-
-_register_pack(_ROUND11_ASSIGN_SPECS)
-
-from .round11_snm import SPECS as _ROUND11_SNM_SPECS  # noqa: E402
-
-_register_pack(_ROUND11_SNM_SPECS)
-
-from .round11_iso import SPECS as _ROUND11_ISO_SPECS  # noqa: E402
-
-_register_pack(_ROUND11_ISO_SPECS)
-
-from .round11_jaro import SPECS as _ROUND11_JARO_SPECS  # noqa: E402
-
-_register_pack(_ROUND11_JARO_SPECS)
-
-from .round11_tau import SPECS as _ROUND11_TAU_SPECS  # noqa: E402
-
-_register_pack(_ROUND11_TAU_SPECS)
-
-from .round11_neyman import SPECS as _ROUND11_NEYMAN_SPECS  # noqa: E402
-
-_register_pack(_ROUND11_NEYMAN_SPECS)
-
-from .round11_bt import SPECS as _ROUND11_BT_SPECS  # noqa: E402
-
-_register_pack(_ROUND11_BT_SPECS)
-
-from .round11_novelty import SPECS as _ROUND11_NOVELTY_SPECS  # noqa: E402
-
-_register_pack(_ROUND11_NOVELTY_SPECS)
-
-from .round11_wis import SPECS as _ROUND11_WIS_SPECS  # noqa: E402
-
-_register_pack(_ROUND11_WIS_SPECS)
-
-from .round11_mod import SPECS as _ROUND11_MOD_SPECS  # noqa: E402
-
-_register_pack(_ROUND11_MOD_SPECS)
+_register((
+    "ml_exact",
+    "round4_ops",
+    "round5_ops", "round5_ext", "round5_more", "round5_pq", "round5_gov",
+    "round5_train", "round5_cdc", "round5_ml3", "round5_layout", "round5_ts3",
+    "round5_feat", "round5_stats2", "round5_contain", "round5_ivm",
+    "round5_sketch2", "round5_text3",
+    "round6_suffix", "round6_planner", "round6_ops", "round6_ml", "round6_more",
+    "round6_ir", "round6_eval", "round6_graph2", "round6_stats3",
+    "round6_scale2", "round6_analytics", "round6_curation2", "round6_bi",
+    "round6_quant", "round6_causal", "round6_stats4", "round6_quality2",
+    "round6_embed3", "round6_ts4", "round6_media2", "round6_ir3",
+    "round6_graph3", "round6_scale3", "round6_text4", "round6_audit3",
+    "round6_recsys", "round6_olap2", "round6_bi2", "round6_stats5",
+    "round6_spark4", "round6_e2e2", "round6_pct", "round6_ts5", "round6_eval2",
+    "round6_dq3", "round6_final",
+    "round7_stats", "round7_text", "round7_ts", "round7_ops", "round7_e2e",
+    "round7_quality", "round7_bpe", "round7_eval", "round7_layout",
+    "round7_econ", "round7_sre", "round7_ur", "round7_granger",
+    "round8_ts", "round8_graph", "round8_bi", "round8_ml", "round8_text",
+    "round8_dq", "round8_spc", "round8_embed", "round8_olap", "round8_more",
+    "round8_infer", "round8_surface", "round8_seq", "round8_skipgram",
+    "round8_ireval",
+    "round9_graph", "round9_iter", "round9_dist", "round9_epi", "round9_root",
+    "round9_planner", "round9_seq2", "round9_ir2", "round9_data", "round9_sys",
+    "round9_motif", "round9_lm", "round9_hits", "round9_causal2",
+    "round9_shapley", "round9_wavelet", "round9_ddsketch", "round9_absorb",
+    "round9_msf", "round9_ransac", "round9_eb", "round9_surv2", "round9_regret",
+    "round10_dag", "round10_sched", "round10_replay", "round10_dp",
+    "round10_hll", "round10_geo", "round10_online", "round10_sched2",
+    "round10_cache", "round10_match", "round10_agree", "round10_huffman",
+    "round10_geo2", "round10_majority",
+    "round11_align", "round11_trend", "round11_lz", "round11_knap",
+    "round11_edit", "round11_assign", "round11_snm", "round11_iso",
+    "round11_jaro", "round11_tau", "round11_neyman", "round11_bt",
+    "round11_novelty", "round11_wis", "round11_mod",
+))
 
 
 # --------------------------------------------------------------------------

@@ -62,7 +62,7 @@ from pyspark.sql import functions as F
 from ..operators.caching import tracked_cache
 from ..operators.dedup import minhash_band_keys, word_ngrams
 from ..sources.tables import load_table
-from .catalog import QuerySpec, _minhash_sig_ctes
+from .catalog import QuerySpec, _TRIGRAM_CTES, _minhash_sig_ctes
 
 #: eval corpus = doc_id < N_EVAL (plans/contamination.py convention,
 #: widened so the best-match table has real spread at sf0.01+)
@@ -265,14 +265,8 @@ def _q_eval_lsh_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 # flagship (catalog._minhash_sig_ctes), split cross-corpus
 # --------------------------------------------------------------------------
 
-_SQL_GRAM_IDS = """
-WITH toks AS (
-  SELECT doc_id, string_split(text, ' ') AS tokens FROM documents
-), grams AS (
-  SELECT doc_id, unnest(list_transform(generate_series(1, len(tokens) - 2),
-         i -> array_to_string(list_slice(tokens, i, i + 2), ' '))) AS gram
-  FROM toks WHERE len(tokens) >= 3
-), dg AS (
+_SQL_GRAM_IDS = f"""
+WITH {_TRIGRAM_CTES}, dg AS (
   SELECT DISTINCT doc_id, gram FROM grams
 ), ids AS (
   -- tid = md5-prefix BIGINT (bit-identical to Spark's conv(substring(md5)..));

@@ -44,7 +44,7 @@ from pyspark.sql import functions as F
 
 from ..operators.dedup import ngram_jaccard_pairs
 from ..sources.tables import load_table
-from .catalog import QuerySpec
+from .catalog import QuerySpec, _TRIGRAM_CTES
 
 #: edit-distance prefix cap — the per-pair DP is ED_MAX_CHARS² steps,
 #: corpus-independent
@@ -168,13 +168,7 @@ def _sql_ed_fold(a: str, b: str, la: str, lb: str) -> str:
 
 
 _SQL_EDIT_PAIRS = f"""
-WITH toks AS (
-  SELECT doc_id, string_split(text, ' ') AS tokens FROM documents
-), grams AS (
-  SELECT doc_id, unnest(list_transform(generate_series(1, len(tokens) - 2),
-         i -> array_to_string(list_slice(tokens, i, i + 2), ' '))) AS gram
-  FROM toks WHERE len(tokens) >= 3
-), dg AS (
+WITH {_TRIGRAM_CTES}, dg AS (
   SELECT DISTINCT doc_id, gram FROM grams
 ), sizes AS (
   SELECT doc_id, count(*) AS sz FROM dg GROUP BY doc_id

@@ -43,7 +43,7 @@ from pyspark.sql import functions as F
 
 from ..operators.dedup import ngram_jaccard_pairs
 from ..sources.tables import load_table
-from .catalog import QuerySpec
+from .catalog import QuerySpec, _TRIGRAM_CTES
 
 #: prefix cap — bounds the per-pair fold (window probes included)
 JARO_MAX_CHARS = 64
@@ -219,13 +219,7 @@ def _q_jaro_winkler_dup_pairs(
 
 
 _SQL_JARO = f"""
-WITH RECURSIVE toks AS (
-  SELECT doc_id, string_split(text, ' ') AS tokens FROM documents
-), grams AS (
-  SELECT doc_id, unnest(list_transform(generate_series(1, len(tokens) - 2),
-         i -> array_to_string(list_slice(tokens, i, i + 2), ' '))) AS gram
-  FROM toks WHERE len(tokens) >= 3
-), dg AS (
+WITH RECURSIVE {_TRIGRAM_CTES}, dg AS (
   SELECT DISTINCT doc_id, gram FROM grams
 ), sizes AS (
   SELECT doc_id, count(*) AS sz FROM dg GROUP BY doc_id

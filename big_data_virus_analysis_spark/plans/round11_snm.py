@@ -50,7 +50,7 @@ from ..operators.caching import tracked_cache
 from ..operators.dedup import ngram_jaccard_pairs, word_ngrams
 from ..operators.prefix_sum import global_row_number
 from ..sources.tables import load_table
-from .catalog import QuerySpec
+from .catalog import QuerySpec, _TRIGRAM_CTES
 
 #: sort-key prefix length (lowercased first chars)
 SNM_KEY_CHARS = 24
@@ -193,13 +193,7 @@ WITH keyed AS MATERIALIZED (
          CAST(b.rn - a.rn AS BIGINT) AS rank_dist
   FROM ranked a
   JOIN ranked b ON b.rn > a.rn AND b.rn - a.rn < {SNM_WINDOW}
-), toks AS (
-  SELECT doc_id, string_split(text, ' ') AS tokens FROM documents
-), grams AS (
-  SELECT doc_id, unnest(list_transform(generate_series(1, len(tokens) - 2),
-         i -> array_to_string(list_slice(tokens, i, i + 2), ' '))) AS gram
-  FROM toks WHERE len(tokens) >= 3
-), dg AS (
+), {_TRIGRAM_CTES}, dg AS (
   SELECT DISTINCT doc_id, gram FROM grams
 ), sizes AS (
   SELECT doc_id, count(*) AS sz FROM dg GROUP BY doc_id

@@ -35,7 +35,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..sources.tables import load_table
-from .catalog import QuerySpec
+from .catalog import QuerySpec, _TRIGRAM_CTES
 
 # deterministic LCG constants shared in spirit with similarity._plane_weight
 _CMS_D = 4  # hash rows
@@ -759,14 +759,8 @@ def _q_dedup_retention_by_threshold(spark: SparkSession, sf_dir: str) -> DataFra
     )
 
 
-_SQL_DEDUP_RETENTION_BY_THRESHOLD = """
-WITH toks AS (
-  SELECT doc_id, string_split(text, ' ') AS tokens FROM documents
-), grams AS (
-  SELECT doc_id, unnest(list_transform(generate_series(1, len(tokens) - 2),
-         i -> array_to_string(list_slice(tokens, i, i + 2), ' '))) AS gram
-  FROM toks WHERE len(tokens) >= 3
-), dg AS (
+_SQL_DEDUP_RETENTION_BY_THRESHOLD = f"""
+WITH {_TRIGRAM_CTES}, dg AS (
   SELECT DISTINCT doc_id, gram FROM grams
 ), sizes AS (
   SELECT doc_id, count(*) AS sz FROM dg GROUP BY doc_id

@@ -31,16 +31,10 @@ from pyspark.sql import functions as F
 from ..operators.caching import tracked_cache
 from ..operators.dedup import word_ngrams
 from ..sources.tables import load_table
-from .catalog import QuerySpec
+from .catalog import QuerySpec, _TRIGRAM_CTES
 
-_GRAM_SQL = """
-WITH toks AS (
-  SELECT doc_id, string_split(text, ' ') AS tokens FROM documents
-), grams AS (
-  SELECT doc_id, unnest(list_transform(generate_series(1, len(tokens) - 2),
-         i -> array_to_string(list_slice(tokens, i, i + 2), ' '))) AS gram
-  FROM toks WHERE len(tokens) >= 3
-), dg AS (
+_GRAM_SQL = f"""
+WITH {_TRIGRAM_CTES}, dg AS (
   SELECT DISTINCT doc_id, gram FROM grams
 )
 """

@@ -38,7 +38,7 @@ from pyspark.sql import functions as F
 
 from ..operators.dedup import dedup_clusters, minhash_lsh_pairs, simhash_pairs
 from ..sources.tables import load_table
-from .catalog import QuerySpec
+from .catalog import QuerySpec, _TRIGRAM_CTES
 
 
 def _q_adjusted_rand_clusterings(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -122,14 +122,8 @@ def _q_adjusted_rand_clusterings(spark: SparkSession, sf_dir: str) -> DataFrame:
 # are literally the catalog's canonical fragments (catalog.py:
 # _SQL_SHINGLE_IDS / _minhash_band_sql / _SQL_SIMHASH_BASE), inlined
 # because the two pipelines must share one WITH clause here.
-_SQL_ADJUSTED_RAND_CLUSTERINGS = """
-WITH RECURSIVE toks AS (
-  SELECT doc_id, string_split(text, ' ') AS tokens FROM documents
-), grams AS (
-  SELECT doc_id, unnest(list_transform(generate_series(1, len(tokens) - 2),
-         i -> array_to_string(list_slice(tokens, i, i + 2), ' '))) AS gram
-  FROM toks WHERE len(tokens) >= 3
-), dg AS (
+_SQL_ADJUSTED_RAND_CLUSTERINGS = f"""
+WITH RECURSIVE {_TRIGRAM_CTES}, dg AS (
   SELECT DISTINCT doc_id, gram FROM grams
 ), ids AS (
   SELECT doc_id,

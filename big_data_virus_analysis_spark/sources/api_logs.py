@@ -17,7 +17,7 @@ Line format (reference api_logs/*/LOG_API (N)converted.txt):
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 #: Class-name constants (reference readme.md:51 — 0.0 clean, 1.0 virus).
@@ -73,19 +73,33 @@ def file_features(raw: DataFrame) -> DataFrame:
     return clean_tokens(raw).dropDuplicates(["file", "class", "api"])
 
 
+def _doc() -> Column:
+    """Document id of a raw row.  Class-qualified: the clean/ and virus/
+    dirs reuse the same basenames (LOG_API (N)converted.txt), so the bare
+    file name is not a document identity."""
+    return F.concat_ws("/", "class", "file").alias("doc")
+
+
+def _cls() -> Column:
+    """Feature-selection class of a raw row: virus is the positive class
+    (label 1.0, reference readme.md:51)."""
+    return F.when(F.col("class") == VIRUS, F.lit("pos")).otherwise(F.lit("neg")).alias("cls")
+
+
 def api_log_tokens(raw: DataFrame) -> DataFrame:
     """Adapt the api-log corpus to the generic feature-selection shape
     ``(doc, cls, token)`` consumed by ``operators.features`` — virus is
     the positive class (label 1.0, reference readme.md:51).
     """
-    return clean_tokens(raw).select(
-        # class-qualified id: clean/ and virus/ dirs reuse the same
-        # basenames (LOG_API (N)converted.txt), so the bare file name
-        # is not a document identity
-        F.concat_ws("/", "class", "file").alias("doc"),
-        F.when(F.col("class") == VIRUS, F.lit("pos")).otherwise(F.lit("neg")).alias("cls"),
-        F.col("api").alias("token"),
-    )
+    return clean_tokens(raw).select(_doc(), _cls(), F.col("api").alias("token"))
+
+
+def api_log_doc_classes(raw: DataFrame) -> DataFrame:
+    """``(doc, cls)``, one row per log file — the IG document totals
+    (``info_gain_ranking(doc_classes=...)``) straight from the raw scan,
+    so token-less files still count, as in the reference's bucket
+    listing (FeatureSelectionCloud.scala:122-123)."""
+    return raw.select(_doc(), _cls()).distinct()
 
 
 def api_log_byte_tokens(raw: DataFrame, width: int = 14) -> DataFrame:
@@ -101,7 +115,5 @@ def api_log_byte_tokens(raw: DataFrame, width: int = 14) -> DataFrame:
     from ..functions.text import shingles
 
     return raw.select(
-        F.concat_ws("/", "class", "file").alias("doc"),
-        F.when(F.col("class") == VIRUS, F.lit("pos")).otherwise(F.lit("neg")).alias("cls"),
-        F.explode(shingles(F.col("raw_line"), width=width)).alias("token"),
+        _doc(), _cls(), F.explode(shingles(F.col("raw_line"), width=width)).alias("token")
     ).where(F.length("token") == width)

@@ -81,17 +81,13 @@ def e2e_frame(spark, clean_dir: str, virus_dir: str):
     )
     from big_data_virus_analysis_spark.operators.caching import tracked_cache
     from big_data_virus_analysis_spark.sources.api_logs import (
+        api_log_doc_classes,
         api_log_tokens,
         read_api_logs,
     )
 
     raw = read_api_logs(spark, clean_dir, virus_dir)
-    doc_cls = raw.select(
-        F.concat_ws("/", "class", "file").alias("doc"),
-        F.when(F.col("class") == "virus", F.lit("pos"))
-        .otherwise(F.lit("neg"))
-        .alias("cls"),
-    ).distinct()
+    doc_cls = api_log_doc_classes(raw)
     toks = api_log_tokens(raw).transform(tracked_cache)
     vocab = info_gain_ranking(toks, k=2000, doc_classes=doc_cls).select(
         "token", "rank"

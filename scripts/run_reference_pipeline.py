@@ -48,6 +48,7 @@ from big_data_virus_analysis_spark.operators.vectorize import (  # noqa: E402
 )
 from big_data_virus_analysis_spark.session import get_spark  # noqa: E402
 from big_data_virus_analysis_spark.sources.api_logs import (  # noqa: E402
+    api_log_doc_classes,
     api_log_tokens,
     read_api_logs,
 )
@@ -81,12 +82,7 @@ def main() -> None:
     spark.sparkContext.setLogLevel("ERROR")
 
     raw = read_api_logs(spark, clean_dir, virus_dir).cache()
-    doc_cls = raw.select(
-        F.concat_ws("/", "class", "file").alias("doc"),
-        F.when(F.col("class") == "virus", F.lit("pos"))
-        .otherwise(F.lit("neg"))
-        .alias("cls"),
-    ).distinct()
+    doc_cls = api_log_doc_classes(raw)
     toks = api_log_tokens(raw)
 
     # ---- FeatureSelectionCloud: IG ranking -> topFeatures.txt ----------

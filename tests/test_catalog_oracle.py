@@ -67,3 +67,18 @@ def test_catalog_md_is_current():
         content = f.read()
     missing = [n for n in CATALOG if f"`{n}`" not in content]
     assert not missing, f"regenerate CATALOG.md; missing {missing}"
+
+
+def test_register_refuses_name_collisions():
+    """Every entry — inline block or pack — joins CATALOG through
+    ``_register``, which refuses to shadow an existing name."""
+    from big_data_virus_analysis_spark.plans.catalog import QuerySpec, _register
+
+    before = list(CATALOG.items())
+    taken = next(iter(CATALOG))
+    fresh = QuerySpec(CATALOG[taken].spark, None, "not registered")
+    with pytest.raises(ValueError, match=taken):
+        _register({"no_such_query": fresh, taken: CATALOG[taken]})
+    with pytest.raises(ValueError, match="collide"):
+        _register(("drift",))  # a pack already registered
+    assert list(CATALOG.items()) == before

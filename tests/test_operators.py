@@ -23,10 +23,24 @@ def test_entropy2_known_values(spark):
         entropy2(F.lit(1), F.lit(2)).alias("half"),
         entropy2(F.lit(0), F.lit(2)).alias("zero"),
         entropy2(F.lit(2), F.lit(2)).alias("one"),
+        entropy2(F.lit(0), F.lit(0)).alias("empty"),
     )
     row = df.collect()[0]
     assert abs(row.half - 1.0) < 1e-12  # H(1/2) = 1 bit
     assert row.zero == 0.0 and row.one == 0.0
+    assert row.empty == 0.0  # empty split: no DIVIDE_BY_ZERO, reference NaN → 0
+
+
+def test_info_gain_ranking_universal_token(spark):
+    # "all" is in every document, so its absent-side split t - tg is
+    # empty; it carries no information and must score exactly 0.
+    cls = ["pos", "pos", "pos", "neg", "neg", "neg"]
+    rows = [(d, cls[d], "all") for d in range(6)] + [(d, cls[d], "b") for d in range(4)]
+    toks = spark.createDataFrame(rows, "doc INT, cls STRING, token STRING")
+    ranked = {r.token: r for r in info_gain_ranking(toks, k=10).collect()}
+    assert (ranked["all"].pos_df, ranked["all"].neg_df) == (3, 3)
+    assert ranked["all"].info_gain == 0.0
+    assert ranked["b"].info_gain > 0.0
 
 
 def test_info_gain_class_swap_symmetry(spark):
