@@ -660,7 +660,8 @@ def _compact_line(
        protected (flagged / over-2x-baseline) name.
     7. Absolute last resort: protected queries drop too — an
        unparseable head-cut line carries no evidence at all, so the
-       parse guarantee outranks completeness.
+       parse guarantee outranks completeness.  Every protected name
+       dropped is counted in ``n_protected_omitted``.
 
     GUARANTEED to terminate (r8 ADVICE): the loop exits the moment a
     full trim pass fails to shrink the line — a line whose irreducible
@@ -681,6 +682,11 @@ def _compact_line(
             k: v for k, v in compact["queries"].items() if k not in drop
         }
         compact["n_queries_omitted"] = len(timings) - len(compact["queries"])
+        lost = len(drop & protected)
+        if lost:
+            compact["n_protected_omitted"] = (
+                compact.get("n_protected_omitted", 0) + lost
+            )
         return True
 
     def _cap_names(fld: str) -> bool:

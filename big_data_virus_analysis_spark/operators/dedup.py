@@ -149,6 +149,14 @@ def ngram_jaccard_pairs(
         )
         .agg(F.count("*").alias("inter"))
     )
+    return _jaccard_at_least(inter, sizes, threshold)
+
+
+def _jaccard_at_least(
+    inter: DataFrame, sizes: DataFrame, threshold: float
+) -> DataFrame:
+    """Pairs ``(doc_a, doc_b, inter)`` with gram-set sizes ``(doc_id, sz)``
+    → their Jaccard (rounded to 6) where it reaches ``threshold``."""
     sa = sizes.alias("sa")
     sb = sizes.alias("sb")
     return (
@@ -754,19 +762,4 @@ def jaccard_prefix_filtered(
         .agg(F.count("*").alias("inter"))
     )
     sizes = dg.groupBy("doc_id").agg(F.count("*").alias("sz"))
-    sa = sizes.alias("sa")
-    sb = sizes.alias("sb")
-    return (
-        inter.join(sa, F.col("doc_a") == F.col("sa.doc_id"))
-        .join(sb, F.col("doc_b") == F.col("sb.doc_id"))
-        .withColumn(
-            "jaccard",
-            F.round(
-                F.col("inter").cast("double")
-                / (F.col("sa.sz") + F.col("sb.sz") - F.col("inter")).cast("double"),
-                6,
-            ),
-        )
-        .where(F.col("jaccard") >= threshold)
-        .select("doc_a", "doc_b", "jaccard")
-    )
+    return _jaccard_at_least(inter, sizes, threshold)

@@ -44,11 +44,12 @@ def _plane_weight(j: int, d: int, dim: int = DIM) -> float:
     return ((1103515245 * (j * dim + d) + 12345) % 2147483648) / 2147483648.0 - 0.5
 
 
-def lsh_bucket(emb, n_planes: int = N_PLANES, dim: int = DIM):
-    """Column expr: sign-LSH bucket id in [0, 2^n_planes)."""
+def _plane_bits(emb, planes: range, dim: int):
+    """Column expr: sign bits of ``emb`` against the LCG hyperplanes
+    ``planes`` — bit j is set iff the dot with the j-th plane is > 0."""
     bucket = F.lit(0).cast("bigint")
-    for j in range(n_planes):
-        plane = F.array(*[F.lit(_plane_weight(j, d, dim)) for d in range(dim)])
+    for j, plane_idx in enumerate(planes):
+        plane = F.array(*[F.lit(_plane_weight(plane_idx, d, dim)) for d in range(dim)])
         dot_j = F.aggregate(
             F.zip_with(emb, plane, lambda x, y: x.cast("double") * y.cast("double")),
             F.lit(0.0),
@@ -58,6 +59,11 @@ def lsh_bucket(emb, n_planes: int = N_PLANES, dim: int = DIM):
             F.lit(0).cast("bigint")
         )
     return bucket
+
+
+def lsh_bucket(emb, n_planes: int = N_PLANES, dim: int = DIM):
+    """Column expr: sign-LSH bucket id in [0, 2^n_planes)."""
+    return _plane_bits(emb, range(n_planes), dim)
 
 
 def cosine_topk(embeddings: DataFrame, n_queries: int = 10, k: int = 5) -> DataFrame:
@@ -388,19 +394,8 @@ def cosine_near_dup_lsh(
 def _table_bucket(emb, table: int, planes_per_table: int):
     """Bucket id for one LSH table: planes [table·p, (table+1)·p) of the
     deterministic LCG hyperplane family."""
-    bucket = F.lit(0).cast("bigint")
-    for j in range(planes_per_table):
-        plane_idx = table * planes_per_table + j
-        plane = F.array(*[F.lit(_plane_weight(plane_idx, d, DIM)) for d in range(DIM)])
-        dot_j = F.aggregate(
-            F.zip_with(emb, plane, lambda x, y: x.cast("double") * y.cast("double")),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
-        )
-        bucket = bucket + F.when(dot_j > 0, F.lit(1 << j).cast("bigint")).otherwise(
-            F.lit(0).cast("bigint")
-        )
-    return bucket
+    first = table * planes_per_table
+    return _plane_bits(emb, range(first, first + planes_per_table), DIM)
 
 
 def knn_label_vote(

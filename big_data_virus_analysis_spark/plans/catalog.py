@@ -27,6 +27,11 @@ exports ``SPECS`` (name → QuerySpec) and is listed by name in one of the
 ``_register((...))`` pack tuples below — that list is the pack table,
 and its order is the registration order (``_finalize_order`` then puts
 the driver's first-50 window in front).
+
+Fragments shared by two or more modules — oracle-SQL pieces, constants
+and plan-building helpers — live in ``plans/fragments.py``, which
+imports no pack: this module and the packs import them from there, and
+packs import only :class:`QuerySpec` from here.
 """
 
 from __future__ import annotations
@@ -44,6 +49,26 @@ from ..operators.features import document_tokens, info_gain_ranking
 from ..operators.entropy_score import weighted_average_entropy
 from ..operators.sessions import sessionize, tumbling_window_agg
 from ..functions.text import label_encode, shingles
+from .fragments import (
+    SQL_ASOF_LAST_PURCHASE,
+    SQL_COSINE_TOP5,
+    SQL_DEDUP_CLUSTER_ASSIGN,
+    SQL_EMB_BASE,
+    SQL_EMBEDDING_COVARIANCE_CELLS,
+    SQL_KNN_VOTES_BODY,
+    SQL_LSH_REACH,
+    SQL_MINHASH_LSH_PAIRS,
+    SQL_QUALITY_SCORE,
+    SQL_SHINGLE_IDS,
+    SQL_WEIGHTED_ENTROPY_SCORE,
+    TOKS_SQL,
+    TRIGRAM_CTES,
+    adjacent_bigrams,
+    info_gain_sql,
+    minhash_band_sql,
+    minhash_lsh_sql,
+    nan_to_zero_sql,
+)
 
 
 @dataclass(frozen=True)
@@ -53,45 +78,6 @@ class QuerySpec:
     spark: Callable[[SparkSession, str], DataFrame]
     oracle: str | None  # None → non-SQL-expressible; driver does rows-only check
     doc: str = ""
-
-
-# --------------------------------------------------------------------------
-# SQL fragments mirroring functions/entropy.py in the same operation order
-# --------------------------------------------------------------------------
-
-def _plogp2_sql(p: str) -> str:
-    return f"(CASE WHEN {p} > 0 THEN -({p}) * log2({p}) ELSE 0.0 END)"
-
-
-def _entropy2_sql(x: str, y: str) -> str:
-    p = f"(CAST({x} AS DOUBLE) / CAST({y} AS DOUBLE))"
-    return f"({_plogp2_sql(p)} + {_plogp2_sql(f'(1.0 - {p})')})"
-
-
-def _info_gain_sql(p: str, t: str, pg: str, tg: str) -> str:
-    t_d, tg_d = f"CAST({t} AS DOUBLE)", f"CAST({tg} AS DOUBLE)"
-    return (
-        f"({_entropy2_sql(p, t)}"
-        f" - ({tg_d} / {t_d}) * {_entropy2_sql(pg, tg)}"
-        f" - (({t_d} - {tg_d}) / {t_d}) * {_entropy2_sql(f'({p} - {pg})', f'({t} - {tg})')})"
-    )
-
-
-def _nan_to_zero_sql(x: str) -> str:
-    return f"(CASE WHEN isnan({x}) THEN 0.0 ELSE {x} END)"
-
-
-#: Word-trigram CTEs over `documents` — ``toks(doc_id, tokens)`` and
-#: ``grams(doc_id, gram)``, one row per space-joined trigram occurrence —
-#: the oracle side of ``operators/dedup.py::word_ngrams(n=3)``.  Used as
-#: ``WITH {_TRIGRAM_CTES}, dg AS (...)``.
-_TRIGRAM_CTES = """toks AS (
-  SELECT doc_id, string_split(text, ' ') AS tokens FROM documents
-), grams AS (
-  SELECT doc_id, unnest(list_transform(generate_series(1, len(tokens) - 2),
-         i -> array_to_string(list_slice(tokens, i, i + 2), ' '))) AS gram
-  FROM toks WHERE len(tokens) >= 3
-)"""
 
 
 # --------------------------------------------------------------------------
@@ -118,9 +104,30 @@ def _q_info_gain_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select("token", "pos_df", "neg_df", "info_gain", "rank")
 
 
-_IG_EXPR = _info_gain_sql("p", "t", "pos_df", "(pos_df + neg_df)")
+_IG_EXPR = info_gain_sql("p", "t", "pos_df", "(pos_df + neg_df)")
 
-_SQL_INFO_GAIN_TOPK = f"""
+#: per-token class document frequencies over ``tok_ne(doc, cls, token)``
+_SQL_TOKEN_DF = """dedup AS (
+  SELECT DISTINCT doc, cls, token FROM tok_ne
+), freq AS (
+  SELECT token,
+         count(*) FILTER (WHERE cls = 'pos') AS pos_df,
+         count(*) FILTER (WHERE cls = 'neg') AS neg_df
+  FROM dedup GROUP BY token
+)"""
+
+#: class totals over the API-log ``docs(doc, cls, ...)`` lines
+_SQL_LOG_TOTALS = """totals AS (
+  SELECT count(DISTINCT doc) FILTER (WHERE cls = 'pos') AS p,
+         count(DISTINCT doc) AS t
+  FROM docs
+)"""
+
+#: the IG inputs over `documents`: ``tok``/``tok_ne`` (doc, cls, token),
+#: the per-token class document frequencies ``freq`` and the class
+#: ``totals`` — shared by the flagship ranking and the vectorization
+#: oracles
+_SQL_DOC_IG_INPUTS = f"""
 WITH tok AS (
   SELECT doc_id AS doc,
          CASE WHEN lang = 'en' THEN 'pos' ELSE 'neg' END AS cls,
@@ -128,19 +135,17 @@ WITH tok AS (
   FROM documents
 ), tok_ne AS (
   SELECT * FROM tok WHERE length(token) > 0
-), dedup AS (
-  SELECT DISTINCT doc, cls, token FROM tok_ne
-), freq AS (
-  SELECT token,
-         count(*) FILTER (WHERE cls = 'pos') AS pos_df,
-         count(*) FILTER (WHERE cls = 'neg') AS neg_df
-  FROM dedup GROUP BY token
-), totals AS (
+), {_SQL_TOKEN_DF}, totals AS (
   SELECT count(*) FILTER (WHERE lang = 'en') AS p, count(*) AS t
   FROM documents
-), scored AS (
+)"""
+
+
+def _sql_ig_ranked(k: int) -> str:
+    """``scored`` + the final top-``k`` ranking over ``freq``/``totals``."""
+    return f""", scored AS (
   SELECT token, pos_df, neg_df,
-         round({_nan_to_zero_sql("ig_raw")}, 6) AS info_gain
+         round({nan_to_zero_sql("ig_raw")}, 6) AS info_gain
   FROM (
     SELECT token, pos_df, neg_df,
            {_IG_EXPR} AS ig_raw
@@ -151,8 +156,11 @@ WITH tok AS (
 SELECT token, pos_df, neg_df, info_gain,
        CAST(row_number() OVER (ORDER BY info_gain DESC, token ASC) AS INT) AS rank
 FROM scored
-QUALIFY rank <= {IG_TOPK}
+QUALIFY rank <= {k}
 """
+
+
+_SQL_INFO_GAIN_TOPK = _SQL_DOC_IG_INPUTS + _sql_ig_ranked(IG_TOPK)
 
 # --------------------------------------------------------------------------
 # Core relational pack (SURVEY.md §2.1-2.8 over the synthetic star schema)
@@ -450,17 +458,7 @@ _SQL_CLUSTER_ENTROPY = """
 WITH hist AS (
   SELECT CAST(user_id % 10 AS BIGINT) AS cluster, event_type AS label, count(*) AS cnt
   FROM events GROUP BY cluster, label
-), shares AS (
-  SELECT cnt,
-         CAST(cnt AS DOUBLE) / CAST(sum(cnt) OVER (PARTITION BY cluster) AS DOUBLE) AS p,
-         CAST(sum(cnt) OVER (PARTITION BY cluster) AS DOUBLE) AS s
-  FROM hist
-)
-SELECT round(
-  sum((CASE WHEN p > 0 THEN -p * ln(p) ELSE 0.0 END) * s) / CAST(sum(cnt) AS DOUBLE),
-  6) AS score
-FROM shares
-"""
+""" + SQL_WEIGHTED_ENTROPY_SCORE
 
 
 def _q_sessionize_events(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -674,7 +672,7 @@ def _q_jaccard_prefix_filtered(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 _SQL_DEDUP_NGRAM_JACCARD = f"""
-WITH {_TRIGRAM_CTES}, dg AS (
+WITH {TRIGRAM_CTES}, dg AS (
   SELECT DISTINCT doc_id, gram FROM grams
 ), sizes AS (
   SELECT doc_id, count(*) AS sz FROM dg GROUP BY doc_id
@@ -691,63 +689,9 @@ JOIN sizes sb ON doc_b = sb.doc_id
 WHERE round(CAST(inter AS DOUBLE) / CAST(sa.sz + sb.sz - inter AS DOUBLE), 6) >= 0.8
 """
 
-_SQL_SHINGLE_IDS = f"""
-WITH {_TRIGRAM_CTES}, dg AS (
-  SELECT DISTINCT doc_id, gram FROM grams
-), ids AS (
-  -- tid = md5-prefix BIGINT (bit-identical to Spark's conv(substring(md5)..));
-  -- reduce mod 2^31 before the multiply so the product stays < 2^63
-  SELECT doc_id,
-         ((CAST(('0x' || substr(md5(gram), 1, 15)) AS BIGINT) % 2147483648)
-          * 2654435761) % 2147483648 AS s
-  FROM dg
-)
-"""
-
 
 def _q_minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return minhash_lsh_pairs(load_table(spark, sf_dir, "documents"), n=3, k=32, bands=8)
-
-
-def _minhash_sig_ctes(k: int, rows_per_band: int) -> str:
-    """Signature + banding CTEs (through ``band_keys``) over an
-    ``ids(doc_id, s)`` CTE (mirrors operators/dedup.py::_family exactly
-    — mask, not mod; no division).  Shared with the round-11
-    cross-corpus alignment oracles."""
-    return f"""
-, sig AS (
-  -- odd-multiplier linear permutation mod 2^31
-  SELECT doc_id, i,
-         min(((((2654435761 * (2 * i + 1)) % 2147483648) | 1) * s + 7919 * i)
-             & 2147483647) AS h
-  FROM ids CROSS JOIN (SELECT unnest(generate_series(1, {k})) AS i)
-  GROUP BY doc_id, i
-), band_keys AS (
-  SELECT doc_id, CAST((i - 1) // {rows_per_band} AS INT) AS band,
-         string_agg(CAST(h AS VARCHAR), ',' ORDER BY i) AS key
-  FROM sig GROUP BY doc_id, band
-)"""
-
-
-def _minhash_band_sql(k: int, rows_per_band: int) -> str:
-    """Signature + banding + candidate self-join suffix."""
-    return (
-        _minhash_sig_ctes(k, rows_per_band)
-        + """
-SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS n_shared_bands
-FROM band_keys a
-JOIN band_keys b ON a.band = b.band AND a.key = b.key AND a.doc_id < b.doc_id
-GROUP BY doc_a, doc_b
-"""
-    )
-
-
-def _minhash_lsh_sql(k: int, rows_per_band: int) -> str:
-    """Parameterized MinHash+LSH oracle over md5 STRING grams."""
-    return _SQL_SHINGLE_IDS + _minhash_band_sql(k, rows_per_band)
-
-
-_SQL_MINHASH_LSH_PAIRS = _minhash_lsh_sql(32, 4)
 
 
 def _q_minhash_lsh_pairs_k16(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -812,14 +756,14 @@ WITH toks AS (
 )
 """
 
-_SQL_MINHASH_LSH_PAIRS_FAST_DET = _SQL_COMPOSE_IDS + _minhash_band_sql(32, 4)
+_SQL_MINHASH_LSH_PAIRS_FAST_DET = _SQL_COMPOSE_IDS + minhash_band_sql(32, 4)
 
 
 def _q_simhash_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return simhash_docs(load_table(spark, sf_dir, "documents"), n=3, bits=31)
 
 
-_SQL_SIMHASH_BASE = _SQL_SHINGLE_IDS + """
+_SQL_SIMHASH_BASE = SQL_SHINGLE_IDS + """
 , mixed AS (
   SELECT doc_id, (xor(s, s >> 13) * 1103515245) % 2147483648 AS h2 FROM ids
 ), contribs AS (
@@ -867,7 +811,7 @@ _register(
         ),
         "minhash_lsh_pairs": QuerySpec(
             _q_minhash_lsh_pairs,
-            _SQL_MINHASH_LSH_PAIRS,
+            SQL_MINHASH_LSH_PAIRS,
             "MinHash(k=32) + LSH(8 bands) candidate pairs",
         ),
         "minhash_lsh_pairs_fast": QuerySpec(
@@ -884,7 +828,7 @@ _register(
         ),
         "minhash_lsh_pairs_k16": QuerySpec(
             _q_minhash_lsh_pairs_k16,
-            _minhash_lsh_sql(16, 4),
+            minhash_lsh_sql(16, 4),
             "half-cost signature twin: MinHash(k=16) + LSH(4 bands), same "
             "r=4 band selectivity; recall/cost measured in SCALING.md",
         ),
@@ -909,48 +853,25 @@ from ..operators.similarity import (  # noqa: E402
     knn_label_vote,
 )
 
-# element/norm views shared by every embedding oracle: explicit DOUBLE
-# casts (DuckDB's list_cosine_similarity computes in float32 — not
-# oracle-safe against Spark's double fold)
-_SQL_EMB_BASE = """
-WITH elems AS (
-  SELECT vec_id, i, CAST(embedding[i] AS DOUBLE) AS x
-  FROM embeddings CROSS JOIN (SELECT unnest(generate_series(1, 64)) AS i)
-), norms AS (
-  SELECT vec_id, sqrt(sum(x * x)) AS nrm FROM elems GROUP BY vec_id
-)
-"""
-
 
 def _q_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     return cosine_topk(load_table(spark, sf_dir, "embeddings"), n_queries=10, k=5)
 
 
-_SQL_COSINE_TOPK = _SQL_EMB_BASE + """
+_SQL_COSINE_TOPK = SQL_EMB_BASE + """
 , dots AS (
   SELECT q.vec_id AS query_id, c.vec_id AS cand_id, sum(q.x * c.x) AS dot
   FROM elems q JOIN elems c ON q.i = c.i AND c.vec_id <> q.vec_id
   WHERE q.vec_id < 10
   GROUP BY 1, 2
-), sims AS (
-  SELECT query_id, cand_id, round(dot / (nq.nrm * nc.nrm), 6) AS sim
-  FROM dots
-  JOIN norms nq ON query_id = nq.vec_id
-  JOIN norms nc ON cand_id = nc.vec_id
-)
-SELECT query_id, cand_id, sim,
-       CAST(row_number() OVER (PARTITION BY query_id
-                               ORDER BY sim DESC, cand_id ASC) AS INT) AS rank
-FROM sims
-QUALIFY rank <= 5
-"""
+""" + SQL_COSINE_TOP5
 
 
 def _q_ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     return ann_lsh_topk(load_table(spark, sf_dir, "embeddings"), n_queries=10, k=5)
 
 
-_SQL_ANN_LSH_TOPK = _SQL_EMB_BASE + """
+_SQL_ANN_LSH_TOPK = SQL_EMB_BASE + """
 , planes AS (
   SELECT j, d,
          ((1103515245 * (j * 64 + (d - 1)) + 12345) % 2147483648) / 2147483648.0 - 0.5 AS wgt
@@ -989,7 +910,7 @@ def _q_embedding_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     return cosine_near_dup_pairs(load_table(spark, sf_dir, "embeddings"), threshold=0.4)
 
 
-_SQL_EMBEDDING_NEAR_DUP = _SQL_EMB_BASE + """
+_SQL_EMBEDDING_NEAR_DUP = SQL_EMB_BASE + """
 , dots AS (
   SELECT a.vec_id AS vec_a, b.vec_id AS vec_b, sum(a.x * b.x) AS dot
   FROM elems a JOIN elems b ON a.i = b.i AND a.vec_id < b.vec_id
@@ -1012,31 +933,6 @@ def _q_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         load_table(spark, sf_dir, "embeddings"), n_queries=10, k=5, n_cells=16, n_probe=4
     )
 
-
-#: shared oracle body ending in ``votes(query_id, label, votes)`` — the
-#: kNN vote tallies.  Named constant so knn_label_vote and the
-#: label-noise audit (plans/round4_ops.py) consume the same fragment.
-SQL_KNN_VOTES_BODY = _SQL_EMB_BASE + """
-, dots AS (
-  SELECT q.vec_id AS query_id, c.vec_id AS cand_id, sum(q.x * c.x) AS dot
-  FROM elems q JOIN elems c ON q.i = c.i AND c.vec_id <> q.vec_id
-  WHERE q.vec_id < 50
-  GROUP BY 1, 2
-), sims AS (
-  SELECT query_id, cand_id, round(dot / (nq.nrm * nc.nrm), 6) AS sim
-  FROM dots
-  JOIN norms nq ON query_id = nq.vec_id
-  JOIN norms nc ON cand_id = nc.vec_id
-), topk AS (
-  SELECT query_id, cand_id
-  FROM sims
-  QUALIFY row_number() OVER (PARTITION BY query_id ORDER BY sim DESC, cand_id ASC) <= 5
-), votes AS (
-  SELECT t.query_id, e.label, count(*) AS votes
-  FROM topk t JOIN embeddings e ON t.cand_id = e.vec_id
-  GROUP BY 1, 2
-)
-"""
 
 _SQL_KNN_LABEL_VOTE = SQL_KNN_VOTES_BODY + """
 SELECT query_id, label AS pred_label, votes
@@ -1082,15 +978,13 @@ from ..operators.text_quality import (  # noqa: E402
     token_stats,
 )
 
-_TOKS_SQL = "list_filter(string_split(text, ' '), x -> length(x) > 0)"
-
 
 def _q_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     return token_stats(load_table(spark, sf_dir, "documents"))
 
 
 _SQL_TOKEN_STATS = f"""
-WITH t AS (SELECT doc_id, text, {_TOKS_SQL} AS toks FROM documents)
+WITH t AS (SELECT doc_id, text, {TOKS_SQL} AS toks FROM documents)
 SELECT doc_id,
        length(text) AS n_chars,
        len(toks) AS n_ws_tokens,
@@ -1100,31 +994,10 @@ SELECT doc_id,
 FROM t
 """
 
-_EN_STOPS_SQL = ", ".join(f"'{w}'" for w in LANG_STOPWORDS["en"])
-
 
 def _q_quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     return quality_score(load_table(spark, sf_dir, "documents"))
 
-
-_SQL_QUALITY_SCORE = f"""
-WITH t AS (SELECT doc_id, text, {_TOKS_SQL} AS toks FROM documents),
-parts AS (
-  SELECT doc_id,
-         CAST(len(list_filter(toks, x -> x IN ({_EN_STOPS_SQL}))) AS DOUBLE)
-           / CAST(len(toks) AS DOUBLE) AS stop_frac,
-         least(1.0, CAST(len(toks) AS DOUBLE) / 100.0) AS len_score,
-         CAST(length(regexp_replace(text, '[^A-Za-z]', '', 'g')) AS DOUBLE)
-           / CAST(length(text) AS DOUBLE) AS alpha_frac
-  FROM t
-)
-SELECT doc_id,
-       round(stop_frac, 6) AS stop_frac,
-       round(len_score, 6) AS len_score,
-       round(alpha_frac, 6) AS alpha_frac,
-       round(0.4 * stop_frac + 0.3 * len_score + 0.3 * alpha_frac, 6) AS score
-FROM parts
-"""
 
 _LW_VALUES = ", ".join(
     f"('{lang}', '{w}')"
@@ -1144,7 +1017,7 @@ SQL_LANG_SCORED_BODY = f"""
 WITH lw(cand_lang, word) AS (VALUES {_LW_VALUES}),
 langs AS (SELECT DISTINCT cand_lang FROM lw),
 tokens AS (
-  SELECT doc_id, unnest({_TOKS_SQL}) AS word FROM documents
+  SELECT doc_id, unnest({TOKS_SQL}) AS word FROM documents
 ),
 n_tokens AS (SELECT doc_id, count(*) AS n_toks FROM tokens GROUP BY doc_id),
 hits AS (
@@ -1211,7 +1084,7 @@ _register(
             _q_token_stats, _SQL_TOKEN_STATS, "whitespace + regex token counting per doc"
         ),
         "quality_score": QuerySpec(
-            _q_quality_score, _SQL_QUALITY_SCORE, "stopword/length/alpha quality heuristic"
+            _q_quality_score, SQL_QUALITY_SCORE, "stopword/length/alpha quality heuristic"
         ),
         "language_id": QuerySpec(
             _q_language_id, _SQL_LANGUAGE_ID, "stopword-profile language identification"
@@ -1408,32 +1281,7 @@ WITH files AS (
 def _sql_api_log_ig(tok_cte: str, k: int) -> str:
     return _SQL_API_LOG_BASE + f"""
 {tok_cte}
-, dedup AS (
-  SELECT DISTINCT doc, cls, token FROM tok_ne
-), freq AS (
-  SELECT token,
-         count(*) FILTER (WHERE cls = 'pos') AS pos_df,
-         count(*) FILTER (WHERE cls = 'neg') AS neg_df
-  FROM dedup GROUP BY token
-), totals AS (
-  SELECT count(DISTINCT doc) FILTER (WHERE cls = 'pos') AS p,
-         count(DISTINCT doc) AS t
-  FROM docs
-), scored AS (
-  SELECT token, pos_df, neg_df,
-         round({_nan_to_zero_sql("ig_raw")}, 6) AS info_gain
-  FROM (
-    SELECT token, pos_df, neg_df,
-           {_IG_EXPR} AS ig_raw
-    FROM freq CROSS JOIN totals
-    WHERE pos_df > 0 AND neg_df > 0
-  )
-)
-SELECT token, pos_df, neg_df, info_gain,
-       CAST(row_number() OVER (ORDER BY info_gain DESC, token ASC) AS INT) AS rank
-FROM scored
-QUALIFY rank <= {k}
-"""
+, {_SQL_TOKEN_DF}, {_SQL_LOG_TOTALS}""" + _sql_ig_ranked(k)
 
 
 _SQL_API_LOG_INFO_GAIN = _sql_api_log_ig(
@@ -1604,27 +1452,9 @@ VOCAB_K = 100
 
 # the IG CTE chain (everything before final ranking) shared by the
 # vectorization oracles
-_SQL_IG_RANKED_VOCAB = f"""
-WITH tok AS (
-  SELECT doc_id AS doc,
-         CASE WHEN lang = 'en' THEN 'pos' ELSE 'neg' END AS cls,
-         unnest(string_split(text, ' ')) AS token
-  FROM documents
-), tok_ne AS (
-  SELECT * FROM tok WHERE length(token) > 0
-), dedup AS (
-  SELECT DISTINCT doc, cls, token FROM tok_ne
-), freq AS (
+_SQL_IG_RANKED_VOCAB = _SQL_DOC_IG_INPUTS + f""", scored AS (
   SELECT token,
-         count(*) FILTER (WHERE cls = 'pos') AS pos_df,
-         count(*) FILTER (WHERE cls = 'neg') AS neg_df
-  FROM dedup GROUP BY token
-), totals AS (
-  SELECT count(*) FILTER (WHERE lang = 'en') AS p, count(*) AS t
-  FROM documents
-), scored AS (
-  SELECT token,
-         round({_nan_to_zero_sql(_IG_EXPR)}, 6) AS info_gain
+         round({nan_to_zero_sql(_IG_EXPR)}, 6) AS info_gain
   FROM freq CROSS JOIN totals
   WHERE pos_df > 0 AND neg_df > 0
 ), vocab AS (
@@ -1991,19 +1821,8 @@ _SQL_API_LOG_FEATURE_JOB_E2E = _SQL_API_LOG_BASE + f"""
   SELECT doc, cls, regexp_replace(raw_line, '[ +\\-\\r]', '', 'g') AS token FROM docs
 ), tok_ne AS (
   SELECT * FROM tok WHERE length(token) > 0
-), dedup AS (
-  SELECT DISTINCT doc, cls, token FROM tok_ne
-), freq AS (
-  SELECT token,
-         count(*) FILTER (WHERE cls = 'pos') AS pos_df,
-         count(*) FILTER (WHERE cls = 'neg') AS neg_df
-  FROM dedup GROUP BY token
-), totals AS (
-  SELECT count(DISTINCT doc) FILTER (WHERE cls = 'pos') AS p,
-         count(DISTINCT doc) AS t
-  FROM docs
-), scored AS (
-  SELECT token, round({_nan_to_zero_sql("ig_raw")}, 6) AS info_gain
+), {_SQL_TOKEN_DF}, {_SQL_LOG_TOTALS}, scored AS (
+  SELECT token, round({nan_to_zero_sql("ig_raw")}, 6) AS info_gain
   FROM (
     SELECT token, pos_df, neg_df, {_IG_EXPR} AS ig_raw
     FROM freq CROSS JOIN totals
@@ -2254,14 +2073,6 @@ def _q_asof_last_purchase(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_SQL_ASOF_LAST_PURCHASE = """
-SELECT e.event_id, e.user_id, epoch_us(e.ts) AS ts_us, epoch_us(p.ts) AS last_purchase_us
-FROM events e
-ASOF LEFT JOIN (SELECT user_id, ts FROM events WHERE event_type = 'purchase') p
-  ON e.user_id = p.user_id AND e.ts >= p.ts
-"""
-
-
 def _q_anti_join_no_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Left-anti join against a FILTERED right side (urgent orders) —
     the filter keeps the result non-empty in the synthetic data, where
@@ -2352,7 +2163,7 @@ _register(
     {
         "asof_last_purchase": QuerySpec(
             _q_asof_last_purchase,
-            _SQL_ASOF_LAST_PURCHASE,
+            SQL_ASOF_LAST_PURCHASE,
             "as-of join via union+running-window (operators/asof.py) vs native "
             "DuckDB ASOF JOIN",
         ),
@@ -2551,28 +2362,6 @@ def _q_dedup_cluster_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     return dedup_clusters(minhash_lsh_pairs(docs, n=3, k=32, bands=8))
 
 
-# transitive closure of the (tiny) LSH pair graph via recursive CTE;
-# cluster id = min over each node's reachable set — exactly the
-# fixpoint min-label propagation computes
-_SQL_DEDUP_CLUSTER_ASSIGN = (
-    "WITH RECURSIVE pairs AS (\n"
-    + _SQL_MINHASH_LSH_PAIRS
-    + """
-), edges AS (
-  SELECT doc_a AS src, doc_b AS dst FROM pairs
-  UNION
-  SELECT doc_b AS src, doc_a AS dst FROM pairs
-), reach(src, dst) AS (
-  SELECT src, dst FROM edges
-  UNION
-  SELECT r.src, e.dst FROM reach r JOIN edges e ON r.dst = e.src
-)
-SELECT src AS doc_id, least(src, min(dst)) AS cluster_id
-FROM reach GROUP BY src
-"""
-)
-
-
 def _q_dedup_cluster_assign_two_phase(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Same components via large-star/small-star (Kiveris et al.) —
     O(log²n) rounds independent of diameter, the 100 TB path for
@@ -2588,7 +2377,7 @@ def _q_quantized_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     return quantized_cosine_topk(load_table(spark, sf_dir, "embeddings"), n_queries=10, k=5)
 
 
-_SQL_QUANTIZED_COSINE_TOPK = _SQL_EMB_BASE + """
+_SQL_QUANTIZED_COSINE_TOPK = SQL_EMB_BASE + """
 , scales AS (
   SELECT vec_id, max(abs(x)) AS s FROM elems GROUP BY vec_id
 ), q AS (
@@ -2640,13 +2429,13 @@ _register(
         ),
         "dedup_cluster_assign": QuerySpec(
             _q_dedup_cluster_assign,
-            _SQL_DEDUP_CLUSTER_ASSIGN,
+            SQL_DEDUP_CLUSTER_ASSIGN,
             "connected components over MinHash-LSH pairs: min-label propagation "
             "to fixpoint; cluster id = canonical (min) doc",
         ),
         "dedup_cluster_assign_two_phase": QuerySpec(
             _q_dedup_cluster_assign_two_phase,
-            _SQL_DEDUP_CLUSTER_ASSIGN,
+            SQL_DEDUP_CLUSTER_ASSIGN,
             "same components via large-star/small-star — O(log²n) rounds "
             "independent of diameter; oracle shared with the propagation twin",
         ),
@@ -2937,26 +2726,13 @@ def _q_dedup_survivors(spark: SparkSession, sf_dir: str) -> DataFrame:
     return dedup_survivors(docs, minhash_lsh_pairs(docs, n=3, k=32, bands=8))
 
 
-_SQL_DEDUP_SURVIVORS = (
-    "WITH RECURSIVE pairs AS (\n"
-    + _SQL_MINHASH_LSH_PAIRS
-    + """
-), edges AS (
-  SELECT doc_a AS src, doc_b AS dst FROM pairs
-  UNION
-  SELECT doc_b AS src, doc_a AS dst FROM pairs
-), reach(src, dst) AS (
-  SELECT src, dst FROM edges
-  UNION
-  SELECT r.src, e.dst FROM reach r JOIN edges e ON r.dst = e.src
-), assign AS (
+_SQL_DEDUP_SURVIVORS = SQL_LSH_REACH + """), assign AS (
   SELECT src AS doc_id, least(src, min(dst)) AS cluster_id
   FROM reach GROUP BY src
 )
 SELECT doc_id FROM documents
 WHERE doc_id NOT IN (SELECT doc_id FROM assign WHERE doc_id <> cluster_id)
 """
-)
 
 _register(
     {
@@ -3796,18 +3572,7 @@ def _q_bigram_pmi_top(spark: SparkSession, sf_dir: str) -> DataFrame:
     same pattern as the IG corpus totals).  Ordering for the top-k uses
     the ROUNDED pmi so the cut line is identical in both engines.
     """
-    docs = load_table(spark, sf_dir, "documents")
-    toks = docs.select(
-        F.expr("filter(split(text, ' '), t -> length(t) > 0)").alias("a")
-    ).where(F.expr("size(a) >= 2"))
-    pairs = toks.select(
-        F.explode(
-            F.expr(
-                "transform(sequence(1, size(a) - 1), "
-                "i -> struct(element_at(a, i) AS w1, element_at(a, i + 1) AS w2))"
-            )
-        ).alias("bg")
-    ).select("bg.w1", "bg.w2")
+    pairs = adjacent_bigrams(spark, sf_dir)
     cnt = pairs.groupBy("w1", "w2").agg(F.count(F.lit(1)).alias("c"))
     firsts = pairs.groupBy("w1").agg(F.count(F.lit(1)).alias("cx"))
     seconds = pairs.groupBy("w2").agg(F.count(F.lit(1)).alias("cy"))
@@ -3924,35 +3689,6 @@ def _q_embedding_covariance_cells(spark: SparkSession, sf_dir: str) -> DataFrame
     from ..ml.pca import covariance_cells
 
     return covariance_cells(load_table(spark, sf_dir, "embeddings"))
-
-
-_SQL_EMBEDDING_COVARIANCE_CELLS = """
-WITH pairs AS (
-  SELECT i, j,
-         CAST(embedding[i + 1] AS DOUBLE) * CAST(embedding[j + 1] AS DOUBLE) AS xy
-  FROM embeddings,
-       UNNEST(range(0, len(embedding))) t(i),
-       UNNEST(range(0, len(embedding))) u(j)
-  WHERE j >= i
-), cells AS (
-  SELECT i, j,
-         CAST(count(*) AS DOUBLE) AS n,
-         sum(CAST(xy AS DECIMAL(28,12))) AS sxy
-  FROM pairs GROUP BY 1, 2
-), grid AS (
-  SELECT i AS pos, CAST(embedding[i + 1] AS DOUBLE) AS xd
-  FROM embeddings, UNNEST(range(0, len(embedding))) t(i)
-), means AS (
-  SELECT pos,
-         CAST(sum(CAST(xd AS DECIMAL(28,12))) AS DOUBLE) / count(*) AS m
-  FROM grid GROUP BY pos
-)
-SELECT CAST(i AS INT) AS i, CAST(j AS INT) AS j,
-       round(CAST(sxy AS DOUBLE) / n - mi.m * mj.m, 6) + 0.0 AS cov
-FROM cells
-JOIN means mi ON i = mi.pos
-JOIN means mj ON j = mj.pos
-"""
 
 
 #: the engine's SQL-text surface: this exact ANSI string runs through
@@ -4121,7 +3857,7 @@ _register(
         ),
         "embedding_covariance_cells": QuerySpec(
             _q_embedding_covariance_cells,
-            _SQL_EMBEDDING_COVARIANCE_CELLS,
+            SQL_EMBEDDING_COVARIANCE_CELLS,
             "distributed d×d covariance aggregation (the PCA gram pass), "
             "DECIMAL-exact cells",
         ),
@@ -4360,7 +4096,7 @@ def _q_hard_negative_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_SQL_HARD_NEGATIVE_MINING = _SQL_EMB_BASE + """
+_SQL_HARD_NEGATIVE_MINING = SQL_EMB_BASE + """
 , lab AS (
   SELECT vec_id, label FROM embeddings
 ), dots AS (

@@ -35,6 +35,7 @@ from pyspark.sql.window import Window
 
 from ..sources.tables import load_table
 from .catalog import QuerySpec
+from .fragments import explode_bigrams
 from ..operators.caching import tracked_cache
 
 _W = 8  # span width (tokens)
@@ -154,15 +155,7 @@ def _q_bigram_lm_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_id", a.alias("_toks"))
         .select(
             "doc_id",
-            F.explode(
-                F.transform(
-                    F.sequence(F.lit(1), F.size("_toks") - 1),
-                    lambda i: F.struct(
-                        F.element_at(F.col("_toks"), i).alias("w1"),
-                        F.element_at(F.col("_toks"), i + 1).alias("w2"),
-                    ),
-                )
-            ).alias("bg"),
+            explode_bigrams(),
         )
         .select("doc_id", "bg.w1", "bg.w2")
         .transform(tracked_cache)

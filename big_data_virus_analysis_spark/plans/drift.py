@@ -281,6 +281,21 @@ FROM cdfs
 # Exact AUC via rank statistics (Mann–Whitney with midranks)
 # --------------------------------------------------------------------------
 
+def _norm_scored(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """``(vec_id, score, pos)``: the embedding's squared-L2 norm as the
+    score (per-row array fold, rounded to 6); task ``label < 5``."""
+    emb = load_table(spark, sf_dir, "embeddings")
+    xd = "CAST(x AS DOUBLE)"
+    score = F.round(
+        F.expr(f"aggregate(embedding, 0D, (acc, x) -> acc + {xd} * {xd})"), 6
+    )
+    return emb.select(
+        "vec_id",
+        score.alias("score"),
+        (F.col("label") < 5).cast("int").alias("pos"),
+    )
+
+
 def _q_auc_rank_based(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact ROC-AUC computed distributed from rank statistics — the
     Mann–Whitney identity: AUC = (Σ midranks of positives − n₊(n₊+1)/2)
@@ -294,16 +309,7 @@ def _q_auc_rank_based(spark: SparkSession, sf_dir: str) -> DataFrame:
     transparent relational plan with an exact oracle."""
     from ..operators.prefix_sum import global_row_number
 
-    emb = load_table(spark, sf_dir, "embeddings")
-    xd = "CAST(x AS DOUBLE)"
-    score = F.round(
-        F.expr(f"aggregate(embedding, 0D, (acc, x) -> acc + {xd} * {xd})"), 6
-    )
-    scored = emb.select(
-        "vec_id",
-        score.alias("score"),
-        (F.col("label") < 5).cast("int").alias("pos"),
-    )
+    scored = _norm_scored(spark, sf_dir)
     wt = Window.partitionBy("score")
     ranked = global_row_number(
         scored, [F.col("score"), F.col("vec_id")]
@@ -361,16 +367,7 @@ def _q_gains_by_score_decile(spark: SparkSession, sf_dir: str) -> DataFrame:
     stats are windows over the 10-row decile aggregate."""
     from ..operators.prefix_sum import ntile_from_rank, with_global_rank_and_count
 
-    emb = load_table(spark, sf_dir, "embeddings")
-    xd = "CAST(x AS DOUBLE)"
-    score = F.round(
-        F.expr(f"aggregate(embedding, 0D, (acc, x) -> acc + {xd} * {xd})"), 6
-    )
-    scored = emb.select(
-        "vec_id",
-        score.alias("score"),
-        (F.col("label") < 5).cast("int").alias("pos"),
-    )
+    scored = _norm_scored(spark, sf_dir)
     ranked = with_global_rank_and_count(
         scored, [F.col("score").desc(), F.col("vec_id").asc()]
     )

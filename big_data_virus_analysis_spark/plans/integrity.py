@@ -25,8 +25,8 @@ from pyspark.sql import functions as F
 
 from ..sources.tables import load_table
 from .catalog import QuerySpec
+from .fragments import DAY_US
 
-_DAY_US = 86_400_000_000
 _N_BUCKETS = 64
 #: events-fixture split day (2024-01-20): ~2/3 base, ~1/3 delta
 _SPLIT_DAY = 19_742
@@ -103,7 +103,7 @@ def _q_incremental_daily_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     Both partial aggregates shuffle on day_num; the merge join is
     day-cardinality-sized."""
     ev = load_table(spark, sf_dir, "events").select(
-        (F.unix_micros(F.col("ts")) / _DAY_US).cast("long").alias("day_num"),
+        (F.unix_micros(F.col("ts")) / DAY_US).cast("long").alias("day_num"),
         F.col("value").cast("decimal(18,6)").alias("v"),
     )
 

@@ -27,8 +27,7 @@ from pyspark.sql import functions as F
 
 from ..sources.tables import load_table
 from .catalog import QuerySpec
-
-_DAY_US = 86_400_000_000
+from .fragments import DAY_US
 
 
 # --------------------------------------------------------------------------
@@ -43,7 +42,7 @@ def _q_longest_active_streak(spark: SparkSession, sf_dir: str) -> DataFrame:
     user_id — one shuffle total."""
     ev = load_table(spark, sf_dir, "events").select(
         "user_id",
-        (F.unix_micros(F.col("ts")) / _DAY_US).cast("long").alias("day_num"),
+        (F.unix_micros(F.col("ts")) / DAY_US).cast("long").alias("day_num"),
     )
     days = ev.distinct()
     w = Window.partitionBy("user_id").orderBy("day_num")

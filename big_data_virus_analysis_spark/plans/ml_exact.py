@@ -44,6 +44,7 @@ from ..operators.entropy_score import weighted_average_entropy
 from ..operators.similarity import DIM, _l2sq, _plane_weight, ivf_topk_fixed
 from ..sources.tables import load_table
 from .catalog import QuerySpec
+from .fragments import SQL_COSINE_TOP5, SQL_WEIGHTED_ENTROPY_SCORE, fixed_plane_score
 
 LLOYD_K = 10
 SWEEP_KS = (5, 10, 15, 20)
@@ -176,17 +177,7 @@ _SQL_LLOYD_STEP_WEIGHTED_ENTROPY = _lloyd_sql_body(LLOYD_K) + """
   SELECT b.cell AS cluster, l.label, count(*) AS cnt
   FROM best b JOIN embeddings l ON b.vec_id = l.vec_id
   GROUP BY 1, 2
-), shares AS (
-  SELECT cnt,
-         CAST(cnt AS DOUBLE) / CAST(sum(cnt) OVER (PARTITION BY cluster) AS DOUBLE) AS p,
-         CAST(sum(cnt) OVER (PARTITION BY cluster) AS DOUBLE) AS s
-  FROM hist
-)
-SELECT round(
-  sum((CASE WHEN p > 0 THEN -p * ln(p) ELSE 0.0 END) * s) / CAST(sum(cnt) AS DOUBLE),
-  6) AS score
-FROM shares
-"""
+""" + SQL_WEIGHTED_ENTROPY_SCORE
 
 
 # --------------------------------------------------------------------------
@@ -252,15 +243,7 @@ def _q_fixed_scorer_auc(spark: SparkSession, sf_dir: str) -> DataFrame:
     computed by exact_auc_frame, the SAME aggregation the dt/svm/lr
     grids call for their metric column."""
     emb = load_table(spark, sf_dir, "embeddings")
-    plane = F.array(*[F.lit(_plane_weight(0, d)) for d in range(DIM)])
-    score = F.round(
-        F.aggregate(
-            F.zip_with(F.col("embedding"), plane, lambda x, wt: x.cast("double") * wt),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
-        ),
-        6,
-    )
+    score = fixed_plane_score()
     scored = emb.select(
         score.alias("score"), (F.col("label") < 5).cast("int").alias("pos")
     )
@@ -332,18 +315,7 @@ _SQL_IVF_ANN_TOPK_FIXED = _SQL_ELEMS + """
   JOIN elems q ON q.vec_id = cd.query_id
   JOIN elems c ON c.vec_id = cd.cand_id AND q.i = c.i
   GROUP BY 1, 2
-), sims AS (
-  SELECT query_id, cand_id, round(dot / (nq.nrm * nc.nrm), 6) AS sim
-  FROM dots
-  JOIN norms nq ON query_id = nq.vec_id
-  JOIN norms nc ON cand_id = nc.vec_id
-)
-SELECT query_id, cand_id, sim,
-       CAST(row_number() OVER (PARTITION BY query_id
-                               ORDER BY sim DESC, cand_id ASC) AS INT) AS rank
-FROM sims
-QUALIFY rank <= 5
-"""
+""" + SQL_COSINE_TOP5
 
 
 SPECS: dict[str, QuerySpec] = {

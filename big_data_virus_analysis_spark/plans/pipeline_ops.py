@@ -21,8 +21,7 @@ from pyspark.sql import functions as F
 
 from ..sources.tables import load_table
 from .catalog import QuerySpec
-
-_DAY_US = 86_400_000_000  # microseconds per day (tz-free day bucketing)
+from .fragments import DAY_US
 
 
 # --------------------------------------------------------------------------
@@ -131,7 +130,7 @@ def _q_gap_fill_daily_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
         load_table(spark, sf_dir, "events")
         .where(F.col("user_id") < 50)
         .select(
-            "user_id", (F.unix_micros(F.col("ts")) / _DAY_US).cast("long").alias("day_num")
+            "user_id", (F.unix_micros(F.col("ts")) / DAY_US).cast("long").alias("day_num")
         )
     )
     daily = ev.groupBy("user_id", "day_num").agg(F.count("*").alias("n_events"))

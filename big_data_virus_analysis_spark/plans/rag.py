@@ -38,7 +38,14 @@ from pyspark.sql.window import Window
 from ..functions.vectors import cosine_similarity
 from ..sources.tables import load_table
 from .catalog import QuerySpec
-from .retrieval import _QUERY_TERMS, _SQL_BM25_BODY, bm25_scores
+from .fragments import (
+    QUERY_TERMS,
+    SQL_BM25_BODY,
+    SQL_CENTROID_ASSIGN_BODY,
+    SQL_RAG_CHUNK_WINDOWS,
+    assign_nearest_centroid,
+    bm25_scores,
+)
 
 _CHUNK = 32
 _STRIDE = 16
@@ -84,28 +91,6 @@ def _q_rag_chunk_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_SQL_RAG_CHUNK_WINDOWS = """
-WITH t AS (
-  SELECT doc_id, list_filter(string_split(text, ' '), x -> length(x) > 0) AS a
-  FROM documents
-), c AS (
-  SELECT doc_id, a, len(a) AS n,
-         CASE WHEN len(a) <= 32 THEN 1
-              ELSE CAST(ceil((len(a) - 32) / 16.0) AS INT) + 1 END AS n_chunks
-  FROM t WHERE len(a) >= 1
-), e AS (
-  SELECT doc_id, a, unnest(generate_series(1, n_chunks)) AS i FROM c
-)
-SELECT doc_id,
-       CAST(i AS INT) AS chunk_idx,
-       CAST(1 + (i - 1) * 16 AS INT) AS start_pos,
-       CAST(len(a[(1 + (i - 1) * 16):(1 + (i - 1) * 16 + 31)]) AS INT) AS n_tokens,
-       md5(array_to_string(a[(1 + (i - 1) * 16):(1 + (i - 1) * 16 + 31)], ' '))
-         AS chunk_hash
-FROM e
-"""
-
-
 # --------------------------------------------------------------------------
 # rrf_hybrid_fusion
 # --------------------------------------------------------------------------
@@ -114,7 +99,7 @@ def _q_rrf_hybrid_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     # lexical list: BM25 conjunctive match, top-50 first (no global window)
     lex_top = (
         bm25_scores(spark, sf_dir)
-        .where(F.col("n_terms_hit") == len(_QUERY_TERMS))
+        .where(F.col("n_terms_hit") == len(QUERY_TERMS))
         .orderBy(F.col("bm25").desc(), F.col("doc_id").asc())
         .limit(_TOP_IN)
     )
@@ -166,7 +151,7 @@ def _q_rrf_hybrid_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_SQL_RRF_HYBRID_FUSION = _SQL_BM25_BODY + """
+_SQL_RRF_HYBRID_FUSION = SQL_BM25_BODY + """
 , lex AS (
   SELECT doc_id AS item_id,
          CAST(row_number() OVER (ORDER BY bm25 DESC, doc_id ASC) AS INT) AS rank_lex
@@ -209,54 +194,6 @@ QUALIFY rank <= 20
 # nearest_centroid_assign
 # --------------------------------------------------------------------------
 
-def assign_nearest_centroid(emb: DataFrame) -> DataFrame:
-    """Assign every embedding to its nearest per-label centroid.
-
-    Deterministic "trained-free" quantizer: centroids are per-label
-    means (decimal-exact sums rounded to 6, so both engines agree
-    bit-for-bit), distances are squared L2 via a zip_with fold, the
-    argmin is a vec_id-partitioned window with clabel tiebreak.  The
-    centroid table is #labels rows → broadcast; the corpus streams
-    through one scan.  Shared by the confusion rollup below and the
-    SemDeDup pack (plans/semantic.py).
-
-    Output: the input columns + ``clabel`` (assigned centroid) +
-    ``dist`` (rounded squared L2).
-    """
-    ex = emb.select("label", F.posexplode(F.col("embedding")).alias("pos", "x"))
-    cent = ex.groupBy("label", "pos").agg(
-        F.round(
-            F.sum(F.col("x").cast("decimal(18,9)")).cast("double") / F.count(F.lit(1)),
-            6,
-        ).alias("c")
-    )
-    cvec = cent.groupBy("label").agg(
-        F.transform(
-            F.array_sort(F.collect_list(F.struct("pos", "c"))), lambda s: s["c"]
-        ).alias("cvec")
-    )
-    dist = F.round(
-        F.aggregate(
-            F.zip_with(
-                F.col("embedding"),
-                F.col("cvec"),
-                lambda x, c: (x.cast("double") - c) * (x.cast("double") - c),
-            ),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
-        ),
-        6,
-    )
-    w = Window.partitionBy("vec_id").orderBy(F.col("dist").asc(), F.col("clabel").asc())
-    return (
-        emb.crossJoin(F.broadcast(cvec.select(F.col("label").alias("clabel"), "cvec")))
-        .withColumn("dist", dist)
-        .withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") == 1)
-        .drop("rn", "cvec")
-    )
-
-
 def _q_nearest_centroid_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
     assigned = assign_nearest_centroid(emb)
@@ -265,30 +202,6 @@ def _q_nearest_centroid_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count(F.lit(1)).alias("n"))
     )
 
-
-#: shared oracle body: per-label centroids + nearest-centroid argmin —
-#: ends with a ``best(vec_id, label, clabel)`` CTE.  Reused by the
-#: SemDeDup oracles (plans/semantic.py), which append further CTEs.
-SQL_CENTROID_ASSIGN_BODY = """
-WITH elems AS (
-  SELECT vec_id, label, i, CAST(embedding[i] AS DOUBLE) AS x
-  FROM embeddings CROSS JOIN (SELECT unnest(generate_series(1, 64)) AS i)
-), cent AS (
-  SELECT label AS clabel, i,
-         round(CAST(sum(CAST(x AS DECIMAL(18,9))) AS DOUBLE) / count(*), 6) AS c
-  FROM elems GROUP BY 1, 2
-), dists AS (
-  SELECT e.vec_id, e.label, cent.clabel,
-         round(sum((e.x - cent.c) * (e.x - cent.c)), 6) AS dist
-  FROM elems e JOIN cent ON e.i = cent.i
-  GROUP BY 1, 2, 3
-), best AS (
-  SELECT vec_id, label, clabel
-  FROM dists
-  QUALIFY row_number() OVER (PARTITION BY vec_id
-                             ORDER BY dist ASC, clabel ASC) = 1
-)
-"""
 
 _SQL_NEAREST_CENTROID_ASSIGN = SQL_CENTROID_ASSIGN_BODY + """
 SELECT label, clabel AS assigned_label, count(*) AS n
@@ -299,7 +212,7 @@ FROM best GROUP BY 1, 2
 SPECS: dict[str, QuerySpec] = {
     "rag_chunk_windows": QuerySpec(
         _q_rag_chunk_windows,
-        _SQL_RAG_CHUNK_WINDOWS,
+        SQL_RAG_CHUNK_WINDOWS,
         "overlapping token-window chunking (size 32 / stride 16, tail kept): "
         "pure per-row array transform + explode, zero shuffles",
     ),

@@ -60,6 +60,7 @@ from pyspark.sql import functions as F
 
 from ..sources.tables import load_table
 from .catalog import QuerySpec
+from .fragments import event_type_codes, user_code_streams
 
 #: Belady/LRU audit cache size
 CACHE_K = 3
@@ -73,33 +74,7 @@ def _per_user_streams(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(user_id, evs): the (ts, event_id)-ordered type-code stream.
     Type codes are the alphabetical rank of the event_type."""
     ev = load_table(spark, sf_dir, "events")
-    types = (
-        ev.select("event_type")
-        .distinct()
-        .select(
-            "event_type",
-            F.expr(
-                "CAST(rank() OVER (ORDER BY event_type) AS BIGINT)"
-            ).alias("tc"),
-        )
-    )
-    return (
-        ev.join(F.broadcast(types), "event_type")
-        .select(
-            "user_id",
-            F.unix_micros("ts").alias("tsu"),
-            F.col("event_id").cast("bigint").alias("eid"),
-            "tc",
-        )
-        .groupBy("user_id")
-        .agg(
-            F.expr(
-                "transform(sort_array(collect_list(named_struct("
-                "'tsu', tsu, 'eid', eid, 'tc', tc))), s -> s.tc)"
-            ).alias("evs"),
-            F.count(F.lit(1)).alias("n_events"),
-        )
-    )
+    return user_code_streams(ev, event_type_codes(ev))
 
 
 def _q_lru_stack_distance_hit_curve(
@@ -216,16 +191,7 @@ def _q_belady_opt_vs_lru_audit(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     ev = load_table(spark, sf_dir, "events")
-    types = (
-        ev.select("event_type")
-        .distinct()
-        .select(
-            "event_type",
-            F.expr(
-                "CAST(rank() OVER (ORDER BY event_type) AS BIGINT)"
-            ).alias("tc"),
-        )
-    )
+    types = event_type_codes(ev)
     from pyspark.sql import Window
 
     wu = Window.partitionBy("user_id").orderBy("tsu", "eid")

@@ -55,56 +55,27 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.caching import tracked_cache
-from ..sources.tables import load_table
 from .catalog import QuerySpec
-
-
-def _monthly_points(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Distinct monthly (qty, cents) points — duplicates collapse so
-    the hull predicate's strict inequalities stay well-defined."""
-    li = load_table(spark, sf_dir, "lineitem")
-    return (
-        li.groupBy(F.date_trunc("month", "l_shipdate").alias("month"))
-        .agg(
-            F.sum(F.col("l_quantity").cast("bigint")).alias("x"),
-            F.sum(
-                F.expr(
-                    "CAST(round(l_extendedprice * 100, 0) AS BIGINT)"
-                )
-            ).alias("y"),
-        )
-        .select("x", "y")
-        .distinct()
-    )
+from .fragments import (
+    HULL_CROSS,
+    HULL_DOT,
+    HULL_LEN2,
+    HULL_NOT_PQ,
+    HULL_OK,
+    SQL_MONTHLY_POINTS,
+    daily_revenue_points,
+    monthly_points,
+)
 
 
 def _q_convex_hull_monthly(spark: SparkSession, sf_dir: str) -> DataFrame:
-    pts = tracked_cache(_monthly_points(spark, sf_dir))
+    pts = tracked_cache(monthly_points(spark, sf_dir))
     p = pts.select(F.col("x").alias("px"), F.col("y").alias("py"))
     q = pts.select(F.col("x").alias("qx"), F.col("y").alias("qy"))
     r = pts.select(F.col("x").alias("rx"), F.col("y").alias("ry"))
     pairs = p.join(q, (F.col("px") != F.col("qx")) | (F.col("py") != F.col("qy")))
     # witness r kills the edge unless strictly CCW or strictly inside
-    # the segment; DECIMAL(38,0) products (round9_absorb discipline)
-    dec = "CAST({} AS DECIMAL(38,0))"
-    cross = (
-        f"({dec.format('qx - px')} * {dec.format('ry - py')}"
-        f" - {dec.format('qy - py')} * {dec.format('rx - px')})"
-    )
-    dot = (
-        f"({dec.format('qx - px')} * {dec.format('rx - px')}"
-        f" + {dec.format('qy - py')} * {dec.format('ry - py')})"
-    )
-    len2 = (
-        f"({dec.format('qx - px')} * {dec.format('qx - px')}"
-        f" + {dec.format('qy - py')} * {dec.format('qy - py')})"
-    )
-    ok = (
-        f"({cross} > 0 OR ({cross} = 0 AND {dot} > 0 AND {dot} < {len2}))"
-    )
-    not_pq = (
-        "((rx != px OR ry != py) AND (rx != qx OR ry != qy))"
-    )
+    # the segment (HULL_OK)
     # overflow sentinel (r10 ADVICE #5): Spark DECIMAL(38,0) arithmetic
     # returns NULL on overflow (non-ANSI), which would make
     # "rx IS NOT NULL AND NOT ok" NULL and silently ADMIT spurious hull
@@ -112,13 +83,15 @@ def _q_convex_hull_monthly(spark: SparkSession, sf_dir: str) -> DataFrame:
     # NULL products per edge and emit the corpus total in-band — a
     # future scale excursion reads as overflow_nulls > 0 instead of a
     # corrupted hull.  (Magnitudes today are budgeted well under 1e38.)
-    null_prod = f"({cross} IS NULL OR {dot} IS NULL OR {len2} IS NULL)"
+    null_prod = (
+        f"({HULL_CROSS} IS NULL OR {HULL_DOT} IS NULL OR {HULL_LEN2} IS NULL)"
+    )
     grp = tracked_cache(
-        pairs.join(r, F.expr(not_pq), "left")
+        pairs.join(r, F.expr(HULL_NOT_PQ), "left")
         .groupBy("px", "py", "qx", "qy")
         .agg(
             F.sum(
-                F.when(F.expr(f"rx IS NOT NULL AND NOT {ok}"), 1).otherwise(0)
+                F.when(F.expr(f"rx IS NOT NULL AND NOT {HULL_OK}"), 1).otherwise(0)
             ).alias("violations"),
             F.sum(
                 F.when(F.expr(f"rx IS NOT NULL AND {null_prod}"), 1).otherwise(
@@ -149,7 +122,7 @@ def _q_convex_hull_monthly(spark: SparkSession, sf_dir: str) -> DataFrame:
             # DuckDB HUGEINT->VARCHAR both render plain digits; the
             # string class is driver-render-stable at any magnitude)
             F.expr(
-                f"CAST(CAST({len2} AS DECIMAL(38,0)) AS STRING)"
+                f"CAST(CAST({HULL_LEN2} AS DECIMAL(38,0)) AS STRING)"
             ).alias("edge_len2"),
             "n_points",
             "overflow_nulls",
@@ -159,17 +132,8 @@ def _q_convex_hull_monthly(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out
 
 
-_SQL_CONVEX_HULL = """
-WITH pts AS MATERIALIZED (
-  SELECT DISTINCT
-         CAST(sum(CAST(l_quantity AS BIGINT))
-              OVER (PARTITION BY date_trunc('month', l_shipdate))
-              AS BIGINT) AS x,
-         CAST(sum(CAST(round(l_extendedprice * 100, 0) AS BIGINT))
-              OVER (PARTITION BY date_trunc('month', l_shipdate))
-              AS BIGINT) AS y
-  FROM lineitem
-), pairs AS MATERIALIZED (
+_SQL_CONVEX_HULL = f"""
+{SQL_MONTHLY_POINTS}, pairs AS MATERIALIZED (
   SELECT p.x AS px, p.y AS py, q.x AS qx, q.y AS qy
   FROM pts p, pts q
   WHERE p.x != q.x OR p.y != q.y
@@ -225,20 +189,7 @@ ORDER BY px, py, qx, qy
 
 def _daily_points(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Distinct daily (epoch-day, cents) points from orders."""
-    o = load_table(spark, sf_dir, "orders")
-    return (
-        o.groupBy(F.col("o_orderdate").cast("date").alias("day"))
-        .agg(
-            F.sum(
-                F.expr("CAST(round(o_totalprice * 100, 0) AS BIGINT)")
-            ).alias("y")
-        )
-        .select(
-            F.datediff("day", F.lit("1970-01-01")).cast("bigint").alias("x"),
-            "y",
-        )
-        .distinct()
-    )
+    return daily_revenue_points(spark, sf_dir).distinct()
 
 
 def _q_closest_pair_strip(spark: SparkSession, sf_dir: str) -> DataFrame:

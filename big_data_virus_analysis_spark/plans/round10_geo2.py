@@ -39,13 +39,13 @@ from pyspark.sql import functions as F
 
 from ..operators.caching import tracked_cache
 from .catalog import QuerySpec
-from .round10_geo import _monthly_points
+from .fragments import HULL_NOT_PQ, HULL_OK, SQL_MONTHLY_POINTS, monthly_points
 
 
 def _q_farthest_pair_diameter(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    pts = tracked_cache(_monthly_points(spark, sf_dir))
+    pts = tracked_cache(monthly_points(spark, sf_dir))
     p = pts.select(F.col("x").alias("px"), F.col("y").alias("py"))
     q = pts.select(F.col("x").alias("qx"), F.col("y").alias("qy"))
     r = pts.select(F.col("x").alias("rx"), F.col("y").alias("ry"))
@@ -53,27 +53,12 @@ def _q_farthest_pair_diameter(
         F.broadcast(q),
         (F.col("px") != F.col("qx")) | (F.col("py") != F.col("qy")),
     )
-    dec = "CAST({} AS DECIMAL(38,0))"
-    cross = (
-        f"({dec.format('qx - px')} * {dec.format('ry - py')}"
-        f" - {dec.format('qy - py')} * {dec.format('rx - px')})"
-    )
-    dot = (
-        f"({dec.format('qx - px')} * {dec.format('rx - px')}"
-        f" + {dec.format('qy - py')} * {dec.format('ry - py')})"
-    )
-    len2 = (
-        f"({dec.format('qx - px')} * {dec.format('qx - px')}"
-        f" + {dec.format('qy - py')} * {dec.format('qy - py')})"
-    )
-    ok = f"({cross} > 0 OR ({cross} = 0 AND {dot} > 0 AND {dot} < {len2}))"
-    not_pq = "((rx != px OR ry != py) AND (rx != qx OR ry != qy))"
     hull_vertices = (
-        pairs.join(F.broadcast(r), F.expr(not_pq), "left")
+        pairs.join(F.broadcast(r), F.expr(HULL_NOT_PQ), "left")
         .groupBy("px", "py", "qx", "qy")
         .agg(
             F.sum(
-                F.when(F.expr(f"rx IS NOT NULL AND NOT {ok}"), 1).otherwise(0)
+                F.when(F.expr(f"rx IS NOT NULL AND NOT {HULL_OK}"), 1).otherwise(0)
             ).alias("violations")
         )
         .filter(F.col("violations") == 0)
@@ -123,17 +108,8 @@ def _q_farthest_pair_diameter(
     )
 
 
-_SQL_FARTHEST_PAIR = """
-WITH pts AS MATERIALIZED (
-  SELECT DISTINCT
-         CAST(sum(CAST(l_quantity AS BIGINT))
-              OVER (PARTITION BY date_trunc('month', l_shipdate))
-              AS BIGINT) AS x,
-         CAST(sum(CAST(round(l_extendedprice * 100, 0) AS BIGINT))
-              OVER (PARTITION BY date_trunc('month', l_shipdate))
-              AS BIGINT) AS y
-  FROM lineitem
-), pairs AS MATERIALIZED (
+_SQL_FARTHEST_PAIR = f"""
+{SQL_MONTHLY_POINTS}, pairs AS MATERIALIZED (
   -- the oracle never builds a hull: all-pairs max (the theorem is
   -- what the hash match verifies)
   SELECT a.x AS ax, a.y AS ay, b.x AS bx, b.y AS by_,

@@ -42,6 +42,7 @@ from pyspark.sql import functions as F
 from ..operators.caching import tracked_cache
 from ..sources.tables import load_table
 from .catalog import QuerySpec
+from .fragments import event_type_codes, user_code_streams
 
 #: the Boyer-Moore fold: acc = [candidate_code, counter]
 _BM_FOLD = """aggregate(
@@ -59,34 +60,11 @@ def _q_boyer_moore_majority_events(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     ev = load_table(spark, sf_dir, "events")
-    types = tracked_cache(  # |alphabet|-row dictionary, reused twice
-        ev.select("event_type")
-        .distinct()
-        .select(
-            "event_type",
-            F.expr(
-                "CAST(rank() OVER (ORDER BY event_type) AS BIGINT)"
-            ).alias("tc"),
-        )
-    )
+    types = tracked_cache(event_type_codes(ev))  # reused twice
     # one aggregate builds the stream; the fold AND the classical
     # second pass (candidate occurrence count) run in one projection
     per = (
-        ev.join(F.broadcast(types), "event_type")
-        .select(
-            "user_id",
-            F.unix_micros("ts").alias("tsu"),
-            F.col("event_id").cast("bigint").alias("eid"),
-            "tc",
-        )
-        .groupBy("user_id")
-        .agg(
-            F.expr(
-                "transform(sort_array(collect_list(named_struct("
-                "'tsu', tsu, 'eid', eid, 'tc', tc))), s -> s.tc)"
-            ).alias("evs"),
-            F.count(F.lit(1)).alias("n_events"),
-        )
+        user_code_streams(ev, types)
         .select(
             "n_events",
             F.expr(f"element_at({_BM_FOLD}, 1)").alias("cand"),

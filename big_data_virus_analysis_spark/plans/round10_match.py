@@ -50,8 +50,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.caching import tracked_cache
-from ..sources.tables import load_table
 from .catalog import QuerySpec
+from .fragments import SQL_RC_PERMUTATIONS, SQL_SEGMENT_REGION_REV, segment_region_cells
 
 #: side size (5 market segments x 5 regions) and the proposal bound
 N_SIDE = 5
@@ -100,53 +100,10 @@ _GS_FOLD = f"""aggregate(
     1))"""
 
 
-def _cells(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The 25-cell preference frame: codes, cents, both ranks."""
-    from pyspark.sql import Window
-
-    o = load_table(spark, sf_dir, "orders")
-    c = load_table(spark, sf_dir, "customer")
-    n = load_table(spark, sf_dir, "nation")
-    r = load_table(spark, sf_dir, "region")
-    rev = (
-        o.join(F.broadcast(c), o.o_custkey == c.c_custkey)
-        .join(F.broadcast(n), c.c_nationkey == n.n_nationkey)
-        .join(F.broadcast(r), n.n_regionkey == r.r_regionkey)
-        .groupBy(
-            F.col("c_mktsegment").alias("segment"),
-            F.col("r_name").alias("region"),
-        )
-        .agg(
-            F.sum(
-                F.expr("CAST(round(o_totalprice * 100, 0) AS BIGINT)")
-            ).alias("cents")
-        )
-    )
-    ws = Window.partitionBy("segment").orderBy(
-        F.desc("cents"), F.asc("region")
-    )
-    wr = Window.partitionBy("region").orderBy(
-        F.desc("cents"), F.asc("segment")
-    )
-    return rev.select(
-        "segment",
-        "region",
-        "cents",
-        F.expr(
-            "CAST(dense_rank() OVER (ORDER BY segment) AS INT)"
-        ).alias("sc"),
-        F.expr(
-            "CAST(dense_rank() OVER (ORDER BY region) AS INT)"
-        ).alias("rc"),
-        F.row_number().over(ws).cast("bigint").alias("seg_rank"),
-        F.row_number().over(wr).cast("bigint").alias("reg_rank"),
-    )
-
-
 def _q_stable_matching_segments_regions(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    cells = tracked_cache(_cells(spark, sf_dir))
+    cells = tracked_cache(segment_region_cells(spark, sf_dir))
     one = cells.agg(
         # pref[s][k] = region code of segment s's k-th choice (rank
         # ascending via the struct sort key)
@@ -230,17 +187,8 @@ def _q_stable_matching_segments_regions(
     )
 
 
-_SQL_STABLE_MATCHING = """
-WITH rev AS MATERIALIZED (
-  SELECT c.c_mktsegment AS segment, r.r_name AS region,
-         CAST(sum(CAST(round(o.o_totalprice * 100, 0) AS BIGINT))
-              AS BIGINT) AS cents
-  FROM orders o
-  JOIN customer c ON o.o_custkey = c.c_custkey
-  JOIN nation n ON c.c_nationkey = n.n_nationkey
-  JOIN region r ON n.n_regionkey = r.r_regionkey
-  GROUP BY 1, 2
-), cells AS MATERIALIZED (
+_SQL_STABLE_MATCHING = f"""
+{SQL_SEGMENT_REGION_REV}, cells AS MATERIALIZED (
   SELECT segment, region, cents,
          CAST(dense_rank() OVER (ORDER BY segment) AS INT) AS sc,
          CAST(dense_rank() OVER (ORDER BY region) AS INT) AS rc,
@@ -254,21 +202,7 @@ WITH rev AS MATERIALIZED (
 ), rcodes AS MATERIALIZED (SELECT DISTINCT rc FROM cells),
 perms AS MATERIALIZED (
   -- all 5! = 120 perfect matchings, relationally
-  SELECT row_number() OVER (
-           ORDER BY a.rc, b.rc, c.rc, d.rc, e.rc) AS pid,
-         a.rc AS r1, b.rc AS r2, c.rc AS r3, d.rc AS r4, e.rc AS r5
-  FROM rcodes a, rcodes b, rcodes c, rcodes d, rcodes e
-  WHERE a.rc != b.rc AND a.rc != c.rc AND a.rc != d.rc
-    AND a.rc != e.rc AND b.rc != c.rc AND b.rc != d.rc
-    AND b.rc != e.rc AND c.rc != d.rc AND c.rc != e.rc
-    AND d.rc != e.rc
-), assigned AS MATERIALIZED (
-  SELECT pid, 1 AS sc, r1 AS rc FROM perms
-  UNION ALL SELECT pid, 2, r2 FROM perms
-  UNION ALL SELECT pid, 3, r3 FROM perms
-  UNION ALL SELECT pid, 4, r4 FROM perms
-  UNION ALL SELECT pid, 5, r5 FROM perms
-), ranked_assign AS MATERIALIZED (
+{SQL_RC_PERMUTATIONS}, ranked_assign AS MATERIALIZED (
   SELECT a.pid, a.sc, a.rc, k.seg_rank, k.reg_rank
   FROM assigned a JOIN cells k ON k.sc = a.sc AND k.rc = a.rc
 ), blocking AS MATERIALIZED (

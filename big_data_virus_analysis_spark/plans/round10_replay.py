@@ -59,9 +59,8 @@ from pyspark.sql import functions as F
 
 from ..sources.tables import load_table
 from .catalog import QuerySpec
+from .fragments import IVL_SEC_PER_CHAR, event_interval
 
-#: activity seconds per character of event_type (duration by type)
-IVL_SEC_PER_CHAR = 300
 #: token bucket: capacity and refill rate in micro-tokens (1 request
 #: costs 1_000_000; rate 120/s means one token every ~2.3 hours — slow
 #: enough that session bursts visibly throttle)
@@ -78,12 +77,7 @@ def _q_interval_greedy_sessions(
     per = (
         ev.select(
             "user_id",
-            F.unix_micros("ts").alias("st"),
-            (
-                F.unix_micros("ts")
-                + F.length("event_type").cast("bigint")
-                * (IVL_SEC_PER_CHAR * 1_000_000)
-            ).alias("fin"),
+            *event_interval(),
         )
         .groupBy("user_id")
         .agg(

@@ -55,23 +55,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..sources.tables import load_table
 from .catalog import QuerySpec
+from .fragments import daily_revenue_cents
 
 #: machine count for the greedy folds (a fixed cluster shape)
 SCHED_M = 8
-
-
-def _day_jobs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(day, cents): one job per calendar day of order revenue."""
-    o = load_table(spark, sf_dir, "orders")
-    return o.groupBy(
-        F.col("o_orderdate").cast("date").alias("day")
-    ).agg(
-        F.sum(
-            F.expr("CAST(round(o_totalprice * 100, 0) AS BIGINT)")
-        ).alias("cents")
-    )
 
 
 def _fold_expr(jobs_col: str) -> str:
@@ -105,7 +93,7 @@ _SQL_SORTS = {
 
 
 def _q_lpt_makespan_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
-    one = _day_jobs(spark, sf_dir).agg(
+    one = daily_revenue_cents(spark, sf_dir).agg(
         F.expr(_SORTS["lpt"]).alias("jobs"),
         F.count(F.lit(1)).alias("n_jobs"),
         F.sum("cents").alias("total_cents"),
@@ -144,7 +132,7 @@ def _q_lpt_makespan_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _q_makespan_strategy_audit(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    one = _day_jobs(spark, sf_dir).agg(
+    one = daily_revenue_cents(spark, sf_dir).agg(
         F.expr(_SORTS["lpt"]).alias("jl"),
         F.expr(_SORTS["online"]).alias("jo"),
         F.expr(_SORTS["spt"]).alias("js"),

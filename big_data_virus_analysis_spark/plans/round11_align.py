@@ -62,11 +62,9 @@ from pyspark.sql import functions as F
 from ..operators.caching import tracked_cache
 from ..operators.dedup import minhash_band_keys, word_ngrams
 from ..sources.tables import load_table
-from .catalog import QuerySpec, _TRIGRAM_CTES, _minhash_sig_ctes
+from .catalog import QuerySpec
+from .fragments import N_EVAL, SQL_SHINGLE_IDS, minhash_sig_ctes
 
-#: eval corpus = doc_id < N_EVAL (plans/contamination.py convention,
-#: widened so the best-match table has real spread at sf0.01+)
-N_EVAL = 20
 #: MinHash geometry — identical to the dedup flagship (k=32, 8 bands)
 MH_K = 32
 MH_BANDS = 8
@@ -262,29 +260,15 @@ def _q_eval_lsh_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --------------------------------------------------------------------------
 # DuckDB oracle twins — md5 signature family shared with the dedup
-# flagship (catalog._minhash_sig_ctes), split cross-corpus
+# flagship (fragments.minhash_sig_ctes), split cross-corpus
 # --------------------------------------------------------------------------
-
-_SQL_GRAM_IDS = f"""
-WITH {_TRIGRAM_CTES}, dg AS (
-  SELECT DISTINCT doc_id, gram FROM grams
-), ids AS (
-  -- tid = md5-prefix BIGINT (bit-identical to Spark's conv(substring(md5)..));
-  -- reduce mod 2^31 before the multiply so the product stays < 2^63
-  SELECT doc_id,
-         ((CAST(('0x' || substr(md5(gram), 1, 15)) AS BIGINT) % 2147483648)
-          * 2654435761) % 2147483648 AS s
-  FROM dg
-)
-"""
-
 
 def _sql_scored_ctes() -> str:
     """CTEs through ``scored(train_doc, eval_doc, n_shared_bands,
     jaccard_micro)`` — the relational twin of _scored_candidates."""
     return (
-        _SQL_GRAM_IDS
-        + _minhash_sig_ctes(MH_K, MH_K // MH_BANDS)
+        SQL_SHINGLE_IDS
+        + minhash_sig_ctes(MH_K, MH_K // MH_BANDS)
         + f""", cand AS MATERIALIZED (
   SELECT t.doc_id AS train_doc, e.doc_id AS eval_doc,
          CAST(count(*) AS BIGINT) AS n_shared_bands

@@ -43,7 +43,7 @@ from pyspark.sql import functions as F
 
 from ..operators.caching import tracked_cache
 from .catalog import QuerySpec
-from .round10_match import _cells
+from .fragments import SQL_RC_PERMUTATIONS, SQL_SEGMENT_REGION_REV, segment_region_cells
 
 #: subset-DP over segments 1..5 with the 32-entry dp vector carried;
 #: v is the row-major 25-value grid (index (s-1)*5 + r + 1)
@@ -83,7 +83,7 @@ _GREEDY_FOLD = """aggregate(
 def _q_assignment_max_revenue(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    cells = tracked_cache(_cells(spark, sf_dir))
+    cells = tracked_cache(segment_region_cells(spark, sf_dir))
     one = cells.agg(
         F.expr(
             "transform(sort_array(collect_list(struct("
@@ -118,17 +118,8 @@ def _q_assignment_max_revenue(
     )
 
 
-_SQL_ASSIGNMENT = """
-WITH rev AS MATERIALIZED (
-  SELECT c.c_mktsegment AS segment, r.r_name AS region,
-         CAST(sum(CAST(round(o.o_totalprice * 100, 0) AS BIGINT))
-              AS BIGINT) AS cents
-  FROM orders o
-  JOIN customer c ON o.o_custkey = c.c_custkey
-  JOIN nation n ON c.c_nationkey = n.n_nationkey
-  JOIN region r ON n.n_regionkey = r.r_regionkey
-  GROUP BY 1, 2
-), cells AS MATERIALIZED (
+_SQL_ASSIGNMENT = f"""
+{SQL_SEGMENT_REGION_REV}, cells AS MATERIALIZED (
   SELECT segment, region, cents,
          CAST(dense_rank() OVER (ORDER BY segment) AS INT) AS sc,
          CAST(dense_rank() OVER (ORDER BY region) AS INT) AS rc
@@ -137,21 +128,7 @@ WITH rev AS MATERIALIZED (
 perms AS MATERIALIZED (
   -- brute force over all 5! = 120 perfect matchings: the
   -- algorithmically independent check on the Spark subset DP
-  SELECT row_number() OVER (
-           ORDER BY a.rc, b.rc, c.rc, d.rc, e.rc) AS pid,
-         a.rc AS r1, b.rc AS r2, c.rc AS r3, d.rc AS r4, e.rc AS r5
-  FROM rcodes a, rcodes b, rcodes c, rcodes d, rcodes e
-  WHERE a.rc != b.rc AND a.rc != c.rc AND a.rc != d.rc
-    AND a.rc != e.rc AND b.rc != c.rc AND b.rc != d.rc
-    AND b.rc != e.rc AND c.rc != d.rc AND c.rc != e.rc
-    AND d.rc != e.rc
-), assigned AS MATERIALIZED (
-  SELECT pid, 1 AS sc, r1 AS rc FROM perms
-  UNION ALL SELECT pid, 2, r2 FROM perms
-  UNION ALL SELECT pid, 3, r3 FROM perms
-  UNION ALL SELECT pid, 4, r4 FROM perms
-  UNION ALL SELECT pid, 5, r5 FROM perms
-), ptot AS MATERIALIZED (
+{SQL_RC_PERMUTATIONS}, ptot AS MATERIALIZED (
   SELECT a.pid, CAST(sum(k.cents) AS BIGINT) AS tot
   FROM assigned a JOIN cells k ON k.sc = a.sc AND k.rc = a.rc
   GROUP BY a.pid

@@ -42,15 +42,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..operators.dedup import ngram_jaccard_pairs
 from ..sources.tables import load_table
-from .catalog import QuerySpec, _TRIGRAM_CTES
-
-#: edit-distance prefix cap — the per-pair DP is ED_MAX_CHARS² steps,
-#: corpus-independent
-ED_MAX_CHARS = 128
-#: candidate floor: the dedup family's threshold-sweep floor
-ED_JACC_FLOOR = 0.5
+from .catalog import QuerySpec
+from .fragments import ED_MAX_CHARS, SQL_EDIT_PAIRS, dup_pair_prefixes
 
 
 def _ed_fold(a: str, b: str, la: str, lb: str) -> str:
@@ -75,39 +69,10 @@ def _ed_fold(a: str, b: str, la: str, lb: str) -> str:
 def _q_edit_distance_dup_pairs(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    docs = load_table(spark, sf_dir, "documents")
-    pairs = ngram_jaccard_pairs(docs, n=3, threshold=ED_JACC_FLOOR)
-    pref = docs.where(F.length("text") > 0).select(
-        "doc_id",
-        F.expr(f"substring(text, 1, {ED_MAX_CHARS})").alias("p"),
-        F.expr(
-            f"CAST(least(length(text), {ED_MAX_CHARS}) AS BIGINT)"
-        ).alias("l"),
+    joined = dup_pair_prefixes(
+        load_table(spark, sf_dir, "documents"), ED_MAX_CHARS
     )
-    joined = (
-        pref.join(
-            F.broadcast(
-                pairs.select("doc_a", "doc_b", "jaccard")
-            ).withColumnRenamed("doc_a", "doc_id"),
-            "doc_id",
-        )
-        .select(
-            F.col("doc_id").alias("doc_a"),
-            "doc_b",
-            "jaccard",
-            F.col("p").alias("pa"),
-            F.col("l").alias("la"),
-        )
-        .join(
-            pref.select(
-                F.col("doc_id").alias("doc_b"),
-                F.col("p").alias("pb"),
-                F.col("l").alias("lb"),
-            ),
-            "doc_b",
-        )
-    )
-    return (
+    return _with_edit_bounds(
         joined.select(
             "doc_a",
             "doc_b",
@@ -125,88 +90,7 @@ def _q_edit_distance_dup_pairs(
             # test_levenshtein_builtin_equals_fold_expression.
             F.levenshtein("pa", "pb").cast("bigint").alias("edit_distance"),
         )
-        .select(
-            "doc_a",
-            "doc_b",
-            "jaccard",
-            "la",
-            "lb",
-            "edit_distance",
-            F.expr(
-                "1000 - edit_distance * 1000 div greatest(la, lb)"
-            ).alias("edit_sim_milli"),
-            F.expr("edit_distance >= abs(la - lb)").alias("lower_bound_ok"),
-            F.expr(
-                "edit_distance <= greatest(la, lb)"
-            ).alias("upper_bound_ok"),
-        )
-        .orderBy("doc_a", "doc_b")
     )
-
-
-def _sql_ed_fold(a: str, b: str, la: str, lb: str) -> str:
-    """DuckDB twin: list_reduce over BIGINT[] rows with singleton-list
-    indexes (the round10_dp DTW oracle mechanism — list accumulators
-    only, no struct accumulator)."""
-    cost = (
-        f"CASE WHEN substr({a}, CAST(x[1] AS INT), 1)"
-        f" = substr({b}, CAST(y[1] AS INT), 1)"
-        " THEN CAST(0 AS BIGINT) ELSE CAST(1 AS BIGINT) END"
-    )
-    inner = f"""list_reduce(
-      [CAST([x[1]] AS BIGINT[])] || list_transform(
-        range(1, CAST({lb} AS INT) + 1), j -> [CAST(j AS BIGINT)]),
-      (row, y) -> row || [least(
-        prev_row[CAST(y[1] AS INT) + 1] + 1,
-        row[CAST(y[1] AS INT)] + 1,
-        prev_row[CAST(y[1] AS INT)] + {cost})])"""
-    return f"""(list_reduce(
-      [list_transform(range(0, CAST({lb} AS INT) + 1),
-                      z -> CAST(z AS BIGINT))] || list_transform(
-        range(1, CAST({la} AS INT) + 1), i -> [CAST(i AS BIGINT)]),
-      (prev_row, x) -> {inner}))[CAST({lb} AS INT) + 1]"""
-
-
-_SQL_EDIT_PAIRS = f"""
-WITH {_TRIGRAM_CTES}, dg AS (
-  SELECT DISTINCT doc_id, gram FROM grams
-), sizes AS (
-  SELECT doc_id, count(*) AS sz FROM dg GROUP BY doc_id
-), prs AS (
-  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS inter
-  FROM dg a JOIN dg b ON a.gram = b.gram AND a.doc_id < b.doc_id
-  GROUP BY 1, 2
-), jacc AS (
-  SELECT doc_a, doc_b,
-         round(CAST(inter AS DOUBLE)
-               / CAST(sa.sz + sb.sz - inter AS DOUBLE), 6) AS jaccard
-  FROM prs
-  JOIN sizes sa ON doc_a = sa.doc_id
-  JOIN sizes sb ON doc_b = sb.doc_id
-  WHERE round(CAST(inter AS DOUBLE)
-              / CAST(sa.sz + sb.sz - inter AS DOUBLE), 6)
-        >= {ED_JACC_FLOOR}
-), pref AS (
-  SELECT doc_id, substr(text, 1, {ED_MAX_CHARS}) AS p,
-         CAST(least(length(text), {ED_MAX_CHARS}) AS BIGINT) AS l
-  FROM documents WHERE length(text) > 0
-), scored AS (
-  SELECT j.doc_a, j.doc_b, j.jaccard,
-         a.l AS la, b.l AS lb,
-         {_sql_ed_fold("a.p", "b.p", "a.l", "b.l")} AS edit_distance
-  FROM jacc j
-  JOIN pref a ON a.doc_id = j.doc_a
-  JOIN pref b ON b.doc_id = j.doc_b
-)
-SELECT doc_a, doc_b, jaccard, la, lb,
-       CAST(edit_distance AS BIGINT) AS edit_distance,
-       CAST(1000 - edit_distance * 1000 // greatest(la, lb) AS BIGINT)
-         AS edit_sim_milli,
-       edit_distance >= abs(la - lb) AS lower_bound_ok,
-       edit_distance <= greatest(la, lb) AS upper_bound_ok
-FROM scored
-ORDER BY doc_a, doc_b
-"""
 
 
 def _q_edit_distance_dup_pairs_fast(
@@ -227,37 +111,8 @@ def _q_edit_distance_dup_pairs_fast(
 
     from pyspark.sql import types as T
 
-    docs = load_table(spark, sf_dir, "documents")
-    pairs = ngram_jaccard_pairs(docs, n=3, threshold=ED_JACC_FLOOR)
-    pref = docs.where(F.length("text") > 0).select(
-        "doc_id",
-        F.expr(f"substring(text, 1, {ED_MAX_CHARS})").alias("p"),
-        F.expr(
-            f"CAST(least(length(text), {ED_MAX_CHARS}) AS BIGINT)"
-        ).alias("l"),
-    )
-    joined = (
-        pref.join(
-            F.broadcast(
-                pairs.select("doc_a", "doc_b", "jaccard")
-            ).withColumnRenamed("doc_a", "doc_id"),
-            "doc_id",
-        )
-        .select(
-            F.col("doc_id").alias("doc_a"),
-            "doc_b",
-            "jaccard",
-            F.col("p").alias("pa"),
-            F.col("l").alias("la"),
-        )
-        .join(
-            pref.select(
-                F.col("doc_id").alias("doc_b"),
-                F.col("p").alias("pb"),
-                F.col("l").alias("lb"),
-            ),
-            "doc_b",
-        )
+    joined = dup_pair_prefixes(
+        load_table(spark, sf_dir, "documents"), ED_MAX_CHARS
     )
 
     out_schema = T.StructType(
@@ -301,7 +156,13 @@ def _q_edit_distance_dup_pairs_fast(
                 }
             )
 
-    scored = joined.mapInPandas(_batch, out_schema)
+    return _with_edit_bounds(joined.mapInPandas(_batch, out_schema))
+
+
+def _with_edit_bounds(scored: DataFrame) -> DataFrame:
+    """Per scored pair: the normalized similarity
+    ``1000 − ed*1000 div max(la,lb)`` in millis and the two classical
+    bound witnesses ``|la−lb| ≤ ed ≤ max(la,lb)``."""
     return (
         scored.select(
             "doc_a",
@@ -325,7 +186,7 @@ def _q_edit_distance_dup_pairs_fast(
 SPECS: dict[str, QuerySpec] = {
     "edit_distance_dup_pairs": QuerySpec(
         _q_edit_distance_dup_pairs,
-        _SQL_EDIT_PAIRS,
+        SQL_EDIT_PAIRS,
         "exact Levenshtein on the inverted-index near-dup candidate "
         "pairs (128-char prefixes, full integer DP as nested folds): "
         "the independent second metric beside token Jaccard, with "
@@ -333,7 +194,7 @@ SPECS: dict[str, QuerySpec] = {
     ),
     "edit_distance_dup_pairs_fast": QuerySpec(
         _q_edit_distance_dup_pairs_fast,
-        _SQL_EDIT_PAIRS,
+        SQL_EDIT_PAIRS,
         "Arrow fast path for the same pairs: NumPy prefix-min row "
         "recurrence (np.minimum.accumulate) per pair — bit-identical "
         "integers against the identical oracle, ~20x the fold",

@@ -41,14 +41,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..operators.dedup import ngram_jaccard_pairs
 from ..sources.tables import load_table
-from .catalog import QuerySpec, _TRIGRAM_CTES
+from .catalog import QuerySpec
+from .fragments import dup_pair_prefixes, sql_dup_pair_prefix_ctes
 
 #: prefix cap — bounds the per-pair fold (window probes included)
 JARO_MAX_CHARS = 64
-#: candidate floor shared with the edit pack
-JARO_JACC_FLOOR = 0.5
 #: Winkler prefix boost factor (the classical 0.1)
 _WP_MICRO = 100_000  # 0.1 in micro-units
 
@@ -119,42 +117,13 @@ def _q_jaro_winkler_dup_pairs(
     # untouched.
     import pandas as pd
 
-    docs = load_table(spark, sf_dir, "documents")
-    pairs = ngram_jaccard_pairs(docs, n=3, threshold=JARO_JACC_FLOOR)
-    pref = docs.where(F.length("text") > 0).select(
-        "doc_id",
-        F.expr(f"substring(text, 1, {JARO_MAX_CHARS})").alias("p"),
-        F.expr(
-            f"CAST(least(length(text), {JARO_MAX_CHARS}) AS BIGINT)"
-        ).alias("l"),
+    joined = dup_pair_prefixes(
+        load_table(spark, sf_dir, "documents"), JARO_MAX_CHARS
     )
-    joined = (
-        pref.join(
-            F.broadcast(
-                pairs.select("doc_a", "doc_b", "jaccard")
-            ).withColumnRenamed("doc_a", "doc_id"),
-            "doc_id",
-        )
-        .select(
-            F.col("doc_id").alias("doc_a"),
-            "doc_b",
-            "jaccard",
-            F.col("p").alias("pa"),
-            F.col("l").alias("la"),
-        )
-        .join(
-            pref.select(
-                F.col("doc_id").alias("doc_b"),
-                F.col("p").alias("pb"),
-                F.col("l").alias("lb"),
-            ),
-            "doc_b",
-        )
-        # (the fold's window bound `w` lives in _JARO_FOLD / the test
-        # spec path only — the Arrow matcher recomputes it internally,
-        # so the query plan no longer carries the unused expression;
-        # r11 ADVICE)
-    )
+    # (the fold's window bound `w` lives in _JARO_FOLD / the test spec
+    # path only — the Arrow matcher recomputes it internally, so the
+    # query plan no longer carries the unused expression; r11 ADVICE)
+
     def _batch(it):
         for pdf in it:
             counts = [
@@ -219,29 +188,7 @@ def _q_jaro_winkler_dup_pairs(
 
 
 _SQL_JARO = f"""
-WITH RECURSIVE {_TRIGRAM_CTES}, dg AS (
-  SELECT DISTINCT doc_id, gram FROM grams
-), sizes AS (
-  SELECT doc_id, count(*) AS sz FROM dg GROUP BY doc_id
-), prs AS (
-  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS inter
-  FROM dg a JOIN dg b ON a.gram = b.gram AND a.doc_id < b.doc_id
-  GROUP BY 1, 2
-), jacc AS (
-  SELECT doc_a, doc_b,
-         round(CAST(inter AS DOUBLE)
-               / CAST(sa.sz + sb.sz - inter AS DOUBLE), 6) AS jaccard
-  FROM prs
-  JOIN sizes sa ON doc_a = sa.doc_id
-  JOIN sizes sb ON doc_b = sb.doc_id
-  WHERE round(CAST(inter AS DOUBLE)
-              / CAST(sa.sz + sb.sz - inter AS DOUBLE), 6)
-        >= {JARO_JACC_FLOOR}
-), pref AS (
-  SELECT doc_id, substr(text, 1, {JARO_MAX_CHARS}) AS p,
-         CAST(least(length(text), {JARO_MAX_CHARS}) AS BIGINT) AS l
-  FROM documents WHERE length(text) > 0
-), base AS MATERIALIZED (
+WITH RECURSIVE {sql_dup_pair_prefix_ctes(JARO_MAX_CHARS)}, base AS MATERIALIZED (
   SELECT j.doc_a, j.doc_b, j.jaccard,
          a.p AS pa, a.l AS la, b.p AS pb, b.l AS lb,
          greatest(0, greatest(a.l, b.l) // 2 - 1) AS w

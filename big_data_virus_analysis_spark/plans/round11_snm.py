@@ -50,7 +50,8 @@ from ..operators.caching import tracked_cache
 from ..operators.dedup import ngram_jaccard_pairs, word_ngrams
 from ..operators.prefix_sum import global_row_number
 from ..sources.tables import load_table
-from .catalog import QuerySpec, _TRIGRAM_CTES
+from .catalog import QuerySpec
+from .fragments import TRIGRAM_CTES
 
 #: sort-key prefix length (lowercased first chars)
 SNM_KEY_CHARS = 24
@@ -193,7 +194,7 @@ WITH keyed AS MATERIALIZED (
          CAST(b.rn - a.rn AS BIGINT) AS rank_dist
   FROM ranked a
   JOIN ranked b ON b.rn > a.rn AND b.rn - a.rn < {SNM_WINDOW}
-), {_TRIGRAM_CTES}, dg AS (
+), {TRIGRAM_CTES}, dg AS (
   SELECT DISTINCT doc_id, gram FROM grams
 ), sizes AS (
   SELECT doc_id, count(*) AS sz FROM dg GROUP BY doc_id

@@ -36,7 +36,8 @@ from pyspark.sql import functions as F
 
 from ..operators.caching import tracked_cache
 from .catalog import QuerySpec
-from .round11_edit import _SQL_EDIT_PAIRS, _q_edit_distance_dup_pairs_fast
+from .fragments import SQL_EDIT_PAIRS
+from .round11_edit import _q_edit_distance_dup_pairs_fast
 
 
 def _q_jaccard_vs_edit_tau(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -137,7 +138,7 @@ def _q_jaccard_vs_edit_tau(spark: SparkSession, sf_dir: str) -> DataFrame:
 # concordance suffix over the scored SELECT
 _SQL_TAU = f"""
 WITH scored_full AS MATERIALIZED (
-{_SQL_EDIT_PAIRS.strip()}
+{SQL_EDIT_PAIRS.strip()}
 ), sc AS MATERIALIZED (
   SELECT doc_a, doc_b,
          CAST(round(jaccard * 1000000, 0) AS BIGINT) AS jm,

@@ -45,25 +45,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.caching import tracked_cache
-from ..sources.tables import load_table
 from .catalog import QuerySpec
-
-
-def _daily(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(x = epoch day, y = revenue cents) — the calendar-bounded frame."""
-    o = load_table(spark, sf_dir, "orders")
-    return (
-        o.groupBy(F.col("o_orderdate").cast("date").alias("day"))
-        .agg(
-            F.sum(
-                F.expr("CAST(round(o_totalprice * 100, 0) AS BIGINT)")
-            ).alias("y")
-        )
-        .select(
-            F.datediff("day", F.lit("1970-01-01")).cast("bigint").alias("x"),
-            "y",
-        )
-    )
+from .fragments import daily_revenue_points
 
 
 def _pairs(days: DataFrame) -> DataFrame:
@@ -85,7 +68,7 @@ def _pairs(days: DataFrame) -> DataFrame:
 def _q_mann_kendall_daily_trend(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    days = tracked_cache(_daily(spark, sf_dir))
+    days = tracked_cache(daily_revenue_points(spark, sf_dir))
     s_agg = _pairs(days).agg(
         F.sum(
             F.when(F.col("yj") > F.col("yi"), 1)
@@ -162,7 +145,7 @@ def _q_mann_kendall_daily_trend(
 
 
 def _q_theil_sen_slope_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
-    days = tracked_cache(_daily(spark, sf_dir))
+    days = tracked_cache(daily_revenue_points(spark, sf_dir))
     # r11 optimization (guide §2.3/§1.2): the old shape ranked the
     # FULL ~n²/2 pair-slope frame with global_row_number (eager
     # localCheckpoint of 2.9M rows + driver collect) and then scanned

@@ -39,7 +39,7 @@ from pyspark.sql import functions as F
 
 from ..sources.tables import load_table
 from .catalog import QuerySpec
-from .round10_replay import IVL_SEC_PER_CHAR
+from .fragments import IVL_SEC_PER_CHAR, event_interval
 
 #: top-k users emitted
 WIS_TOPK = 10
@@ -76,12 +76,7 @@ def _q_weighted_interval_sessions(
     per = (
         ev.select(
             "user_id",
-            F.unix_micros("ts").alias("st"),
-            (
-                F.unix_micros("ts")
-                + F.length("event_type").cast("bigint")
-                * (IVL_SEC_PER_CHAR * 1_000_000)
-            ).alias("fin"),
+            *event_interval(),
             F.length("event_type").cast("bigint").alias("v"),
         )
         .groupBy("user_id")

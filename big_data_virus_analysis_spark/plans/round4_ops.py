@@ -35,25 +35,25 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..sources.tables import load_table
-from .catalog import QuerySpec, _TRIGRAM_CTES
+from .catalog import QuerySpec
+from .fragments import M31, SQL_DEDUP_CLUSTER_ASSIGN, SQL_KNN_VOTES_BODY, TRIGRAM_CTES
 
 # deterministic LCG constants shared in spirit with similarity._plane_weight
 _CMS_D = 4  # hash rows
 _CMS_W = 256  # counters per row
-_M31 = 2_147_483_648
-_CMS_A = [1103515245, 2654435761 % _M31, 1664525, 22695477]
+_CMS_A = [1103515245, 2654435761 % M31, 1664525, 22695477]
 _CMS_B = [12345, 7919, 1013904223, 1]
 
 
 def _cms_bucket(user, d: int):
     """Counter index for hash row d — plain 64-bit-safe integer
     arithmetic, identical in any engine."""
-    s = user % _M31
-    return ((F.lit(_CMS_A[d]) * s + F.lit(_CMS_B[d])) % _M31) % _CMS_W
+    s = user % M31
+    return ((F.lit(_CMS_A[d]) * s + F.lit(_CMS_B[d])) % M31) % _CMS_W
 
 
 def _cms_bucket_sql(d: int) -> str:
-    return f"((({_CMS_A[d]} * (user_id % {_M31}) + {_CMS_B[d]}) % {_M31}) % {_CMS_W})"
+    return f"((({_CMS_A[d]} * (user_id % {M31}) + {_CMS_B[d]}) % {M31}) % {_CMS_W})"
 
 
 # --------------------------------------------------------------------------
@@ -182,6 +182,21 @@ FROM paired GROUP BY lag
 # cms_heavy_users
 # --------------------------------------------------------------------------
 
+def _cms_cells():
+    """Column expr: one ``h = (d, bucket)`` row per hash row ``d`` of
+    the ``user_id`` — the count-min cells the user counts into."""
+    return F.explode(
+        F.array(
+            *[
+                F.struct(
+                    F.lit(d).alias("d"), _cms_bucket(F.col("user_id"), d).alias("bucket")
+                )
+                for d in range(_CMS_D)
+            ]
+        )
+    ).alias("h")
+
+
 def _q_cms_heavy_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Count-min estimates for the true top-10 users, from per-day
     sketches merged by counter addition.
@@ -196,16 +211,7 @@ def _q_cms_heavy_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows = ev.select(
         day.alias("day"),
         "user_id",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(d).alias("d"), _cms_bucket(F.col("user_id"), d).alias("bucket")
-                    )
-                    for d in range(_CMS_D)
-                ]
-            )
-        ).alias("h"),
+        _cms_cells(),
     )
     per_day = rows.groupBy("day", "h.d", "h.bucket").agg(
         F.count(F.lit(1)).alias("cnt")
@@ -221,16 +227,7 @@ def _q_cms_heavy_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     probes = top.select(
         "user_id",
         "true_n",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(d).alias("d"), _cms_bucket(F.col("user_id"), d).alias("bucket")
-                    )
-                    for d in range(_CMS_D)
-                ]
-            )
-        ).alias("h"),
+        _cms_cells(),
     ).select("user_id", "true_n", "h.d", "h.bucket")
     return (
         probes.join(merged, ["d", "bucket"])
@@ -456,7 +453,7 @@ def _q_corpus_minhash_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     computed beside it so the driver's oracle pins both the sketch AND
     its ground truth.  Hash family identical to minhash_lsh_pairs
     (operators/dedup.py::_minhash_mins)."""
-    from ..operators.dedup import _M31, _SCRAMBLE, _scramble
+    from ..operators.dedup import _SCRAMBLE, _scramble
 
     docs = load_table(spark, sf_dir, "documents")
     tokens = F.split(F.col("text"), " ")
@@ -476,9 +473,9 @@ def _q_corpus_minhash_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     ids = grams.select("corpus", "gram", _scramble(tid).alias("s"))
 
     def _h(i: int):
-        a_i = ((_SCRAMBLE * (2 * i + 1)) % _M31) | 1
+        a_i = ((_SCRAMBLE * (2 * i + 1)) % M31) | 1
         return (F.lit(a_i).cast("bigint") * F.col("s") + 7919 * i).bitwiseAND(
-            F.lit(_M31 - 1)
+            F.lit(M31 - 1)
         )
 
     minima = (
@@ -760,7 +757,7 @@ def _q_dedup_retention_by_threshold(spark: SparkSession, sf_dir: str) -> DataFra
 
 
 _SQL_DEDUP_RETENTION_BY_THRESHOLD = f"""
-WITH {_TRIGRAM_CTES}, dg AS (
+WITH {TRIGRAM_CTES}, dg AS (
   SELECT DISTINCT doc_id, gram FROM grams
 ), sizes AS (
   SELECT doc_id, count(*) AS sz FROM dg GROUP BY doc_id
@@ -918,13 +915,10 @@ def _q_lateral_topk_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _sql_dedup_cluster_size_histogram() -> str:
     # the recursive component-assignment oracle wrapped as a subquery
-    # (imported lazily: catalog defines it before importing this pack)
-    from .catalog import _SQL_DEDUP_CLUSTER_ASSIGN
-
     return f"""
 SELECT size, count(*) AS n_clusters FROM (
   SELECT cluster_id, count(*) AS size FROM (
-{_SQL_DEDUP_CLUSTER_ASSIGN}
+{SQL_DEDUP_CLUSTER_ASSIGN}
   ) GROUP BY cluster_id
 ) GROUP BY size
 """
@@ -1113,8 +1107,6 @@ def _q_label_noise_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _sql_label_noise_candidates() -> str:
-    from .catalog import SQL_KNN_VOTES_BODY
-
     return SQL_KNN_VOTES_BODY + """
 , pred AS (
   SELECT query_id, label AS pred_label, votes

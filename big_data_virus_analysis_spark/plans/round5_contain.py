@@ -31,10 +31,11 @@ from pyspark.sql import functions as F
 from ..operators.caching import tracked_cache
 from ..operators.dedup import word_ngrams
 from ..sources.tables import load_table
-from .catalog import QuerySpec, _TRIGRAM_CTES
+from .catalog import QuerySpec
+from .fragments import TRIGRAM_CTES
 
 _GRAM_SQL = f"""
-WITH {_TRIGRAM_CTES}, dg AS (
+WITH {TRIGRAM_CTES}, dg AS (
   SELECT DISTINCT doc_id, gram FROM grams
 )
 """

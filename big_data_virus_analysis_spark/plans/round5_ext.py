@@ -49,6 +49,7 @@ from pyspark.sql.window import Window
 from ..operators.caching import tracked_cache
 from ..sources.tables import load_table
 from .catalog import QuerySpec
+from .fragments import SQL_ASOF_LAST_PURCHASE, SQL_QUALITY_SCORE, minhash_lsh_sql
 
 # --------------------------------------------------------------------------
 # dedup_survivor_by_quality
@@ -85,11 +86,9 @@ def _q_dedup_survivor_by_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _sql_dedup_survivor_by_quality() -> str:
-    from .catalog import _SQL_QUALITY_SCORE, _minhash_lsh_sql
-
     return (
         "WITH RECURSIVE pairs AS (\n"
-        + _minhash_lsh_sql(_SBQ_K, _SBQ_K // _SBQ_BANDS)
+        + minhash_lsh_sql(_SBQ_K, _SBQ_K // _SBQ_BANDS)
         + f"""
 ), sbq_edges AS (
   SELECT doc_a AS src, doc_b AS dst FROM pairs
@@ -103,7 +102,7 @@ def _sql_dedup_survivor_by_quality() -> str:
   SELECT src AS doc_id, least(src, min(dst)) AS cluster_id
   FROM reach GROUP BY src
 ), q AS (
-  {_SQL_QUALITY_SCORE}
+  {SQL_QUALITY_SCORE}
 ), member AS (
   SELECT d.doc_id, d.source, coalesce(a.cluster_id, d.doc_id) AS cl, q.score
   FROM documents d
@@ -340,12 +339,6 @@ def _q_cogroup_asof_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _sql_cogroup_asof_enrich() -> str:
-    from .catalog import _SQL_ASOF_LAST_PURCHASE
-
-    return _SQL_ASOF_LAST_PURCHASE
-
-
 # --------------------------------------------------------------------------
 # mapinarrow_token_count
 # --------------------------------------------------------------------------
@@ -402,7 +395,7 @@ SPECS: dict[str, QuerySpec] = {
     ),
     "cogroup_asof_enrich": QuerySpec(
         _q_cogroup_asof_enrich,
-        _sql_cogroup_asof_enrich(),
+        SQL_ASOF_LAST_PURCHASE,
         "cogrouped applyInPandas as-of enrichment (pd.merge_asof per "
         "user); oracle shared verbatim with asof_last_purchase",
     ),

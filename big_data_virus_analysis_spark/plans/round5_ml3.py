@@ -45,6 +45,7 @@ from ..operators.prefix_sum import global_prefix_sum
 from ..operators.similarity import DIM, _plane_weight
 from ..sources.tables import load_table
 from .catalog import QuerySpec
+from .fragments import SQL_EMBEDDING_COVARIANCE_CELLS, fixed_plane_score
 
 # --------------------------------------------------------------------------
 # nb_gaussian_confusion
@@ -283,15 +284,7 @@ def _fixed_scored(spark: SparkSession, sf_dir: str) -> DataFrame:
     shared with fixed_scorer_auc (plans/ml_exact.py) — same weights, same
     round-6 edge, task ``label < 5``."""
     emb = load_table(spark, sf_dir, "embeddings")
-    plane = F.array(*[F.lit(_plane_weight(0, d)) for d in range(DIM)])
-    score = F.round(
-        F.aggregate(
-            F.zip_with(F.col("embedding"), plane, lambda x, wt: x.cast("double") * wt),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
-        ),
-        6,
-    )
+    score = fixed_plane_score()
     return emb.select(
         "vec_id", score.alias("score"), (F.col("label") < 5).cast("int").alias("pos")
     )
@@ -581,12 +574,8 @@ FROM w2 CROSS JOIN n2
 
 
 def _pca_power_sql() -> str:
-    # late import: catalog defines the covariance oracle ABOVE its
-    # pack-registration block, so the constant exists when packs load
-    from .catalog import _SQL_EMBEDDING_COVARIANCE_CELLS
-
     return _SQL_PCA_POWER_ITERATION_EXACT.format(
-        cov=_SQL_EMBEDDING_COVARIANCE_CELLS
+        cov=SQL_EMBEDDING_COVARIANCE_CELLS
     )
 
 

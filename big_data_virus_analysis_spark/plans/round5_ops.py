@@ -51,6 +51,7 @@ from pyspark.sql.window import Window
 
 from ..sources.tables import load_table
 from .catalog import QuerySpec
+from .fragments import SQL_RAG_CHUNK_WINDOWS, minhash_lsh_sql
 
 # --------------------------------------------------------------------------
 # dedup_pipeline_e2e
@@ -97,13 +98,10 @@ def _q_dedup_pipeline_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _sql_dedup_pipeline_e2e() -> str:
     # the k=16/4-band pair oracle + the recursive transitive closure,
-    # extended with survivor accounting (lazy import: catalog defines
-    # the shared SQL builders before importing this pack)
-    from .catalog import _minhash_lsh_sql
-
+    # extended with survivor accounting
     return (
         "WITH RECURSIVE pairs AS (\n"
-        + _minhash_lsh_sql(_E2E_K, _E2E_K // _E2E_BANDS)
+        + minhash_lsh_sql(_E2E_K, _E2E_K // _E2E_BANDS)
         + """
 ), e2e_edges AS (
   SELECT doc_a AS src, doc_b AS dst FROM pairs
@@ -479,66 +477,51 @@ def _q_udtf_chunk_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _sql_udtf_chunk_windows() -> str:
-    from .rag import _SQL_RAG_CHUNK_WINDOWS
-
-    return _SQL_RAG_CHUNK_WINDOWS
-
-
-SPECS: dict[str, QuerySpec] = {}
-
-
-def _build_specs() -> None:
-    SPECS.update(
-        {
-            "dedup_pipeline_e2e": QuerySpec(
-                _q_dedup_pipeline_e2e,
-                _sql_dedup_pipeline_e2e(),
-                "composed production dedup pipeline: minhash k=16 → banded "
-                "pairs → connected components → keep-min survivors → "
-                "per-source retention report, one plan",
-            ),
-            "stratified_sample_det": QuerySpec(
-                _q_stratified_sample_det,
-                _SQL_STRATIFIED_SAMPLE_DET,
-                "deterministic proportional stratified sample (md5-rank per "
-                "stratum, ceil(frac·n) kept) — exact-oracle twin of the "
-                "seeded sampleBy form",
-            ),
-            "approx_distinct_users_bounded": QuerySpec(
-                _q_approx_distinct_users_bounded,
-                _SQL_APPROX_DISTINCT_USERS_BOUNDED,
-                "HLL++ distinct estimate audited against its rsd bound: "
-                "exact side + within_tol boolean are the hash-pinned output",
-            ),
-            "approx_percentile_prices_bounded": QuerySpec(
-                _q_approx_percentile_prices_bounded,
-                _SQL_APPROX_PERCENTILE_PRICES_BOUNDED,
-                "percentile_approx audited against the n/accuracy rank "
-                "guarantee via exact <=/< rank counts",
-            ),
-            "hll_distinct_rollup_bounded": QuerySpec(
-                _q_hll_distinct_rollup_bounded,
-                _SQL_HLL_DISTINCT_ROLLUP_BOUNDED,
-                "HLL day→total sketch rollup audited vs exact distincts at "
-                "both grains (merge must not degrade the bound)",
-            ),
-            "heavy_hitter_users_bounded": QuerySpec(
-                _q_heavy_hitter_users_bounded,
-                _SQL_HEAVY_HITTER_USERS_BOUNDED,
-                "frequent-items sketch audited on no-false-negatives: every "
-                "exact heavy user must be contained in the sketch list "
-                "(EAGER BUILD: freqItems needs a driver-side float support, "
-                "so compiling this entry runs one 1-row aggregate job)",
-            ),
-            "udtf_chunk_windows": QuerySpec(
-                _q_udtf_chunk_windows,
-                _sql_udtf_chunk_windows(),
-                "token-window chunker as an arrow-optimized Python UDTF in a "
-                "LATERAL join; oracle shared verbatim with rag_chunk_windows",
-            ),
-        }
-    )
-
-
-_build_specs()
+SPECS: dict[str, QuerySpec] = {
+    "dedup_pipeline_e2e": QuerySpec(
+        _q_dedup_pipeline_e2e,
+        _sql_dedup_pipeline_e2e(),
+        "composed production dedup pipeline: minhash k=16 → banded "
+        "pairs → connected components → keep-min survivors → "
+        "per-source retention report, one plan",
+    ),
+    "stratified_sample_det": QuerySpec(
+        _q_stratified_sample_det,
+        _SQL_STRATIFIED_SAMPLE_DET,
+        "deterministic proportional stratified sample (md5-rank per "
+        "stratum, ceil(frac·n) kept) — exact-oracle twin of the "
+        "seeded sampleBy form",
+    ),
+    "approx_distinct_users_bounded": QuerySpec(
+        _q_approx_distinct_users_bounded,
+        _SQL_APPROX_DISTINCT_USERS_BOUNDED,
+        "HLL++ distinct estimate audited against its rsd bound: "
+        "exact side + within_tol boolean are the hash-pinned output",
+    ),
+    "approx_percentile_prices_bounded": QuerySpec(
+        _q_approx_percentile_prices_bounded,
+        _SQL_APPROX_PERCENTILE_PRICES_BOUNDED,
+        "percentile_approx audited against the n/accuracy rank "
+        "guarantee via exact <=/< rank counts",
+    ),
+    "hll_distinct_rollup_bounded": QuerySpec(
+        _q_hll_distinct_rollup_bounded,
+        _SQL_HLL_DISTINCT_ROLLUP_BOUNDED,
+        "HLL day→total sketch rollup audited vs exact distincts at "
+        "both grains (merge must not degrade the bound)",
+    ),
+    "heavy_hitter_users_bounded": QuerySpec(
+        _q_heavy_hitter_users_bounded,
+        _SQL_HEAVY_HITTER_USERS_BOUNDED,
+        "frequent-items sketch audited on no-false-negatives: every "
+        "exact heavy user must be contained in the sketch list "
+        "(EAGER BUILD: freqItems needs a driver-side float support, "
+        "so compiling this entry runs one 1-row aggregate job)",
+    ),
+    "udtf_chunk_windows": QuerySpec(
+        _q_udtf_chunk_windows,
+        SQL_RAG_CHUNK_WINDOWS,
+        "token-window chunker as an arrow-optimized Python UDTF in a "
+        "LATERAL join; oracle shared verbatim with rag_chunk_windows",
+    ),
+}

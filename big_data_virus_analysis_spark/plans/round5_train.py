@@ -34,6 +34,7 @@ from pyspark.sql import functions as F
 
 from ..sources.tables import load_table
 from .catalog import QuerySpec
+from .fragments import SQL_RAG_CHUNK_WINDOWS
 
 # --------------------------------------------------------------------------
 # lr_gd_steps_exact
@@ -193,11 +194,9 @@ def _q_chunk_novelty_by_doc(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _sql_chunk_novelty_by_doc() -> str:
-    from .rag import _SQL_RAG_CHUNK_WINDOWS
-
     return (
         "WITH chunks AS (\n"
-        + _SQL_RAG_CHUNK_WINDOWS
+        + SQL_RAG_CHUNK_WINDOWS
         + """
 ), freq AS (
   SELECT chunk_hash, count(DISTINCT doc_id) AS n_docs

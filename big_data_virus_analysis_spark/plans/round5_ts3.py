@@ -34,8 +34,8 @@ from pyspark.sql import functions as F
 
 from ..sources.tables import load_table
 from .catalog import QuerySpec
+from .fragments import DAY_US
 
-_DAY_US = 86_400_000_000
 
 # --------------------------------------------------------------------------
 # cusum_changepoint_daily
@@ -46,7 +46,7 @@ def _q_cusum_changepoint_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events")
     daily = (
         ev.select(
-            (F.unix_micros(F.col("ts")) / _DAY_US).cast("long").alias("day"), "value"
+            (F.unix_micros(F.col("ts")) / DAY_US).cast("long").alias("day"), "value"
         )
         .groupBy("day")
         .agg(F.round(F.sum("value"), 6).alias("x"))
@@ -170,7 +170,7 @@ def _q_seasonal_naive_backtest(spark: SparkSession, sf_dir: str) -> DataFrame:
     daily = (
         ev.select(
             "event_type",
-            (F.unix_micros(F.col("ts")) / _DAY_US).cast("long").alias("day"),
+            (F.unix_micros(F.col("ts")) / DAY_US).cast("long").alias("day"),
         )
         .groupBy("event_type", "day")
         .agg(F.count(F.lit(1)).alias("c"))

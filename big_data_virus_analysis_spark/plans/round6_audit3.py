@@ -37,6 +37,7 @@ from ..operators.caching import tracked_cache
 from ..operators.similarity import DIM, _plane_weight
 from ..sources.tables import load_table
 from .catalog import QuerySpec
+from .fragments import fixed_plane_score
 
 # --------------------------------------------------------------------------
 # fixed_scorer_learning_curve
@@ -48,15 +49,7 @@ _LC_MULT = 2654435761
 
 def _q_fixed_scorer_learning_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
-    plane = F.array(*[F.lit(_plane_weight(0, d)) for d in range(DIM)])
-    score = F.round(
-        F.aggregate(
-            F.zip_with(F.col("embedding"), plane, lambda x, wt: x.cast("double") * wt),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
-        ),
-        6,
-    )
+    score = fixed_plane_score()
     scored = tracked_cache(
         emb.select(
             score.alias("score"),

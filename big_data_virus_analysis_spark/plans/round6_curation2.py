@@ -47,8 +47,7 @@ from pyspark.sql import functions as F
 from ..operators.caching import tracked_cache
 from ..sources.tables import load_table
 from .catalog import QuerySpec
-from .retrieval import _QUERY_TERMS, bm25_scores
-from .round6_graph2 import _SQL_SUPPORT_EDGES, _support_edges
+from .fragments import QUERY_TERMS, bm25_scores, sql_support_edge_rounds, support_edges
 
 # --------------------------------------------------------------------------
 # rocchio_expansion
@@ -107,7 +106,7 @@ def _q_rocchio_expansion(spark: SparkSession, sf_dir: str) -> DataFrame:
             6,
         ).alias("weight"),
     )
-    not_query = ~F.col("tok").isin(*_QUERY_TERMS)
+    not_query = ~F.col("tok").isin(*QUERY_TERMS)
     return (
         out.where(not_query)
         .orderBy(F.desc("weight"), F.asc("tok"))
@@ -115,7 +114,7 @@ def _q_rocchio_expansion(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_QT_SQL = ", ".join(f"'{t}'" for t in _QUERY_TERMS)
+_QT_SQL = ", ".join(f"'{t}'" for t in QUERY_TERMS)
 
 _SQL_ROCCHIO_EXPANSION = f"""
 WITH toks AS (
@@ -186,7 +185,7 @@ _LPA_ROUNDS = 2
 
 
 def _q_label_propagation_rounds(spark: SparkSession, sf_dir: str) -> DataFrame:
-    edges = tracked_cache(_support_edges(spark, sf_dir))
+    edges = tracked_cache(support_edges(spark, sf_dir))
     adj = edges.select(F.col("u").alias("node"), F.col("v").alias("nbr")).unionByName(
         edges.select(F.col("v").alias("node"), F.col("u").alias("nbr"))
     ).transform(tracked_cache)
@@ -252,14 +251,7 @@ def _lpa_sql() -> str:
           SELECT count(*) AS sz FROM lab{r} GROUP BY lab)) AS max_community"""
         )
         prev = f"lab{r}"
-    return (
-        _SQL_SUPPORT_EDGES
-        + ", "
-        + ", ".join(ctes)
-        + "\n"
-        + "\nUNION ALL\n".join(parts)
-        + "\nORDER BY round"
-    )
+    return sql_support_edge_rounds(ctes, parts)
 
 
 _SQL_LABEL_PROPAGATION_ROUNDS = _lpa_sql()

@@ -32,6 +32,7 @@ from ..operators.prefix_sum import global_row_number
 from ..operators.similarity import ann_lsh_topk, cosine_topk
 from ..sources.tables import load_table
 from .catalog import QuerySpec
+from .fragments import sql_lsh_bucket_ctes
 
 # --------------------------------------------------------------------------
 # ann_recall_audit
@@ -92,22 +93,7 @@ WITH elems AS (
   SELECT query_id, cand_id FROM sims
   QUALIFY row_number() OVER (PARTITION BY query_id
                              ORDER BY sim DESC, cand_id ASC) <= {_RECALL_K}
-), planes AS (
-  SELECT j, d,
-         ((1103515245 * (j * 64 + (d - 1)) + 12345) % 2147483648)
-           / 2147483648.0 - 0.5 AS wgt
-  FROM (SELECT unnest(generate_series(0, 7)) AS j)
-  CROSS JOIN (SELECT unnest(generate_series(1, 64)) AS d)
-), pdots AS (
-  SELECT e.vec_id, p.j, sum(e.x * p.wgt) AS pd
-  FROM elems e JOIN planes p ON e.i = p.d
-  GROUP BY 1, 2
-), buckets AS (
-  SELECT vec_id,
-         CAST(sum(CASE WHEN pd > 0 THEN (1::BIGINT << j) ELSE 0 END) AS BIGINT)
-           AS bucket
-  FROM pdots GROUP BY vec_id
-), adots AS (
+{sql_lsh_bucket_ctes(8)}), adots AS (
   SELECT q.vec_id AS query_id, c.vec_id AS cand_id, sum(q.x * c.x) AS dot
   FROM elems q JOIN elems c ON q.i = c.i AND c.vec_id <> q.vec_id
   JOIN buckets bq ON q.vec_id = bq.vec_id

@@ -37,6 +37,11 @@ from ..operators.prefix_sum import global_prefix_sum
 from ..operators.similarity import DIM, _plane_weight
 from ..sources.tables import load_table
 from .catalog import QuerySpec
+from .fragments import (
+    SQL_COHORT_TIMES,
+    SQL_SIGNUP_PURCHASE_USERS,
+    signup_purchase_risk_set,
+)
 
 # --------------------------------------------------------------------------
 # expected_calibration_error
@@ -125,45 +130,10 @@ GROUP BY n
 # --------------------------------------------------------------------------
 
 _RMST_TAU = 30
-_DAY_US = 86_400_000_000
 
 
 def _q_rmst_signup_purchase(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = load_table(spark, sf_dir, "events").select(
-        "user_id",
-        "event_type",
-        (F.unix_micros(F.col("ts")) / _DAY_US).cast("long").alias("day"),
-    )
-    per_user = ev.groupBy("user_id").agg(
-        F.min(F.when(F.col("event_type") == "signup", F.col("day"))).alias("s0"),
-        F.max("day").alias("last_day"),
-    )
-    first_purchase = (
-        ev.where(F.col("event_type") == "purchase")
-        .groupBy("user_id")
-        .agg(F.min("day").alias("p0"))
-    )
-    cohort = (
-        per_user.join(first_purchase, "user_id", "left")
-        .where(F.col("s0").isNotNull())
-        .select(
-            F.when(
-                F.col("p0").isNotNull() & (F.col("p0") >= F.col("s0")),
-                F.col("p0") - F.col("s0"),
-            )
-            .otherwise(F.col("last_day") - F.col("s0"))
-            .alias("duration"),
-            (F.col("p0").isNotNull() & (F.col("p0") >= F.col("s0")))
-            .cast("int")
-            .alias("event"),
-        )
-    )
-    times = cohort.groupBy("duration").agg(
-        F.sum("event").alias("d"), F.count("*").alias("c")
-    )
-    with_risk = global_prefix_sum(
-        times, "duration", "c", "n_risk", order_exprs=[F.col("duration").desc()]
-    )
+    with_risk = signup_purchase_risk_set(spark, sf_dir)
     km = global_prefix_sum(
         with_risk.where(F.col("d") > 0).withColumn(
             "logterm", F.log(1.0 - F.col("d") / F.col("n_risk").cast("double"))
@@ -191,25 +161,8 @@ def _q_rmst_signup_purchase(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 _SQL_RMST_SIGNUP_PURCHASE = f"""
-WITH ev AS (
-  SELECT user_id, event_type, epoch_us(ts) // {_DAY_US} AS day FROM events
-), per_user AS (
-  SELECT user_id,
-         min(CASE WHEN event_type = 'signup' THEN day END) AS s0,
-         max(day) AS last_day
-  FROM ev GROUP BY user_id
-), first_purchase AS (
-  SELECT user_id, min(day) AS p0 FROM ev WHERE event_type = 'purchase'
-  GROUP BY user_id
-), cohort AS (
-  SELECT CASE WHEN f.p0 IS NOT NULL AND f.p0 >= p.s0 THEN f.p0 - p.s0
-              ELSE p.last_day - p.s0 END AS duration,
-         CASE WHEN f.p0 IS NOT NULL AND f.p0 >= p.s0 THEN 1 ELSE 0 END AS event
-  FROM per_user p LEFT JOIN first_purchase f ON p.user_id = f.user_id
-  WHERE p.s0 IS NOT NULL
-), times AS (
-  SELECT duration, sum(event) AS d, count(*) AS c FROM cohort GROUP BY duration
-), with_risk AS (
+{SQL_SIGNUP_PURCHASE_USERS}, cohort AS (
+  SELECT {SQL_COHORT_TIMES}, with_risk AS (
   SELECT duration, d,
          sum(c) OVER (ORDER BY duration DESC ROWS UNBOUNDED PRECEDING) AS n_risk
   FROM times

@@ -2,7 +2,7 @@
 the min-support co-purchase graph.
 
 Both queries run on the *weight-thresholded* co-purchase graph: part
-pairs that share **>= 2 orders** (``_MIN_COORDERS``).  The raw
+pairs that share **>= 2 orders** (``MIN_COORDERS``).  The raw
 share-an-order graph is dense (at sf0.01: 231k edges over 2k parts,
 27.8M wedges — measured), so every neighborhood algorithm on it
 explodes on hub parts.  The min-support threshold is the standard
@@ -47,10 +47,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.caching import tracked_cache
-from ..sources.tables import load_table
 from .catalog import QuerySpec
+from .fragments import SQL_SUPPORT_EDGES, sql_support_edge_rounds, support_edges
 
-_MIN_COORDERS = 2
 _AA_TOPK = 20
 #: hub-degree cap on the wedge pivot: a common neighbor z with
 #: deg(z) > _AA_HUB_CAP would emit deg(z)^2 wedges while contributing
@@ -70,47 +69,13 @@ _KCORE_ROUNDS = 3
 _AA_DEC = "decimal(28,12)"
 
 
-def _support_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Undirected (u < v) co-purchase edges with >= _MIN_COORDERS
-    shared orders.  One partial-agg pair count over the deduped
-    (order, part) index; the index is cached because both sides of the
-    pair join scan it."""
-    li = load_table(spark, sf_dir, "lineitem")
-    op = (
-        li.select("l_orderkey", "l_partkey").dropDuplicates().transform(tracked_cache)
-    )
-    return (
-        op.alias("a")
-        .join(op.alias("b"), "l_orderkey")
-        .where(F.col("a.l_partkey") < F.col("b.l_partkey"))
-        .groupBy(
-            F.col("a.l_partkey").alias("u"), F.col("b.l_partkey").alias("v")
-        )
-        .agg(F.count(F.lit(1)).alias("w"))
-        .where(F.col("w") >= _MIN_COORDERS)
-        .select("u", "v")
-    )
-
-
-_SQL_SUPPORT_EDGES = f"""
-WITH op AS (
-  SELECT DISTINCT l_orderkey, l_partkey FROM lineitem
-), e AS (
-  SELECT a.l_partkey AS u, b.l_partkey AS v
-  FROM op a JOIN op b USING (l_orderkey)
-  WHERE a.l_partkey < b.l_partkey
-  GROUP BY 1, 2
-  HAVING count(*) >= {_MIN_COORDERS}
-)"""
-
-
 # --------------------------------------------------------------------------
 # adamic_adar_linkpred
 # --------------------------------------------------------------------------
 
 
 def _q_adamic_adar_linkpred(spark: SparkSession, sf_dir: str) -> DataFrame:
-    edges = tracked_cache(_support_edges(spark, sf_dir))
+    edges = tracked_cache(support_edges(spark, sf_dir))
     adj = edges.select(F.col("u").alias("node"), F.col("v").alias("nbr")).unionByName(
         edges.select(F.col("v").alias("node"), F.col("u").alias("nbr"))
     ).transform(tracked_cache)
@@ -186,7 +151,7 @@ def _q_adamic_adar_linkpred(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 _SQL_ADAMIC_ADAR_LINKPRED = (
-    _SQL_SUPPORT_EDGES
+    SQL_SUPPORT_EDGES
     + f""", adj AS (
   SELECT u AS node, v AS nbr FROM e
   UNION ALL
@@ -233,7 +198,7 @@ LIMIT {_AA_TOPK}
 
 
 def _q_kcore_peel_rounds(spark: SparkSession, sf_dir: str) -> DataFrame:
-    edges = tracked_cache(_support_edges(spark, sf_dir))
+    edges = tracked_cache(support_edges(spark, sf_dir))
     k = _KCORE_K
     summaries: list[DataFrame] = []
     cur = edges
@@ -288,14 +253,7 @@ def _kcore_sql() -> str:
             f" (SELECT count(*) FROM e{r}) AS n_edges"
         )
         prev = f"e{r}"
-    return (
-        _SQL_SUPPORT_EDGES
-        + ", "
-        + ", ".join(ctes)
-        + "\n"
-        + "\nUNION ALL\n".join(parts)
-        + "\nORDER BY round"
-    )
+    return sql_support_edge_rounds(ctes, parts)
 
 
 _SQL_KCORE_PEEL_ROUNDS = _kcore_sql()

@@ -25,6 +25,7 @@ from pyspark.sql import functions as F
 
 from ..operators.caching import tracked_cache
 from .catalog import QuerySpec
+from .fragments import orient_by_degree
 from ..operators.graph_edges import dup_graph_edges as _dup_edges
 from ..operators.graph_edges import dup_graph_edges_ctes
 
@@ -32,34 +33,26 @@ _SQL_DUP_EDGES = dup_graph_edges_ctes()
 
 _LC_TOPK = 10
 
+#: the near-dup graph's degree-oriented edges ``oriented(s, t, dt)`` and
+#: degrees ``deg(u, deg)`` — the oracle twin of ``orient_by_degree``
+_SQL_ORIENTED = _SQL_DUP_EDGES + """
+, both_dir AS (
+  SELECT u, v FROM pr UNION ALL SELECT v, u FROM pr
+), deg AS (
+  SELECT u, CAST(count(*) AS BIGINT) AS deg FROM both_dir GROUP BY u
+), oriented AS (
+  SELECT CASE WHEN du.deg < dv.deg OR (du.deg = dv.deg AND p.u < p.v)
+              THEN p.u ELSE p.v END AS s,
+         CASE WHEN du.deg < dv.deg OR (du.deg = dv.deg AND p.u < p.v)
+              THEN p.v ELSE p.u END AS t,
+         CASE WHEN du.deg < dv.deg OR (du.deg = dv.deg AND p.u < p.v)
+              THEN dv.deg ELSE du.deg END AS dt
+  FROM pr p JOIN deg du ON p.u = du.u JOIN deg dv ON p.v = dv.u
+)"""
+
 
 def _oriented_and_deg(spark: SparkSession, sf_dir: str):
-    edges = tracked_cache(_dup_edges(spark, sf_dir))
-    both = edges.unionByName(
-        edges.select(F.col("v").alias("u"), F.col("u").alias("v"))
-    )
-    deg = both.groupBy("u").agg(F.count(F.lit(1)).alias("deg"))
-    du = deg.select(F.col("u").alias("u"), F.col("deg").alias("du"))
-    dv = deg.select(F.col("u").alias("v"), F.col("deg").alias("dv"))
-    ranked = edges.join(du, "u").join(dv, "v")
-    oriented = ranked.select(
-        F.when(
-            (F.col("du") < F.col("dv"))
-            | ((F.col("du") == F.col("dv")) & (F.col("u") < F.col("v"))),
-            F.struct(
-                F.col("u").alias("s"), F.col("v").alias("t"), F.col("dv").alias("dt")
-            ),
-        )
-        .otherwise(
-            F.struct(
-                F.col("v").alias("s"), F.col("u").alias("t"), F.col("du").alias("dt")
-            )
-        )
-        .alias("e")
-    ).select(
-        F.col("e.s").alias("s"), F.col("e.t").alias("t"), F.col("e.dt").alias("dt")
-    )
-    return tracked_cache(oriented), deg
+    return orient_by_degree(tracked_cache(_dup_edges(spark, sf_dir)))
 
 
 def _triangles(oriented: DataFrame) -> DataFrame:
@@ -110,20 +103,7 @@ def _q_local_clustering_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).limit(_LC_TOPK)
 
 
-_SQL_LOCAL_CLUSTERING_TOPK = _SQL_DUP_EDGES + f"""
-, both_dir AS (
-  SELECT u, v FROM pr UNION ALL SELECT v, u FROM pr
-), deg AS (
-  SELECT u, CAST(count(*) AS BIGINT) AS deg FROM both_dir GROUP BY u
-), oriented AS (
-  SELECT CASE WHEN du.deg < dv.deg OR (du.deg = dv.deg AND p.u < p.v)
-              THEN p.u ELSE p.v END AS s,
-         CASE WHEN du.deg < dv.deg OR (du.deg = dv.deg AND p.u < p.v)
-              THEN p.v ELSE p.u END AS t,
-         CASE WHEN du.deg < dv.deg OR (du.deg = dv.deg AND p.u < p.v)
-              THEN dv.deg ELSE du.deg END AS dt
-  FROM pr p JOIN deg du ON p.u = du.u JOIN deg dv ON p.v = dv.u
-), tri AS (
+_SQL_LOCAL_CLUSTERING_TOPK = _SQL_ORIENTED + f""", tri AS (
   SELECT a.s, a.t AS w1, b.t AS w2
   FROM oriented a
   JOIN oriented b ON a.s = b.s
@@ -174,20 +154,7 @@ def _q_global_transitivity(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_SQL_GLOBAL_TRANSITIVITY = _SQL_DUP_EDGES + """
-, both_dir AS (
-  SELECT u, v FROM pr UNION ALL SELECT v, u FROM pr
-), deg AS (
-  SELECT u, CAST(count(*) AS BIGINT) AS deg FROM both_dir GROUP BY u
-), oriented AS (
-  SELECT CASE WHEN du.deg < dv.deg OR (du.deg = dv.deg AND p.u < p.v)
-              THEN p.u ELSE p.v END AS s,
-         CASE WHEN du.deg < dv.deg OR (du.deg = dv.deg AND p.u < p.v)
-              THEN p.v ELSE p.u END AS t,
-         CASE WHEN du.deg < dv.deg OR (du.deg = dv.deg AND p.u < p.v)
-              THEN dv.deg ELSE du.deg END AS dt
-  FROM pr p JOIN deg du ON p.u = du.u JOIN deg dv ON p.v = dv.u
-), tri AS (
+_SQL_GLOBAL_TRANSITIVITY = _SQL_ORIENTED + """, tri AS (
   SELECT CAST(count(*) AS BIGINT) AS n_triangles
   FROM oriented a
   JOIN oriented b ON a.s = b.s

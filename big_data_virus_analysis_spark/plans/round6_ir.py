@@ -35,6 +35,7 @@ from ..operators.caching import tracked_cache
 from ..operators.graph_edges import dup_graph_edges, dup_graph_edges_ctes
 from ..sources.tables import load_table
 from .catalog import QuerySpec
+from .fragments import orient_by_degree
 
 # --------------------------------------------------------------------------
 # phrase_search_positional
@@ -99,34 +100,7 @@ _SQL_DUP_EDGES = dup_graph_edges_ctes()
 
 def _q_triangle_count_dup_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     edges = tracked_cache(_dup_edges(spark, sf_dir))
-    both = edges.unionByName(
-        edges.select(F.col("v").alias("u"), F.col("u").alias("v"))
-    )
-    deg = both.groupBy("u").agg(F.count(F.lit(1)).alias("deg"))
-    # orient each edge toward the higher (deg, id) endpoint: out-degree
-    # is then O(sqrt(m)) per node, so the wedge join cannot explode on
-    # hub nodes
-    du = deg.select(F.col("u").alias("u"), F.col("deg").alias("du"))
-    dv = deg.select(F.col("u").alias("v"), F.col("deg").alias("dv"))
-    ranked = edges.join(du, "u").join(dv, "v")
-    oriented = ranked.select(
-        F.when(
-            (F.col("du") < F.col("dv"))
-            | ((F.col("du") == F.col("dv")) & (F.col("u") < F.col("v"))),
-            F.struct(
-                F.col("u").alias("s"), F.col("v").alias("t"), F.col("dv").alias("dt")
-            ),
-        )
-        .otherwise(
-            F.struct(
-                F.col("v").alias("s"), F.col("u").alias("t"), F.col("du").alias("dt")
-            )
-        )
-        .alias("e")
-    ).select(
-        F.col("e.s").alias("s"), F.col("e.t").alias("t"), F.col("e.dt").alias("dt")
-    )
-    oriented = tracked_cache(oriented)
+    oriented, deg = orient_by_degree(edges)
     # wedges from the common source, closed by a third oriented edge.
     # The wedge pair must be ordered by the SAME (deg, id) rank the
     # orientation uses — ordering by node id alone loses triangles

@@ -49,9 +49,10 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..operators.caching import tracked_cache
+from ..operators.similarity import DIM, _plane_weight
 from ..sources.tables import load_table
 from .catalog import QuerySpec
-from .ml_exact import DIM, _plane_weight
+from .fragments import fixed_plane_score
 
 # --------------------------------------------------------------------------
 # gbdt_stump_steps_exact
@@ -239,15 +240,7 @@ _K_FOLDS = 5
 
 def _q_kfold_auc_fixed_scorer(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
-    plane = F.array(*[F.lit(_plane_weight(0, d)) for d in range(DIM)])
-    score = F.round(
-        F.aggregate(
-            F.zip_with(F.col("embedding"), plane, lambda x, wt: x.cast("double") * wt),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
-        ),
-        6,
-    )
+    score = fixed_plane_score()
     fold = (
         F.conv(F.substring(F.md5(F.col("vec_id").cast("string")), 1, 15), 16, 10)
         .cast("bigint")

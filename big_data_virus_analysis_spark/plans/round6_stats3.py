@@ -50,6 +50,7 @@ from ..operators.prefix_sum import ntile_from_rank, with_global_rank_and_count
 from ..operators.similarity import DIM, _plane_weight
 from ..sources.tables import load_table
 from .catalog import QuerySpec
+from .fragments import fixed_plane_score
 
 _YEAR = 1996
 _EPOCH = f"{_YEAR}-01-01"  # a Monday: datediff % 7 == 0 -> Monday
@@ -331,15 +332,7 @@ _BRIER_BINS = 10
 
 def _q_brier_decomposition_fixed(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
-    plane = F.array(*[F.lit(_plane_weight(0, d)) for d in range(DIM)])
-    score = F.round(
-        F.aggregate(
-            F.zip_with(F.col("embedding"), plane, lambda x, wt: x.cast("double") * wt),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
-        ),
-        6,
-    )
+    score = fixed_plane_score()
     scored = emb.select(
         score.alias("s"), (F.col("label") < 5).cast("bigint").alias("y")
     )

@@ -46,15 +46,13 @@ from .catalog import QuerySpec
 
 _Z95 = 1.96
 
-# --------------------------------------------------------------------------
-# anova_f_by_segment
-# --------------------------------------------------------------------------
 
-
-def _q_anova_f_by_segment(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _segment_price_moments(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Per market segment: order count ``n_g``, exact DECIMAL price sum
+    ``s_g`` and sum of squares ``q_g``."""
     orders = load_table(spark, sf_dir, "orders")
     customer = load_table(spark, sf_dir, "customer")
-    grp = (
+    return (
         orders.join(
             F.broadcast(customer.select("c_custkey", "c_mktsegment")),
             orders["o_custkey"] == customer["c_custkey"],
@@ -70,6 +68,15 @@ def _q_anova_f_by_segment(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum((F.col("y") * F.col("y")).cast("decimal(38,4)")).alias("q_g"),
         )
     )
+
+
+# --------------------------------------------------------------------------
+# anova_f_by_segment
+# --------------------------------------------------------------------------
+
+
+def _q_anova_f_by_segment(spark: SparkSession, sf_dir: str) -> DataFrame:
+    grp = _segment_price_moments(spark, sf_dir)
     tot = grp.agg(
         F.count(F.lit(1)).alias("k"),
         F.sum("n_g").alias("n"),
@@ -468,24 +475,7 @@ FROM sums
 
 
 def _q_cohens_d_segment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    orders = load_table(spark, sf_dir, "orders")
-    customer = load_table(spark, sf_dir, "customer")
-    grp = (
-        orders.join(
-            F.broadcast(customer.select("c_custkey", "c_mktsegment")),
-            orders["o_custkey"] == customer["c_custkey"],
-        )
-        .select(
-            F.col("c_mktsegment").alias("seg"),
-            F.col("o_totalprice").cast("decimal(18,2)").alias("y"),
-        )
-        .groupBy("seg")
-        .agg(
-            F.count(F.lit(1)).alias("n_g"),
-            F.sum("y").alias("s_g"),
-            F.sum((F.col("y") * F.col("y")).cast("decimal(38,4)")).alias("q_g"),
-        )
-    )
+    grp = _segment_price_moments(spark, sf_dir)
     a = grp.select(
         F.col("seg").alias("seg_a"),
         F.col("n_g").alias("na"),

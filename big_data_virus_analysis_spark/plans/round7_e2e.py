@@ -29,6 +29,7 @@ from pyspark.sql import functions as F
 
 from ..sources.tables import load_table
 from .catalog import QuerySpec
+from .fragments import welch_arm_stats
 
 _MULT = 2654435761
 _CRIT = 3.841
@@ -76,18 +77,7 @@ def _q_experiment_readout_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(F.when(~F.col("in_a"), F.col("q"))).alias("q2"),
         F.sum(F.when(~F.col("in_a"), F.col("nu"))).alias("u2"),
     )
-    n1 = F.col("n1").cast("double")
-    n2 = F.col("n2").cast("double")
-    m1 = F.col("s1").cast("double") / (100.0 * n1)
-    m2 = F.col("s2").cast("double") / (100.0 * n2)
-    v1 = (
-        F.col("q1").cast("double")
-        - F.col("s1").cast("double") * F.col("s1").cast("double") / n1
-    ) / ((n1 - 1.0) * 10000.0)
-    v2 = (
-        F.col("q2").cast("double")
-        - F.col("s2").cast("double") * F.col("s2").cast("double") / n2
-    ) / ((n2 - 1.0) * 10000.0)
+    n1, n2, m1, m2, v1, v2 = welch_arm_stats()
     t = (m1 - m2) / F.sqrt(v1 / n1 + v2 / n2)
     p1 = F.col("u1").cast("double") / n1
     p2 = F.col("u2").cast("double") / n2

@@ -38,7 +38,8 @@ from pyspark.sql import functions as F
 
 from ..operators.dedup import dedup_clusters, minhash_lsh_pairs, simhash_pairs
 from ..sources.tables import load_table
-from .catalog import QuerySpec, _TRIGRAM_CTES
+from .catalog import QuerySpec
+from .fragments import TRIGRAM_CTES
 
 
 def _q_adjusted_rand_clusterings(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -119,11 +120,11 @@ def _q_adjusted_rand_clusterings(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # The twin replays both clusterings relationally.  The shared shingle-id
 # prefix, the k=32/8-band signature chain, and the SimHash chain below
-# are literally the catalog's canonical fragments (catalog.py:
-# _SQL_SHINGLE_IDS / _minhash_band_sql / _SQL_SIMHASH_BASE), inlined
-# because the two pipelines must share one WITH clause here.
+# are literally the canonical fragments (fragments.py: SQL_SHINGLE_IDS /
+# minhash_band_sql; catalog.py: _SQL_SIMHASH_BASE), inlined because the
+# two pipelines must share one WITH clause here.
 _SQL_ADJUSTED_RAND_CLUSTERINGS = f"""
-WITH RECURSIVE {_TRIGRAM_CTES}, dg AS (
+WITH RECURSIVE {TRIGRAM_CTES}, dg AS (
   SELECT DISTINCT doc_id, gram FROM grams
 ), ids AS (
   SELECT doc_id,

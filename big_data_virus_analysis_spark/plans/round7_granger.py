@@ -29,58 +29,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..operators.prefix_sum import global_row_number
-from ..sources.tables import load_table
 from .catalog import QuerySpec
+from .fragments import SQL_GRANGER_LAG_MOMENTS, granger_lag_fit, granger_lag_moments
 
 
 def _q_granger_causality_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
-    orders = load_table(spark, sf_dir, "orders")
-    day = (
-        orders.select(
-            F.to_date("o_orderdate").alias("day"),
-            F.round(F.col("o_totalprice") * 100).cast("bigint").alias("yc"),
-        )
-        .groupBy("day")
-        .agg(F.sum("yc").alias("y"), F.count(F.lit(1)).alias("x"))
-    )
-    ranked = global_row_number(day, [F.asc("day")], out_col="rk")
-    cur = ranked.select("rk", F.col("y").alias("yt"))
-    prv = ranked.select(
-        (F.col("rk") + 1).alias("rk"),
-        F.col("y").alias("yl"),
-        F.col("x").alias("xl"),
-    )
-    rows = cur.join(prv, "rk")
-    dec = lambda c: F.col(c).cast("decimal(19,0)")  # noqa: E731
-    mom = rows.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum("yt").alias("sy"),
-        F.sum("yl").alias("sa"),
-        F.sum("xl").alias("sb"),
-        F.sum(dec("yl") * dec("yl")).alias("saa"),
-        F.sum(dec("xl") * dec("xl")).alias("sbb"),
-        F.sum(dec("yl") * dec("xl")).alias("sab"),
-        F.sum(dec("yl") * dec("yt")).alias("say"),
-        F.sum(dec("xl") * dec("yt")).alias("sby"),
-        F.sum(dec("yt") * dec("yt")).alias("syy"),
-    )
-    nd = F.col("n").cast("double")
-    d = lambda c: F.col(c).cast("double")  # noqa: E731
-    # centered moments
-    caa = d("saa") - d("sa") * d("sa") / nd
-    cbb = d("sbb") - d("sb") * d("sb") / nd
-    cab = d("sab") - d("sa") * d("sb") / nd
-    cay = d("say") - d("sa") * d("sy") / nd
-    cby = d("sby") - d("sb") * d("sy") / nd
-    cyy = d("syy") - d("sy") * d("sy") / nd
-    # restricted: beta_r = cay/caa; SSR_r = cyy - cay^2/caa
-    ssr_r = cyy - cay * cay / caa
-    # unrestricted via Cramer on [[caa, cab], [cab, cbb]]
-    det = caa * cbb - cab * cab
-    beta = (cay * cbb - cby * cab) / det
-    gamma = (caa * cby - cab * cay) / det
-    ssr_u = cyy - beta * cay - gamma * cby
+    mom = granger_lag_moments(spark, sf_dir)
+    nd, ssr_r, beta, gamma, ssr_u = granger_lag_fit()
     f_stat = (ssr_r - ssr_u) / (ssr_u / (nd - 3.0))
     return mom.select(
         F.col("n").alias("n_obs"),
@@ -91,36 +46,7 @@ def _q_granger_causality_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_SQL_GRANGER_CAUSALITY_DAILY = """
-WITH day AS (
-  SELECT CAST(o_orderdate AS DATE) AS day,
-         sum(CAST(round(o_totalprice * 100, 0) AS BIGINT)) AS y,
-         count(*) AS x
-  FROM orders GROUP BY 1
-), ranked AS (
-  SELECT y, x, row_number() OVER (ORDER BY day) AS rk FROM day
-), rows_ AS (
-  SELECT a.y AS yt, b.y AS yl, b.x AS xl
-  FROM ranked a JOIN ranked b ON a.rk = b.rk + 1
-), mom AS (
-  SELECT count(*) AS n, sum(yt) AS sy, sum(yl) AS sa, sum(xl) AS sb,
-         sum(CAST(yl AS HUGEINT) * yl) AS saa,
-         sum(CAST(xl AS HUGEINT) * xl) AS sbb,
-         sum(CAST(yl AS HUGEINT) * xl) AS sab,
-         sum(CAST(yl AS HUGEINT) * yt) AS say,
-         sum(CAST(xl AS HUGEINT) * yt) AS sby,
-         sum(CAST(yt AS HUGEINT) * yt) AS syy
-  FROM rows_
-), c AS (
-  SELECT n,
-         CAST(saa AS DOUBLE) - CAST(sa AS DOUBLE) * sa / n AS caa,
-         CAST(sbb AS DOUBLE) - CAST(sb AS DOUBLE) * sb / n AS cbb,
-         CAST(sab AS DOUBLE) - CAST(sa AS DOUBLE) * sb / n AS cab,
-         CAST(say AS DOUBLE) - CAST(sa AS DOUBLE) * sy / n AS cay,
-         CAST(sby AS DOUBLE) - CAST(sb AS DOUBLE) * sy / n AS cby,
-         CAST(syy AS DOUBLE) - CAST(sy AS DOUBLE) * sy / n AS cyy
-  FROM mom
-), g AS (
+_SQL_GRANGER_CAUSALITY_DAILY = SQL_GRANGER_LAG_MOMENTS + """, g AS (
   SELECT n, caa, cbb, cab, cay, cby, cyy,
          cyy - cay * cay / caa AS ssr_r,
          (cay * cbb - cby * cab) / (caa * cbb - cab * cab) AS beta,

@@ -35,12 +35,19 @@ from ..functions.vectors import zorder_value
 from ..operators.prefix_sum import global_row_number
 from ..sources.tables import load_table
 from .catalog import QuerySpec
+from .fragments import (
+    CK_HI,
+    CK_LO,
+    DT_HI,
+    DT_LO,
+    N_ZONES,
+    SQL_ZONED_NATURAL_ZORDER,
+    SQL_ZONE_STATS,
+    zone_pruning_totals,
+)
 
 _BITS = 8
 _N = 1 << _BITS  # 256-band grid per dimension
-_N_ZONES = 100
-_CK_LO, _CK_HI = 96, 127
-_DT_LO, _DT_HI = 96, 127
 _EPOCH = "1995-01-01"
 
 #: stage sizes for the unrolled xy2d loop
@@ -134,15 +141,15 @@ def _q_hilbert_zone_pruning_audit(spark: SparkSession, sf_dir: str) -> DataFrame
         "z", zorder_value(F.col("ck_band"), F.col("dt_band"), bits=_BITS)
     )
     pred = (
-        F.col("ck_band").between(_CK_LO, _CK_HI)
-        & F.col("dt_band").between(_DT_LO, _DT_HI)
+        F.col("ck_band").between(CK_LO, CK_HI)
+        & F.col("dt_band").between(DT_LO, DT_HI)
     ).cast("int")
 
     def zoned(order_exprs, layout: str) -> DataFrame:
         rn = global_row_number(keyed, order_exprs, out_col="rn", n_col="n")
         return rn.select(
             F.lit(layout).alias("layout"),
-            F.expr(f"(rn - 1) * {_N_ZONES} div n").alias("zone"),
+            F.expr(f"(rn - 1) * {N_ZONES} div n").alias("zone"),
             "ck_band",
             "dt_band",
             pred.alias("hit"),
@@ -153,30 +160,7 @@ def _q_hilbert_zone_pruning_audit(spark: SparkSession, sf_dir: str) -> DataFrame
         .unionByName(zoned([F.asc("z"), F.asc("o_orderkey")], "zorder"))
         .unionByName(zoned([F.asc("hil"), F.asc("o_orderkey")], "hilbert"))
     )
-    zones = all3.groupBy("layout", "zone").agg(
-        F.count(F.lit(1)).alias("n"),
-        F.min("ck_band").alias("mn_ck"),
-        F.max("ck_band").alias("mx_ck"),
-        F.min("dt_band").alias("mn_dt"),
-        F.max("dt_band").alias("mx_dt"),
-        F.sum("hit").alias("n_hit"),
-    )
-    scanned = (
-        (F.col("mx_ck") >= _CK_LO)
-        & (F.col("mn_ck") <= _CK_HI)
-        & (F.col("mx_dt") >= _DT_LO)
-        & (F.col("mn_dt") <= _DT_HI)
-    ).cast("int")
-    return (
-        zones.groupBy("layout")
-        .agg(
-            F.count(F.lit(1)).alias("zones_total"),
-            F.sum(scanned).alias("zones_scanned"),
-            F.sum(scanned * F.col("n")).alias("rows_scanned"),
-            F.sum("n_hit").alias("rows_matched"),
-        )
-        .orderBy("layout")
-    )
+    return zone_pruning_totals(all3).orderBy("layout")
 
 
 _SQL_HILBERT_ZONE_PRUNING_AUDIT = f"""
@@ -201,39 +185,24 @@ zed AS (
     for i in range(_BITS))} AS z
   FROM hil
 ), ranked AS (
-  SELECT 'natural' AS layout,
-         (row_number() OVER (ORDER BY o_orderkey) - 1) * {_N_ZONES}
-           // (count(*) OVER ()) AS zone,
-         ck_band, dt_band
-  FROM zed
-  UNION ALL
-  SELECT 'zorder' AS layout,
-         (row_number() OVER (ORDER BY z, o_orderkey) - 1) * {_N_ZONES}
-           // (count(*) OVER ()) AS zone,
-         ck_band, dt_band
-  FROM zed
+{SQL_ZONED_NATURAL_ZORDER}
   UNION ALL
   SELECT 'hilbert' AS layout,
-         (row_number() OVER (ORDER BY hd, o_orderkey) - 1) * {_N_ZONES}
+         (row_number() OVER (ORDER BY hd, o_orderkey) - 1) * {N_ZONES}
            // (count(*) OVER ()) AS zone,
          ck_band, dt_band
   FROM zed
 ), zones AS (
-  SELECT layout, zone, count(*) AS n,
-         min(ck_band) AS mn_ck, max(ck_band) AS mx_ck,
-         min(dt_band) AS mn_dt, max(dt_band) AS mx_dt,
-         sum(CASE WHEN ck_band BETWEEN {_CK_LO} AND {_CK_HI}
-                   AND dt_band BETWEEN {_DT_LO} AND {_DT_HI}
-                  THEN 1 ELSE 0 END) AS n_hit
+{SQL_ZONE_STATS}
   FROM ranked GROUP BY 1, 2
 )
 SELECT layout,
        CAST(count(*) AS BIGINT) AS zones_total,
-       CAST(sum(CASE WHEN mx_ck >= {_CK_LO} AND mn_ck <= {_CK_HI}
-                      AND mx_dt >= {_DT_LO} AND mn_dt <= {_DT_HI}
+       CAST(sum(CASE WHEN mx_ck >= {CK_LO} AND mn_ck <= {CK_HI}
+                      AND mx_dt >= {DT_LO} AND mn_dt <= {DT_HI}
                      THEN 1 ELSE 0 END) AS BIGINT) AS zones_scanned,
-       CAST(sum(CASE WHEN mx_ck >= {_CK_LO} AND mn_ck <= {_CK_HI}
-                      AND mx_dt >= {_DT_LO} AND mn_dt <= {_DT_HI}
+       CAST(sum(CASE WHEN mx_ck >= {CK_LO} AND mn_ck <= {CK_HI}
+                      AND mx_dt >= {DT_LO} AND mn_dt <= {DT_HI}
                      THEN n ELSE 0 END) AS BIGINT) AS rows_scanned,
        CAST(sum(n_hit) AS BIGINT) AS rows_matched
 FROM zones

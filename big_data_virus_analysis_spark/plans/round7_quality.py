@@ -47,8 +47,7 @@ from pyspark.sql import functions as F
 
 from ..sources.tables import load_table
 from .catalog import QuerySpec
-
-_M31 = 2147483648
+from .fragments import M31
 
 
 def _seg_priority_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -389,7 +388,7 @@ def _q_stratified_kfold_balance_audit(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings").select(
-        ((F.col("vec_id") * 2654435761) % _M31 % _KFOLDS).alias("fold"),
+        ((F.col("vec_id") * 2654435761) % M31 % _KFOLDS).alias("fold"),
         "label",
     )
     cells = emb.groupBy("fold", "label").agg(F.count(F.lit(1)).alias("nij"))
@@ -420,7 +419,7 @@ def _q_stratified_kfold_balance_audit(
 
 _SQL_STRATIFIED_KFOLD_BALANCE_AUDIT = f"""
 WITH emb AS (
-  SELECT ((vec_id * 2654435761) % {_M31}) % {_KFOLDS} AS fold, label
+  SELECT ((vec_id * 2654435761) % {M31}) % {_KFOLDS} AS fold, label
   FROM embeddings
 ), cells AS (
   SELECT fold, label, count(*) AS nij FROM emb GROUP BY 1, 2

@@ -52,6 +52,13 @@ from pyspark.sql import functions as F
 from ..operators.prefix_sum import global_row_number
 from ..sources.tables import load_table
 from .catalog import QuerySpec
+from .fragments import (
+    M31,
+    SQL_RESIDUAL_DAY_FRAME,
+    residual_day_frame,
+    segment_urgent_counts,
+    welch_arm_stats,
+)
 
 _SEG_A = "AUTOMOBILE"
 _SEG_B = "HOUSEHOLD"
@@ -112,18 +119,7 @@ def _q_welch_t_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(F.when(F.col("segment") == _SEG_B, F.col("q"))).alias("q2"),
     )
     # closed-form Welch from the exact moments (dollars)
-    n1 = F.col("n1").cast("double")
-    n2 = F.col("n2").cast("double")
-    m1 = F.col("s1").cast("double") / (100.0 * n1)
-    m2 = F.col("s2").cast("double") / (100.0 * n2)
-    v1 = (
-        F.col("q1").cast("double")
-        - F.col("s1").cast("double") * F.col("s1").cast("double") / n1
-    ) / ((n1 - 1.0) * 10000.0)
-    v2 = (
-        F.col("q2").cast("double")
-        - F.col("s2").cast("double") * F.col("s2").cast("double") / n2
-    ) / ((n2 - 1.0) * 10000.0)
+    n1, n2, m1, m2, v1, v2 = welch_arm_stats()
     se2 = v1 / n1 + v2 / n2
     t = (m1 - m2) / F.sqrt(se2)
     df = (se2 * se2) / (
@@ -181,87 +177,8 @@ FROM g
 # --------------------------------------------------------------------------
 
 
-def _residual_day_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Day frame with OLS residuals of daily revenue (cents) on day
-    index, quantized to exact integer cents (``ec``): the fit comes
-    from exact integer moments cast to double only inside the fixed
-    closed form, so every engine computes the identical a/b and the
-    identical per-row residual before quantization."""
-    orders = load_table(spark, sf_dir, "orders")
-    day = (
-        orders.select(
-            F.datediff(F.to_date("o_orderdate"), F.lit("1995-01-01").cast("date"))
-            .cast("bigint")
-            .alias("i"),
-            F.round(F.col("o_totalprice") * 100).cast("bigint").alias("yc"),
-        )
-        .groupBy("i")
-        .agg(F.sum("yc").alias("yc"))
-    )
-    mom = day.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum("i").alias("sx"),
-        F.sum(F.col("i") * F.col("i")).alias("sxx"),
-        F.sum("yc").alias("sy"),
-        F.sum(
-            F.col("i").cast("decimal(19,0)") * F.col("yc").cast("decimal(19,0)")
-        ).alias("sxy"),
-    )
-    nd = F.col("n").cast("double")
-    b = (
-        nd * F.col("sxy").cast("double")
-        - F.col("sx").cast("double") * F.col("sy").cast("double")
-    ) / (
-        nd * F.col("sxx").cast("double")
-        - F.col("sx").cast("double") * F.col("sx").cast("double")
-    )
-    a = (F.col("sy").cast("double") - b * F.col("sx").cast("double")) / nd
-    fit = mom.select(b.alias("b"), a.alias("a"))
-    return day.crossJoin(F.broadcast(fit)).select(
-        "i",
-        F.floor(
-            F.col("yc").cast("double")
-            - (F.col("a") + F.col("b") * F.col("i").cast("double"))
-            + 0.5
-        )
-        .cast("bigint")
-        .alias("ec"),
-    )
-
-
-_SQL_RESIDUAL_DAY_FRAME = """
-WITH day AS (
-  SELECT CAST(date_diff('day', DATE '1995-01-01', CAST(o_orderdate AS DATE))
-              AS BIGINT) AS i,
-         sum(CAST(round(o_totalprice * 100, 0) AS BIGINT)) AS yc
-  FROM orders GROUP BY 1
-), mom AS (
-  SELECT count(*) AS n, sum(i) AS sx, sum(i * i) AS sxx, sum(yc) AS sy,
-         sum(CAST(i AS HUGEINT) * yc) AS sxy
-  FROM day
-), fit AS (
-  SELECT (CAST(n AS DOUBLE) * CAST(sxy AS DOUBLE)
-          - CAST(sx AS DOUBLE) * CAST(sy AS DOUBLE))
-         / (CAST(n AS DOUBLE) * CAST(sxx AS DOUBLE)
-            - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE)) AS b,
-         n, sx, sy
-  FROM mom
-), fit2 AS (
-  SELECT b, (CAST(sy AS DOUBLE) - b * CAST(sx AS DOUBLE))
-            / CAST(n AS DOUBLE) AS a
-  FROM fit
-), resid AS (
-  SELECT day.i,
-         CAST(floor(CAST(day.yc AS DOUBLE)
-                    - (fit2.a + fit2.b * CAST(day.i AS DOUBLE)) + 0.5)
-              AS BIGINT) AS ec
-  FROM day CROSS JOIN fit2
-)
-"""
-
-
 def _q_durbin_watson_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
-    resid = _residual_day_frame(spark, sf_dir)
+    resid = residual_day_frame(spark, sf_dir)
     ranked = global_row_number(resid, [F.asc("i")], out_col="rk")
     cur = ranked.select("rk", F.col("ec").alias("e1"))
     prv = ranked.select((F.col("rk") + 1).alias("rk"), F.col("ec").alias("e0"))
@@ -287,7 +204,7 @@ def _q_durbin_watson_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 _SQL_DURBIN_WATSON_DAILY = (
-    _SQL_RESIDUAL_DAY_FRAME
+    SQL_RESIDUAL_DAY_FRAME
     + """
 , ranked AS (
   SELECT ec, row_number() OVER (ORDER BY i) AS rk FROM resid
@@ -307,7 +224,7 @@ FROM den CROSS JOIN num
 
 
 def _q_breusch_pagan_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
-    resid = _residual_day_frame(spark, sf_dir)
+    resid = residual_day_frame(spark, sf_dir)
     # Residuals are quantized from cents to $10-units (ecq =
     # round(ec/1000)) BEFORE squaring twice: syy sums ecq^4 terms, so
     # the headroom bound is n * max|ecq|^4 — at sf0.1 (|ec| ~ 1e8
@@ -351,7 +268,7 @@ def _q_breusch_pagan_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 _SQL_BREUSCH_PAGAN_DAILY = (
-    _SQL_RESIDUAL_DAY_FRAME
+    SQL_RESIDUAL_DAY_FRAME
     + """
 , stagedq AS (
   SELECT i, CAST(floor(ec / 1000.0 + 0.5) AS BIGINT) AS ecq FROM resid
@@ -393,21 +310,7 @@ _BH_ALPHA = 0.10
 
 
 def _q_bh_fdr_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
-    orders = load_table(spark, sf_dir, "orders")
-    customer = load_table(spark, sf_dir, "customer")
-    base = orders.join(
-        F.broadcast(customer.select("c_custkey", "c_mktsegment")),
-        orders["o_custkey"] == customer["c_custkey"],
-    ).select(
-        F.col("c_mktsegment").alias("segment"),
-        (F.col("o_orderpriority") == "1-URGENT").cast("bigint").alias("u"),
-    )
-    seg = base.groupBy("segment").agg(
-        F.count(F.lit(1)).alias("n"), F.sum("u").alias("nu")
-    )
-    tot = seg.agg(
-        F.sum("n").alias("ntot"), F.sum("nu").alias("utot"), F.count(F.lit(1)).alias("m")
-    )
+    seg, tot = segment_urgent_counts(spark, sf_dir)
     z_expr = (
         F.col("nu").cast("double") / F.col("n").cast("double")
         - F.col("p0")
@@ -496,7 +399,6 @@ ORDER BY p_rank
 # --------------------------------------------------------------------------
 
 _N_PERMS = 64
-_M31 = 2147483648
 
 
 def _q_permutation_test_det(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -526,7 +428,7 @@ def _q_permutation_test_det(spark: SparkSession, sf_dir: str) -> DataFrame:
     # distinct ~50/50 labelings (test_permutation_labelings_distinct).
     # Allocation is hash-balanced, not exactly equal-n.  Products stay
     # < 2^63 on both engines (no wraparound either side).
-    h = (F.col("o_orderkey") * F.lit(2654435761) + F.col("k") * F.lit(2246822519)) % _M31
+    h = (F.col("o_orderkey") * F.lit(2654435761) + F.col("k") * F.lit(2246822519)) % M31
     permed = base.crossJoin(F.broadcast(perms)).select(
         "k", "yc", (h.bitwiseAND(F.lit(65536)) == 0).alias("to_a")
     )
@@ -567,7 +469,7 @@ obs AS (
   FROM base
 ), permed AS (
   SELECT k.k, b.yc,
-         ((b.o_orderkey * 2654435761 + k.k * 2246822519) % {_M31})
+         ((b.o_orderkey * 2654435761 + k.k * 2246822519) % {M31})
           & 65536 = 0 AS to_a
   FROM base b CROSS JOIN (SELECT unnest(generate_series(1, {_N_PERMS})) AS k) k
 ), per_k AS (

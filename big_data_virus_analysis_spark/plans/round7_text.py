@@ -41,11 +41,11 @@ from pyspark.sql import functions as F
 
 from ..sources.tables import load_table
 from .catalog import QuerySpec
+from .fragments import M31
 
 _WIN_GRAM = 4
 _WIN_W = 4
 _TOPK = 15
-_M31 = 2147483648
 
 
 # --------------------------------------------------------------------------
@@ -72,7 +72,7 @@ def _q_winnowing_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.transform(
             F.col("_grams"),
             lambda g: F.conv(F.substring(F.md5(g), 1, 15), 16, 10).cast("bigint")
-            % _M31,
+            % M31,
         ).alias("_hs"),
     )
     fps = hashes.select(
@@ -107,7 +107,7 @@ WITH toks AS (
            generate_series(1, len(t) - {_WIN_GRAM - 1}),
            i -> CAST(('0x' || substr(
                   md5(array_to_string(t[i:i+{_WIN_GRAM - 1}], ' ')),
-                  1, 15)) AS BIGINT) % {_M31}
+                  1, 15)) AS BIGINT) % {M31}
          ) AS h
   FROM toks
 ), fps AS (

@@ -43,6 +43,7 @@ from pyspark.sql import functions as F
 from ..operators.prefix_sum import global_row_number
 from ..sources.tables import load_table
 from .catalog import QuerySpec
+from .fragments import day_index_ols, day_index_revenue
 
 _HURST_SIZES = (16, 64, 256)
 
@@ -299,35 +300,8 @@ _MAD_CONST = 1.4826
 
 
 def _q_huber_irls_step_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
-    orders = load_table(spark, sf_dir, "orders")
-    day = (
-        orders.select(
-            F.datediff(F.to_date("o_orderdate"), F.lit("1995-01-01").cast("date"))
-            .cast("bigint")
-            .alias("i"),
-            F.round(F.col("o_totalprice") * 100).cast("bigint").alias("yc"),
-        )
-        .groupBy("i")
-        .agg(F.sum("yc").alias("yc"))
-    )
-    mom = day.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum("i").alias("sx"),
-        F.sum(F.col("i") * F.col("i")).alias("sxx"),
-        F.sum("yc").alias("sy"),
-        F.sum(
-            F.col("i").cast("decimal(19,0)") * F.col("yc").cast("decimal(19,0)")
-        ).alias("sxy"),
-    )
-    nd = F.col("n").cast("double")
-    b0 = (
-        nd * F.col("sxy").cast("double")
-        - F.col("sx").cast("double") * F.col("sy").cast("double")
-    ) / (
-        nd * F.col("sxx").cast("double")
-        - F.col("sx").cast("double") * F.col("sx").cast("double")
-    )
-    a0 = (F.col("sy").cast("double") - b0 * F.col("sx").cast("double")) / nd
+    day, mom = day_index_revenue(spark, sf_dir)
+    b0, a0 = day_index_ols()
     fit0 = mom.select(b0.alias("b0"), a0.alias("a0"))
     resid = day.crossJoin(F.broadcast(fit0)).select(
         "i",

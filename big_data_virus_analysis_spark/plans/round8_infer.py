@@ -7,7 +7,7 @@ bootstrap.
   diagnostics family next to DW/Breusch–Pagan): leverage has the
   simple-regression closed form hᵢ = 1/n + (tᵢ−t̄)²/Sₜₜ, and
   Dᵢ = eᵢ²·hᵢ / (p·s²·(1−hᵢ)²) with p=2.  Residuals are the SHARED
-  exact integer frame of round7_stats (`_residual_day_frame`); top 10
+  exact integer frame of round7_stats (`fragments.residual_day_frame`); top 10
   most influential days.
 * ``aic_bic_granger_compare`` — AIC/BIC comparison of the restricted
   (y ~ y_lag) vs unrestricted (y ~ y_lag + x_lag) Granger models over
@@ -40,7 +40,14 @@ from pyspark.sql import functions as F
 from ..operators.prefix_sum import global_row_number
 from ..sources.tables import load_table
 from .catalog import QuerySpec
-from .round7_stats import _residual_day_frame, _SQL_RESIDUAL_DAY_FRAME
+from .fragments import (
+    M31,
+    SQL_GRANGER_LAG_MOMENTS,
+    SQL_RESIDUAL_DAY_FRAME,
+    granger_lag_fit,
+    granger_lag_moments,
+    residual_day_frame,
+)
 
 # --------------------------------------------------------------------------
 # cooks_distance_daily
@@ -50,7 +57,7 @@ _COOKS_TOPK = 10
 
 
 def _q_cooks_distance_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
-    resid = _residual_day_frame(spark, sf_dir)  # (i, ec) exact integers
+    resid = residual_day_frame(spark, sf_dir)  # (i, ec) exact integers
     mom = resid.agg(
         F.count(F.lit(1)).alias("n"),
         F.sum("i").alias("si"),
@@ -93,7 +100,7 @@ def _q_cooks_distance_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 _SQL_COOKS_DISTANCE_DAILY = (
-    _SQL_RESIDUAL_DAY_FRAME
+    SQL_RESIDUAL_DAY_FRAME
     + f"""
 , mom3 AS (
   SELECT count(*) AS n, sum(i) AS si,
@@ -130,47 +137,8 @@ LIMIT {_COOKS_TOPK}
 
 
 def _q_aic_bic_granger_compare(spark: SparkSession, sf_dir: str) -> DataFrame:
-    orders = load_table(spark, sf_dir, "orders")
-    day = (
-        orders.select(
-            F.to_date("o_orderdate").alias("day"),
-            F.round(F.col("o_totalprice") * 100).cast("bigint").alias("yc"),
-        )
-        .groupBy("day")
-        .agg(F.sum("yc").alias("y"), F.count(F.lit(1)).alias("x"))
-    )
-    ranked = global_row_number(day, [F.asc("day")], out_col="rk")
-    cur = ranked.select("rk", F.col("y").alias("yt"))
-    prv = ranked.select(
-        (F.col("rk") + 1).alias("rk"), F.col("y").alias("yl"), F.col("x").alias("xl")
-    )
-    rows = cur.join(prv, "rk")
-    dec = lambda c: F.col(c).cast("decimal(19,0)")  # noqa: E731
-    mom = rows.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum("yt").alias("sy"),
-        F.sum("yl").alias("sa"),
-        F.sum("xl").alias("sb"),
-        F.sum(dec("yl") * dec("yl")).alias("saa"),
-        F.sum(dec("xl") * dec("xl")).alias("sbb"),
-        F.sum(dec("yl") * dec("xl")).alias("sab"),
-        F.sum(dec("yl") * dec("yt")).alias("say"),
-        F.sum(dec("xl") * dec("yt")).alias("sby"),
-        F.sum(dec("yt") * dec("yt")).alias("syy"),
-    )
-    nd = F.col("n").cast("double")
-    d = lambda c: F.col(c).cast("double")  # noqa: E731
-    caa = d("saa") - d("sa") * d("sa") / nd
-    cbb = d("sbb") - d("sb") * d("sb") / nd
-    cab = d("sab") - d("sa") * d("sb") / nd
-    cay = d("say") - d("sa") * d("sy") / nd
-    cby = d("sby") - d("sb") * d("sy") / nd
-    cyy = d("syy") - d("sy") * d("sy") / nd
-    ssr_r = cyy - cay * cay / caa
-    det = caa * cbb - cab * cab
-    beta = (cay * cbb - cby * cab) / det
-    gamma = (caa * cby - cab * cay) / det
-    ssr_u = cyy - beta * cay - gamma * cby
+    mom = granger_lag_moments(spark, sf_dir)
+    nd, ssr_r, beta, gamma, ssr_u = granger_lag_fit()
     # SSRs are in cents^2; IC differences are scale-invariant (the
     # n*ln(scale) terms cancel between models)
     ic = lambda ssr, k, pen: nd * F.log(ssr / nd) + pen * k  # noqa: E731
@@ -187,36 +155,7 @@ def _q_aic_bic_granger_compare(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_SQL_AIC_BIC_GRANGER_COMPARE = """
-WITH day AS (
-  SELECT CAST(o_orderdate AS DATE) AS day,
-         sum(CAST(round(o_totalprice * 100, 0) AS BIGINT)) AS y,
-         count(*) AS x
-  FROM orders GROUP BY 1
-), ranked AS (
-  SELECT y, x, row_number() OVER (ORDER BY day) AS rk FROM day
-), rows_ AS (
-  SELECT a.y AS yt, b.y AS yl, b.x AS xl
-  FROM ranked a JOIN ranked b ON a.rk = b.rk + 1
-), mom AS (
-  SELECT count(*) AS n, sum(yt) AS sy, sum(yl) AS sa, sum(xl) AS sb,
-         sum(CAST(yl AS HUGEINT) * yl) AS saa,
-         sum(CAST(xl AS HUGEINT) * xl) AS sbb,
-         sum(CAST(yl AS HUGEINT) * xl) AS sab,
-         sum(CAST(yl AS HUGEINT) * yt) AS say,
-         sum(CAST(xl AS HUGEINT) * yt) AS sby,
-         sum(CAST(yt AS HUGEINT) * yt) AS syy
-  FROM rows_
-), c AS (
-  SELECT n,
-         CAST(saa AS DOUBLE) - CAST(sa AS DOUBLE) * sa / n AS caa,
-         CAST(sbb AS DOUBLE) - CAST(sb AS DOUBLE) * sb / n AS cbb,
-         CAST(sab AS DOUBLE) - CAST(sa AS DOUBLE) * sb / n AS cab,
-         CAST(say AS DOUBLE) - CAST(sa AS DOUBLE) * sy / n AS cay,
-         CAST(sby AS DOUBLE) - CAST(sb AS DOUBLE) * sy / n AS cby,
-         CAST(syy AS DOUBLE) - CAST(sy AS DOUBLE) * sy / n AS cyy
-  FROM mom
-), g AS (
+_SQL_AIC_BIC_GRANGER_COMPARE = SQL_GRANGER_LAG_MOMENTS + """, g AS (
   SELECT n, cyy - cay * cay / caa AS ssr_r,
          cyy - ((cay * cbb - cby * cab) / (caa * cbb - cab * cab)) * cay
              - ((caa * cby - cab * cay) / (caa * cbb - cab * cab)) * cby
@@ -317,7 +256,6 @@ ORDER BY segment
 # --------------------------------------------------------------------------
 
 _BOOT_B = 32
-_M31 = 2147483648
 
 
 def _q_bootstrap_mean_ci_det(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -339,7 +277,7 @@ def _q_bootstrap_mean_ci_det(spark: SparkSession, sf_dir: str) -> DataFrame:
         (
             (
                 (F.col("rk") * F.lit(2654435761) + F.col("k") * F.lit(2246822519))
-                % _M31
+                % M31
             )
             % F.col("n")
             + 1
@@ -401,7 +339,7 @@ WITH day AS (
   FROM day
 ), draws AS (
   SELECT k.k,
-         ((r.rk * 2654435761 + k.k * 2246822519) % {_M31}) % r.n + 1 AS idx
+         ((r.rk * 2654435761 + k.k * 2246822519) % {M31}) % r.n + 1 AS idx
   FROM ranked r
   CROSS JOIN (SELECT unnest(generate_series(1, {_BOOT_B})) AS k) k
 ), means AS (

@@ -40,6 +40,7 @@ from pyspark.sql import functions as F
 
 from ..sources.tables import load_table
 from .catalog import QuerySpec
+from .fragments import M31
 
 # --------------------------------------------------------------------------
 # softmax_gd_step_exact
@@ -208,7 +209,6 @@ ORDER BY class
 # --------------------------------------------------------------------------
 
 _HFD_MOD = 10  # keep-1-in-10 arithmetic-hash sample
-_M31 = 2147483648
 _LN_2_OVER_DELTA = "ln(2.0 / 0.05)"
 
 
@@ -217,7 +217,7 @@ def _q_hoeffding_bound_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         "o_orderkey",
         F.round(F.col("o_totalprice") * 100).cast("bigint").alias("yc"),
     )
-    in_sample = ((F.col("o_orderkey") * F.lit(2654435761)) % _M31) % _HFD_MOD == 0
+    in_sample = ((F.col("o_orderkey") * F.lit(2654435761)) % M31) % _HFD_MOD == 0
     mom = orders.agg(
         F.count(F.lit(1)).alias("n"),
         F.sum("yc").alias("s"),
@@ -247,7 +247,7 @@ def _q_hoeffding_bound_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 _SQL_HOEFFDING_BOUND_AUDIT = f"""
 WITH o AS (
   SELECT o_orderkey, CAST(round(o_totalprice * 100, 0) AS BIGINT) AS yc,
-         ((o_orderkey * 2654435761) % {_M31}) % {_HFD_MOD} = 0 AS in_s
+         ((o_orderkey * 2654435761) % {M31}) % {_HFD_MOD} = 0 AS in_s
   FROM orders
 ), mom AS (
   SELECT count(*) AS n, sum(yc) AS s, min(yc) AS lo, max(yc) AS hi,
@@ -281,7 +281,7 @@ _MCN_PRICE_CENTS = 15_000_000  # scorer B: urgent iff total < $150,000
 
 def _q_mcnemar_fixed_scorers(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load_table(spark, sf_dir, "orders")
-    h = (F.col("o_custkey") * F.lit(2654435761)) % _M31
+    h = (F.col("o_custkey") * F.lit(2654435761)) % M31
     base = orders.select(
         (F.col("o_orderpriority") == "1-URGENT").alias("label"),
         (h.bitwiseAND(F.lit(65536)) == 0).alias("pred_a"),
@@ -324,7 +324,7 @@ def _q_mcnemar_fixed_scorers(spark: SparkSession, sf_dir: str) -> DataFrame:
 _SQL_MCNEMAR_FIXED_SCORERS = f"""
 WITH base AS (
   SELECT (o_orderpriority = '1-URGENT') AS label,
-         (((o_custkey * 2654435761) % {_M31}) & 65536 = 0) AS pred_a,
+         (((o_custkey * 2654435761) % {M31}) & 65536 = 0) AS pred_a,
          (CAST(round(o_totalprice * 100, 0) AS BIGINT) < {_MCN_PRICE_CENTS})
            AS pred_b
   FROM orders

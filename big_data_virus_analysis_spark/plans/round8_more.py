@@ -32,14 +32,14 @@ from pyspark.sql import functions as F
 
 from ..sources.tables import load_table
 from .catalog import QuerySpec
+from .fragments import M31
 
-_M31 = 2147483648
 _MCN_PRICE_CENTS = 15_000_000
 
 
 def _q_cohens_kappa_scorers(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load_table(spark, sf_dir, "orders")
-    h = (F.col("o_custkey") * F.lit(2654435761)) % _M31
+    h = (F.col("o_custkey") * F.lit(2654435761)) % M31
     base = orders.select(
         (h.bitwiseAND(F.lit(65536)) == 0).alias("pa"),
         (
@@ -74,7 +74,7 @@ def _q_cohens_kappa_scorers(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _SQL_COHENS_KAPPA_SCORERS = f"""
 WITH base AS (
-  SELECT (((o_custkey * 2654435761) % {_M31}) & 65536 = 0) AS pa,
+  SELECT (((o_custkey * 2654435761) % {M31}) & 65536 = 0) AS pa,
          (CAST(round(o_totalprice * 100, 0) AS BIGINT) < {_MCN_PRICE_CENTS})
            AS pb
   FROM orders

@@ -40,6 +40,7 @@ from pyspark.sql import functions as F
 from ..operators.prefix_sum import global_row_number
 from ..sources.tables import load_table
 from .catalog import QuerySpec
+from .fragments import M31
 
 # --------------------------------------------------------------------------
 # rolling_correlation_30d
@@ -199,8 +200,6 @@ ORDER BY step
 # class_balanced_downsample
 # --------------------------------------------------------------------------
 
-_M31 = 2147483648
-
 
 def _q_class_balanced_downsample(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings").select(
@@ -213,7 +212,7 @@ def _q_class_balanced_downsample(spark: SparkSession, sf_dir: str) -> DataFrame:
     counts = emb.groupBy("label").agg(F.count(F.lit(1)).alias("n_before"))
     cap = counts.agg(F.min("n_before").alias("cap"))
     w = Window.partitionBy("label").orderBy(
-        (F.col("vec_id") * F.lit(2654435761)) % _M31, "vec_id"
+        (F.col("vec_id") * F.lit(2654435761)) % M31, "vec_id"
     )
     kept = (
         emb.withColumn("rk", F.row_number().over(w))
@@ -252,7 +251,7 @@ WITH emb AS (
 ), ranked AS (
   SELECT *, row_number() OVER (
     PARTITION BY label
-    ORDER BY (vec_id * 2654435761) % {_M31}, vec_id
+    ORDER BY (vec_id * 2654435761) % {M31}, vec_id
   ) AS rk
   FROM emb
 ), kept AS (

@@ -37,6 +37,7 @@ from pyspark.sql import functions as F
 from ..operators.prefix_sum import global_prefix_sum, global_row_number
 from ..sources.tables import load_table
 from .catalog import QuerySpec
+from .fragments import M31
 
 # --------------------------------------------------------------------------
 # sprt_urgent_share_drift
@@ -151,7 +152,6 @@ FROM verdict
 # conformal_interval_coverage
 # --------------------------------------------------------------------------
 
-_M31 = 2147483648
 _CONF_ALPHA = 0.10
 
 
@@ -170,7 +170,7 @@ def _q_conformal_interval_coverage(spark: SparkSession, sf_dir: str) -> DataFram
         # carry propagation; r8 ADVICE), a structured not pseudo-random
         # split.  A middle bit mixes carries from 17 partial products.
         (
-            ((F.col("o_orderkey") * F.lit(2654435761)) % _M31).bitwiseAND(
+            ((F.col("o_orderkey") * F.lit(2654435761)) % M31).bitwiseAND(
                 F.lit(65536)
             )
             == 0
@@ -227,7 +227,7 @@ _SQL_CONFORMAL_INTERVAL_COVERAGE = f"""
 WITH base AS (
   SELECT o.o_orderkey, c.c_mktsegment AS segment,
          CAST(round(o.o_totalprice * 100, 0) AS BIGINT) AS yc,
-         (((o.o_orderkey * 2654435761) % {_M31}) & 65536) = 0 AS is_calib
+         (((o.o_orderkey * 2654435761) % {M31}) & 65536) = 0 AS is_calib
   FROM orders o JOIN customer c ON o.o_custkey = c.c_custkey
 ), pred AS (
   SELECT segment, CAST(sum(yc) AS DOUBLE) / count(*) AS pred

@@ -39,6 +39,7 @@ from pyspark.sql import functions as F
 from ..operators.prefix_sum import global_row_number
 from ..sources.tables import load_table
 from .catalog import QuerySpec
+from .fragments import segment_urgent_counts
 
 # --------------------------------------------------------------------------
 # jarque_bera_daily
@@ -241,23 +242,7 @@ _HOLM_ALPHA = 0.10
 
 
 def _q_holm_bonferroni_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
-    orders = load_table(spark, sf_dir, "orders")
-    customer = load_table(spark, sf_dir, "customer")
-    base = orders.join(
-        F.broadcast(customer.select("c_custkey", "c_mktsegment")),
-        orders["o_custkey"] == customer["c_custkey"],
-    ).select(
-        F.col("c_mktsegment").alias("segment"),
-        (F.col("o_orderpriority") == "1-URGENT").cast("bigint").alias("u"),
-    )
-    seg = base.groupBy("segment").agg(
-        F.count(F.lit(1)).alias("n"), F.sum("u").alias("nu")
-    )
-    tot = seg.agg(
-        F.sum("n").alias("ntot"),
-        F.sum("nu").alias("utot"),
-        F.count(F.lit(1)).alias("m"),
-    )
+    seg, tot = segment_urgent_counts(spark, sf_dir)
     p0 = F.col("utot").cast("double") / F.col("ntot").cast("double")
     z = F.round(
         (F.col("nu").cast("double") / F.col("n").cast("double") - p0)

@@ -33,8 +33,8 @@ from pyspark.sql import functions as F
 
 from ..sources.tables import load_table
 from .catalog import QuerySpec
+from .fragments import M31
 
-_M31 = 2147483648
 #: price threshold shared with mcnemar_fixed_scorers (round8_ml)
 _EPI_PRICE_CENTS = 15_000_000
 
@@ -128,8 +128,8 @@ ORDER BY segment
 
 def _q_cochrans_q_scorers(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load_table(spark, sf_dir, "orders")
-    h_cust = (F.col("o_custkey") * F.lit(2654435761)) % _M31
-    h_ord = (F.col("o_orderkey") * F.lit(2654435761)) % _M31
+    h_cust = (F.col("o_custkey") * F.lit(2654435761)) % M31
+    h_ord = (F.col("o_orderkey") * F.lit(2654435761)) % M31
     base = orders.select(
         (F.col("o_orderpriority") == "1-URGENT").alias("label"),
         (h_cust.bitwiseAND(F.lit(65536)) == 0).alias("p1"),
@@ -178,9 +178,9 @@ def _q_cochrans_q_scorers(spark: SparkSession, sf_dir: str) -> DataFrame:
 _SQL_COCHRANS_Q_SCORERS = f"""
 WITH base AS (
   SELECT (o_orderpriority = '1-URGENT') AS label,
-         (((o_custkey * 2654435761) % {_M31}) & 65536) = 0 AS p1,
+         (((o_custkey * 2654435761) % {M31}) & 65536) = 0 AS p1,
          CAST(round(o_totalprice * 100, 0) AS BIGINT) < {_EPI_PRICE_CENTS} AS p2,
-         (((o_orderkey * 2654435761) % {_M31}) & 65536) = 0 AS p3
+         (((o_orderkey * 2654435761) % {M31}) & 65536) = 0 AS p3
   FROM orders
 ), xs AS (
   SELECT CASE WHEN p1 = label THEN 1 ELSE 0 END AS x1,

@@ -48,6 +48,7 @@ from pyspark.sql import functions as F
 from ..operators.caching import tracked_cache
 from ..sources.tables import fan_out, load_table
 from .catalog import QuerySpec
+from .fragments import explode_bigrams
 
 #: absolute discount D = KN_D_NUM / KN_D_DEN (Chen & Goodman's fixed
 #: discount; 3/4 keeps the probability an exact integer rational)
@@ -70,15 +71,7 @@ def _scored_bigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("source", a.alias("_toks"))
         .select(
             "source",
-            F.explode(
-                F.transform(
-                    F.sequence(F.lit(1), F.size("_toks") - 1),
-                    lambda i: F.struct(
-                        F.element_at(F.col("_toks"), i).alias("w1"),
-                        F.element_at(F.col("_toks"), i + 1).alias("w2"),
-                    ),
-                )
-            ).alias("bg"),
+            explode_bigrams(),
         )
         .groupBy("source", F.col("bg.w1").alias("w1"), F.col("bg.w2").alias("w2"))
         .agg(F.count(F.lit(1)).alias("cnt"))

@@ -51,6 +51,7 @@ from pyspark.sql import functions as F
 from ..operators.caching import tracked_cache
 from ..sources.tables import load_table
 from .catalog import QuerySpec
+from .fragments import daily_dollars
 
 #: subsequence (window) length in days
 MP_W = 7
@@ -64,19 +65,7 @@ def _daily_dollars(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Observed-day revenue in WHOLE DOLLARS (exact: cent sums then
     round-half-up), with a dense 1-based day index.  The row_number
     runs on the calendar-day frame (≤ 2,406 rows — allowlisted)."""
-    orders = load_table(spark, sf_dir, "orders")
-    day = (
-        orders.select(
-            F.to_date("o_orderdate").alias("day"),
-            F.round(F.col("o_totalprice") * 100).cast("bigint").alias("yc"),
-        )
-        .groupBy("day")
-        .agg(
-            F.floor(F.sum("yc") / F.lit(100.0) + F.lit(0.5))
-            .cast("bigint")
-            .alias("v")
-        )
-    )
+    day = daily_dollars(spark, sf_dir, "v")
     return day.select(
         F.row_number().over(Window.orderBy("day")).alias("i"), "day", "v"
     )

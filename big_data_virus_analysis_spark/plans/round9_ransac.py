@@ -42,8 +42,8 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..operators.caching import tracked_cache
-from ..sources.tables import load_table
 from .catalog import QuerySpec
+from .fragments import daily_dollars
 
 #: two-point hypotheses drawn by the engine-free hash
 RANSAC_CANDIDATES = 16
@@ -54,19 +54,7 @@ RANSAC_TOL_DIV = 10
 
 
 def _q_ransac_line_daily_det(spark: SparkSession, sf_dir: str) -> DataFrame:
-    orders = load_table(spark, sf_dir, "orders")
-    day = (
-        orders.select(
-            F.to_date("o_orderdate").alias("day"),
-            F.round(F.col("o_totalprice") * 100).cast("bigint").alias("yc"),
-        )
-        .groupBy("day")
-        .agg(
-            F.floor(F.sum("yc") / F.lit(100.0) + F.lit(0.5))
-            .cast("bigint")
-            .alias("y")
-        )
-    )
+    day = daily_dollars(spark, sf_dir, "y")
     pts = tracked_cache(
         day.select(
             F.row_number().over(Window.orderBy("day")).alias("x"), "y"

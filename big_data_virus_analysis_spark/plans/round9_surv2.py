@@ -43,8 +43,7 @@ from pyspark.sql import functions as F
 from ..operators.prefix_sum import global_prefix_sum
 from ..sources.tables import load_table
 from .catalog import QuerySpec
-
-_DAY_US = 86_400_000_000
+from .fragments import DAY_US
 
 
 def _q_aalen_johansen_signup_outcomes(
@@ -53,7 +52,7 @@ def _q_aalen_johansen_signup_outcomes(
     ev = load_table(spark, sf_dir, "events").select(
         "user_id",
         "event_type",
-        (F.unix_micros(F.col("ts")) / _DAY_US).cast("long").alias("day"),
+        (F.unix_micros(F.col("ts")) / DAY_US).cast("long").alias("day"),
     )
     per_user = ev.groupBy("user_id").agg(
         F.min(

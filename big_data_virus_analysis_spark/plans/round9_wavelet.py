@@ -35,8 +35,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..sources.tables import load_table
 from .catalog import QuerySpec
+from .fragments import daily_dollars
 
 #: dyadic window: 2**HAAR_LEVELS leading observed days
 HAAR_LEVELS = 10
@@ -46,19 +46,7 @@ HAAR_TOPK = 15
 
 
 def _q_haar_wavelet_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    orders = load_table(spark, sf_dir, "orders")
-    day = (
-        orders.select(
-            F.to_date("o_orderdate").alias("day"),
-            F.round(F.col("o_totalprice") * 100).cast("bigint").alias("yc"),
-        )
-        .groupBy("day")
-        .agg(
-            F.floor(F.sum("yc") / F.lit(100.0) + F.lit(0.5))
-            .cast("bigint")
-            .alias("v")
-        )
-    )
+    day = daily_dollars(spark, sf_dir, "v")
     cur = (
         day.select(
             (F.row_number().over(Window.orderBy("day")) - 1).alias("pos"),

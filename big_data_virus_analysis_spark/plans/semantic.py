@@ -11,7 +11,7 @@ so the per-cluster blocks are small enough for exact scoring.
 
 Here the coarse quantizer is the deterministic per-label nearest-
 centroid assignment shared with the RAG pack
-(plans/rag.py::assign_nearest_centroid) — no ML training, so both
+(plans/fragments.py::assign_nearest_centroid) — no ML training, so both
 queries carry exact DuckDB oracles end-to-end (the trained-quantizer
 variant of the same shape is ivf_ann_topk).
 
@@ -38,7 +38,11 @@ from ..functions.vectors import cosine_similarity
 from ..operators.similarity import lsh_bucket
 from ..sources.tables import load_table
 from .catalog import QuerySpec
-from .rag import SQL_CENTROID_ASSIGN_BODY, assign_nearest_centroid
+from .fragments import (
+    SQL_CENTROID_ASSIGN_BODY,
+    assign_nearest_centroid,
+    sql_lsh_bucket_ctes,
+)
 from ..operators.caching import tracked_cache
 
 _TAU = 0.4  # rounded-cosine threshold (matches embedding_near_dup's)
@@ -80,9 +84,20 @@ def _q_semantic_dedup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _pairs(_clustered(spark, sf_dir))
 
 
+#: the within-cluster cosine pairs at the 0.4 floor, over ``dots`` and
+#: ``norms``
+_SQL_PAIRS_CTE = """), pairs AS (
+  SELECT cluster, vec_a, vec_b,
+         round(dot / (na.nrm * nb.nrm), 6) AS sim
+  FROM dots
+  JOIN norms na ON vec_a = na.vec_id
+  JOIN norms nb ON vec_b = nb.vec_id
+  WHERE round(dot / (na.nrm * nb.nrm), 6) >= 0.4
+)"""
+
 #: cluster assignment + within-cluster cosine pairs — ends with a
 #: ``pairs(cluster, vec_a, vec_b, sim)`` CTE
-_SQL_PAIRS_BODY = SQL_CENTROID_ASSIGN_BODY + """
+_SQL_PAIRS_BODY = SQL_CENTROID_ASSIGN_BODY + f"""
 , norms AS (
   SELECT vec_id, sqrt(sum(x * x)) AS nrm FROM elems GROUP BY vec_id
 ), dots AS (
@@ -94,14 +109,7 @@ _SQL_PAIRS_BODY = SQL_CENTROID_ASSIGN_BODY + """
   JOIN elems b ON b.vec_id = bb.vec_id AND b.i = a.i
   WHERE a.vec_id < b.vec_id
   GROUP BY 1, 2, 3
-), pairs AS (
-  SELECT cluster, vec_a, vec_b,
-         round(dot / (na.nrm * nb.nrm), 6) AS sim
-  FROM dots
-  JOIN norms na ON vec_a = na.vec_id
-  JOIN norms nb ON vec_b = nb.vec_id
-  WHERE round(dot / (na.nrm * nb.nrm), 6) >= 0.4
-)
+{_SQL_PAIRS_CTE}
 """
 
 _SQL_SEMANTIC_DEDUP_PAIRS = _SQL_PAIRS_BODY + """
@@ -151,25 +159,10 @@ def _q_semantic_dedup_pairs_fine(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _pairs(fine)
 
 
-_SQL_SEMANTIC_DEDUP_PAIRS_FINE = SQL_CENTROID_ASSIGN_BODY + """
+_SQL_SEMANTIC_DEDUP_PAIRS_FINE = SQL_CENTROID_ASSIGN_BODY + f"""
 , norms AS (
   SELECT vec_id, sqrt(sum(x * x)) AS nrm FROM elems GROUP BY vec_id
-), planes AS (
-  SELECT j, d,
-         ((1103515245 * (j * 64 + (d - 1)) + 12345) % 2147483648)
-           / 2147483648.0 - 0.5 AS wgt
-  FROM (SELECT unnest(generate_series(0, 3)) AS j)
-  CROSS JOIN (SELECT unnest(generate_series(1, 64)) AS d)
-), pdots AS (
-  SELECT e.vec_id, p.j, sum(e.x * p.wgt) AS pd
-  FROM elems e JOIN planes p ON e.i = p.d
-  GROUP BY 1, 2
-), buckets AS (
-  SELECT vec_id,
-         CAST(sum(CASE WHEN pd > 0 THEN (1::BIGINT << j) ELSE 0 END) AS BIGINT)
-           AS bucket
-  FROM pdots GROUP BY vec_id
-), fine AS (
+{sql_lsh_bucket_ctes(4)}), fine AS (
   SELECT b.vec_id, b.clabel * 16 + bk.bucket AS cluster
   FROM best b JOIN buckets bk ON b.vec_id = bk.vec_id
 ), dots AS (
@@ -181,14 +174,7 @@ _SQL_SEMANTIC_DEDUP_PAIRS_FINE = SQL_CENTROID_ASSIGN_BODY + """
   JOIN elems b ON b.vec_id = fb.vec_id AND b.i = a.i
   WHERE a.vec_id < b.vec_id
   GROUP BY 1, 2, 3
-), pairs AS (
-  SELECT cluster, vec_a, vec_b,
-         round(dot / (na.nrm * nb.nrm), 6) AS sim
-  FROM dots
-  JOIN norms na ON vec_a = na.vec_id
-  JOIN norms nb ON vec_b = nb.vec_id
-  WHERE round(dot / (na.nrm * nb.nrm), 6) >= 0.4
-)
+{_SQL_PAIRS_CTE}
 SELECT cluster, vec_a, vec_b, sim FROM pairs
 """
 

@@ -24,12 +24,12 @@ from pyspark.sql import functions as F
 
 from ..sources.tables import load_table
 from .catalog import QuerySpec
+from .fragments import DAY_US
 
 #: epoch-day anchor inside the events fixture's span (2024-01) so the
 #: regression's x values are O(10) instead of O(20 000) — keeps the
 #: normal-equation sums well-conditioned in both engines.
 _DAY_ANCHOR = 19_723
-_DAY_US = 86_400_000_000
 
 
 # --------------------------------------------------------------------------
@@ -151,7 +151,7 @@ def _q_user_value_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     x).  One hash-agg pass per user — the 100 TB shape for fitting
     millions of tiny per-key models without any ML library."""
     ev = load_table(spark, sf_dir, "events").where(F.col("user_id") < 300)
-    x = (F.unix_micros(F.col("ts")) / _DAY_US).cast("long") - _DAY_ANCHOR
+    x = (F.unix_micros(F.col("ts")) / DAY_US).cast("long") - _DAY_ANCHOR
     y = F.col("value")
     return (
         ev.select("user_id", x.alias("x"), y.alias("y"))

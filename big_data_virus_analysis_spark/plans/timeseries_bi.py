@@ -31,8 +31,7 @@ from pyspark.sql import functions as F
 
 from ..sources.tables import load_table
 from .catalog import QuerySpec
-
-_DAY_US = 86_400_000_000
+from .fragments import DAY_US
 
 
 # --------------------------------------------------------------------------
@@ -48,7 +47,7 @@ def _q_weekly_active_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-day self-joins."""
     ev = load_table(spark, sf_dir, "events").select(
         "user_id",
-        (F.unix_micros(F.col("ts")) / _DAY_US).cast("long").alias("day_num"),
+        (F.unix_micros(F.col("ts")) / DAY_US).cast("long").alias("day_num"),
     )
     grid = ev.distinct()
     days = grid.select("day_num").distinct()
@@ -205,7 +204,7 @@ def _q_ewma_daily_value(spark: SparkSession, sf_dir: str) -> DataFrame:
     daily = (
         ev.select(
             "user_id",
-            (F.unix_micros(F.col("ts")) / _DAY_US).cast("long").alias("day"),
+            (F.unix_micros(F.col("ts")) / DAY_US).cast("long").alias("day"),
             "value",
         )
         .groupBy("user_id", "day")
@@ -257,7 +256,7 @@ def _q_growth_accounting(spark: SparkSession, sf_dir: str) -> DataFrame:
     one on day."""
     ev = load_table(spark, sf_dir, "events").select(
         "user_id",
-        (F.unix_micros(F.col("ts")) / _DAY_US).cast("long").alias("day_num"),
+        (F.unix_micros(F.col("ts")) / DAY_US).cast("long").alias("day_num"),
     )
     grid = ev.distinct()
     w = Window.partitionBy("user_id").orderBy("day_num")

@@ -41,6 +41,10 @@ def get_spark(
         .master(f"local[{n}]")
         # --- optimizer / runtime ---
         .config("spark.sql.adaptive.enabled", "true")
+        # ANSI mode pinned, not left to the version default: integer
+        # overflow and invalid casts fail loudly instead of wrapping or
+        # yielding NULL
+        .config("spark.sql.ansi.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.shuffle.partitions", str(max(n, 32)))

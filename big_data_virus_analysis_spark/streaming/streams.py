@@ -27,7 +27,7 @@ Scale notes (100 TB / continuous ingest):
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     DoubleType,
@@ -76,15 +76,11 @@ def _with_watermark(events: DataFrame, watermark: str | None) -> DataFrame:
     return events.withWatermark("ts", watermark) if watermark else events
 
 
-def tumbling_window_counts(
-    events: DataFrame,
-    minutes: int = 60,
-    watermark: str | None = DEFAULT_WATERMARK,
+def _window_event_totals(
+    events: DataFrame, win: Column, watermark: str | None
 ) -> DataFrame:
-    """Tumbling event-time windows × event_type; late rows beyond the
-    watermark are dropped (stream) / included (batch — batch has no
-    lateness)."""
-    win = F.window("ts", f"{minutes} minutes")
+    """Event count and rounded value sum per event-time window
+    ``win`` × event_type, keyed by window start (epoch micros)."""
     return (
         _with_watermark(events, watermark)
         .groupBy(win.alias("w"), "event_type")
@@ -96,6 +92,18 @@ def tumbling_window_counts(
             "sum_value",
         )
     )
+
+
+def tumbling_window_counts(
+    events: DataFrame,
+    minutes: int = 60,
+    watermark: str | None = DEFAULT_WATERMARK,
+) -> DataFrame:
+    """Tumbling event-time windows × event_type; late rows beyond the
+    watermark are dropped (stream) / included (batch — batch has no
+    lateness)."""
+    win = F.window("ts", f"{minutes} minutes")
+    return _window_event_totals(events, win, watermark)
 
 
 def sliding_window_agg(
@@ -110,17 +118,7 @@ def sliding_window_agg(
     row internally (no self-join).  Output keyed by window start.
     """
     win = F.window("ts", f"{length_minutes} minutes", f"{slide_minutes} minutes")
-    return (
-        _with_watermark(events, watermark)
-        .groupBy(win.alias("w"), "event_type")
-        .agg(F.count("*").alias("n_events"), F.round(F.sum("value"), 4).alias("sum_value"))
-        .select(
-            F.unix_micros(F.col("w.start")).alias("window_start_us"),
-            "event_type",
-            "n_events",
-            "sum_value",
-        )
-    )
+    return _window_event_totals(events, win, watermark)
 
 
 def session_window_agg(
@@ -213,6 +211,33 @@ def materialize_segment_activity(
     return agg.writeStream.outputMode("complete").foreachBatch(_write)
 
 
+def _view_click_join(
+    events: DataFrame, watermark: str | None, horizon_minutes: int, how: str
+) -> DataFrame:
+    """Views ``(v_user, view_id, view_ts)`` joined (``how``) to the same
+    user's clicks ``(c_user, click_id, click_ts)`` that follow within
+    ``horizon_minutes``; both sides carry the watermark."""
+    v = _with_watermark(events.where(F.col("event_type") == "view"), watermark).select(
+        F.col("user_id").alias("v_user"),
+        F.col("event_id").alias("view_id"),
+        F.col("ts").alias("view_ts"),
+    )
+    c = _with_watermark(events.where(F.col("event_type") == "click"), watermark).select(
+        F.col("user_id").alias("c_user"),
+        F.col("event_id").alias("click_id"),
+        F.col("ts").alias("click_ts"),
+    )
+    return v.join(
+        c,
+        F.expr(
+            f"""v_user = c_user
+                AND click_ts > view_ts
+                AND click_ts <= view_ts + interval {horizon_minutes} minutes"""
+        ),
+        how,
+    )
+
+
 def clicks_after_views(
     events: DataFrame,
     horizon_minutes: int = 10,
@@ -231,24 +256,7 @@ def clicks_after_views(
 
     Output: ``(user_id, view_id, click_id, gap_s)``.
     """
-    v = _with_watermark(events.where(F.col("event_type") == "view"), watermark).select(
-        F.col("user_id").alias("v_user"),
-        F.col("event_id").alias("view_id"),
-        F.col("ts").alias("view_ts"),
-    )
-    c = _with_watermark(events.where(F.col("event_type") == "click"), watermark).select(
-        F.col("user_id").alias("c_user"),
-        F.col("event_id").alias("click_id"),
-        F.col("ts").alias("click_ts"),
-    )
-    joined = v.join(
-        c,
-        F.expr(
-            f"""v_user = c_user
-                AND click_ts > view_ts
-                AND click_ts <= view_ts + interval {horizon_minutes} minutes"""
-        ),
-    )
+    joined = _view_click_join(events, watermark, horizon_minutes, "inner")
     return joined.select(
         F.col("v_user").alias("user_id"),
         "view_id",
@@ -409,25 +417,7 @@ def views_with_click_outcome(
     ``view_ts`` rides along so downstream windowing/dedup can anchor
     on the view's event time.
     """
-    v = _with_watermark(events.where(F.col("event_type") == "view"), watermark).select(
-        F.col("user_id").alias("v_user"),
-        F.col("event_id").alias("view_id"),
-        F.col("ts").alias("view_ts"),
-    )
-    c = _with_watermark(events.where(F.col("event_type") == "click"), watermark).select(
-        F.col("user_id").alias("c_user"),
-        F.col("event_id").alias("click_id"),
-        F.col("ts").alias("click_ts"),
-    )
-    joined = v.join(
-        c,
-        F.expr(
-            f"""v_user = c_user
-                AND click_ts > view_ts
-                AND click_ts <= view_ts + interval {horizon_minutes} minutes"""
-        ),
-        "leftOuter",
-    )
+    joined = _view_click_join(events, watermark, horizon_minutes, "leftOuter")
     return joined.select(
         F.col("v_user").alias("user_id"),
         "view_id",
@@ -494,25 +484,7 @@ def view_click_full_outer(
     Output: ``(user_id, view_id?, view_ts?, click_id?, click_ts?,
     gap_s?)``.
     """
-    v = _with_watermark(events.where(F.col("event_type") == "view"), watermark).select(
-        F.col("user_id").alias("v_user"),
-        F.col("event_id").alias("view_id"),
-        F.col("ts").alias("view_ts"),
-    )
-    c = _with_watermark(events.where(F.col("event_type") == "click"), watermark).select(
-        F.col("user_id").alias("c_user"),
-        F.col("event_id").alias("click_id"),
-        F.col("ts").alias("click_ts"),
-    )
-    joined = v.join(
-        c,
-        F.expr(
-            f"""v_user = c_user
-                AND click_ts > view_ts
-                AND click_ts <= view_ts + interval {horizon_minutes} minutes"""
-        ),
-        "fullOuter",
-    )
+    joined = _view_click_join(events, watermark, horizon_minutes, "fullOuter")
     return joined.select(
         F.coalesce(F.col("v_user"), F.col("c_user")).alias("user_id"),
         "view_id",
@@ -551,25 +523,7 @@ def conversion_counts_windows(
     runs on a batch frame as the parity oracle
     (tests/test_streaming.py::test_chained_join_window_matches_batch).
     """
-    v = _with_watermark(events.where(F.col("event_type") == "view"), watermark).select(
-        F.col("user_id").alias("v_user"),
-        F.col("event_id").alias("view_id"),
-        F.col("ts").alias("view_ts"),
-    )
-    c = _with_watermark(events.where(F.col("event_type") == "click"), watermark).select(
-        F.col("user_id").alias("c_user"),
-        F.col("event_id").alias("click_id"),
-        F.col("ts").alias("click_ts"),
-    )
-    joined = v.join(
-        c,
-        F.expr(
-            f"""v_user = c_user
-                AND click_ts > view_ts
-                AND click_ts <= view_ts + interval {horizon_minutes} minutes"""
-        ),
-        "inner",
-    )
+    joined = _view_click_join(events, watermark, horizon_minutes, "inner")
     win = joined.groupBy(F.window("view_ts", window_len)).agg(
         F.count(F.lit(1)).alias("n_conversions")
     )

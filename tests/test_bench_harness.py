@@ -129,6 +129,22 @@ def test_compact_line_protected_queries_never_drop():
     parsed = json.loads(line)
     assert parsed["n_queries_omitted"] > 0  # trimming actually happened
     assert protected <= set(parsed["queries"])
+    assert "n_protected_omitted" not in parsed
+
+
+def test_compact_line_counts_dropped_protected_names():
+    """The last-resort step drops protected names too (the parse
+    guarantee outranks completeness), but never silently: each one is
+    counted in ``n_protected_omitted``."""
+    timings = {
+        f"catalog_query_with_long_name_{i:03d}": float(i) for i in range(40)
+    }
+    protected = {f"catalog_query_with_long_name_{i:03d}" for i in range(6)}
+    compact = {"regressions": [], "fallback_queries": [], "queries": dict(timings)}
+    line = bench._compact_line(compact, timings, protected=protected, cap=200)
+    parsed = json.loads(line)
+    kept = protected & set(parsed["queries"])
+    assert parsed["n_protected_omitted"] == len(protected - kept) > 0
 
 
 def test_compact_line_collapses_cleared_flags_before_survivors():

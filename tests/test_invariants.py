@@ -116,3 +116,10 @@ def test_cms_estimate_upper_bounds_true_count(spark):
     assert len(rows) == 10
     for r in rows:
         assert r.cms_est >= r.true_n, (r.user_id, r.cms_est, r.true_n)
+
+
+def test_session_pins_ansi_mode(spark):
+    """``session.get_spark`` sets ANSI mode explicitly instead of relying
+    on the Spark version's default, so overflow fails loudly on any
+    version the engine runs on."""
+    assert spark.sparkContext.getConf().get("spark.sql.ansi.enabled") == "true"
